@@ -38,6 +38,7 @@ from __future__ import annotations
 
 import glob as _glob
 import os
+import posixpath
 import re
 from concurrent.futures import ThreadPoolExecutor
 
@@ -92,21 +93,34 @@ class FsClient:
 
     def list_names(self, prefix_folder: str = "") -> list[str]:
         """All file names (root-relative) under a folder prefix, sorted
-        lexicographically (GCS LIST order — enumeration depends on it)."""
-        base = self._full(clean_folder_name(prefix_folder))
-        base_path = self._jpath(base)
+        lexicographically (GCS LIST order — enumeration depends on it).
+
+        A walk over ``FileSystem.listStatus``: a stack of directories,
+        descending into directories and keeping files.  It needs names
+        only, and ``listFiles`` builds a located status per object
+        (permissions, owner, block locations): on ``file:`` without
+        Hadoop's native library (4-core VM) that cost 3.6 ms per entry
+        against 0.24 ms for ``listStatus``.  Names are
+        built from each entry's own ``Path`` name, so the root URI's
+        spelling (``file:/x`` vs ``file:///x``) never matters."""
+        base = clean_folder_name(prefix_folder)
+        base_path = self._jpath(self._full(base))
         if not self.fs.exists(base_path):
             return []
+        if not self.fs.getFileStatus(base_path).isDirectory():
+            return [base]  # the prefix names a single object
         names: list[str] = []
-        it = self.fs.listFiles(base_path, True)  # recursive
-        root_len = len(self.root_uri) + 1
-        while it.hasNext():
-            status = it.next()
-            uri = status.getPath().toString()
-            # normalize scheme differences (file:/x vs file:///x)
-            idx = uri.find(self.root_uri.split(":/")[-1])
-            names.append(uri[root_len:] if uri.startswith(self.root_uri)
-                         else uri[idx + len(self.root_uri.split(":/")[-1]) + 1:])
+        stack = [(base, base_path)]
+        while stack:
+            rel, path = stack.pop()
+            for status in self.fs.listStatus(path):
+                child = status.getPath()
+                name = child.getName()
+                name = f"{rel}/{name}" if rel else name
+                if status.isDirectory():
+                    stack.append((name, child))
+                else:
+                    names.append(name)
         return sorted(names)
 
     def match_names(
@@ -151,13 +165,26 @@ class FsClient:
             self._jpath(os.path.abspath(local_path)), True
         )
 
-    def copy_from_local(self, local_path: str, rel: str) -> None:
-        dest = self._jpath(self._full(rel))
-        parent = dest.getParent()
-        if parent is not None and not self.fs.exists(parent):
-            self.fs.mkdirs(parent)
+    def _ensure_parent(self, rel: str, ready: set[str]) -> None:
+        """Create the folder ``rel`` lives in unless it is in ``ready``,
+        the folders one verb call has already checked or created.  The
+        set lives for one call only: on GCS a folder is implied by its
+        objects and vanishes with the last of them.  Concurrent copies
+        may both create one folder; ``mkdirs`` is idempotent."""
+        parent = posixpath.dirname(rel)
+        if parent not in ready:
+            path = self._jpath(self._full(parent))
+            if not self.fs.exists(path):
+                self.fs.mkdirs(path)
+            ready.add(parent)
+
+    def copy_from_local(
+        self, local_path: str, rel: str, ready: set[str]
+    ) -> None:
+        self._ensure_parent(rel, ready)
         self.fs.copyFromLocalFile(
-            False, True, self._jpath(os.path.abspath(local_path)), dest
+            False, True, self._jpath(os.path.abspath(local_path)),
+            self._jpath(self._full(rel)),
         )
 
     def delete(self, rel: str) -> None:
@@ -169,20 +196,21 @@ class FsClient:
         if not self.fs.delete(self._jpath(self._full(rel)), False):
             raise FileNotFoundBlueprintError(f"delete failed: {rel}")
 
-    def server_side_move(self, src_rel: str, other: "FsClient", dst_rel: str) -> None:
+    def server_side_move(
+        self, src_rel: str, other: "FsClient", dst_rel: str,
+        same_fs: bool, ready: set[str],
+    ) -> None:
         """Move src → dst.  Same filesystem: atomic rename.  Cross
         filesystem: copy THEN delete (ordering preserved from
         ``move_file.py:150-153`` — crash between the calls leaves the
-        source intact)."""
+        source intact).  The verb call decides ``same_fs`` once and
+        shares ``ready`` (see :meth:`_ensure_parent`) across its objects."""
+        other._ensure_parent(dst_rel, ready)
         src = self._jpath(self._full(src_rel))
         dst = other._jpath(other._full(dst_rel))
-        same_fs = self.fs.getUri().toString() == other.fs.getUri().toString()
-        parent = dst.getParent()
-        if parent is not None and not other.fs.exists(parent):
-            other.fs.mkdirs(parent)
         if same_fs:
-            if other.fs.exists(dst):
-                other.fs.delete(dst, False)  # overwrite-by-default §2.A.5
+            # overwrite-by-default §2.A.5; returns false when dst is absent
+            other.fs.delete(dst, False)
             if not self.fs.rename(src, dst):
                 raise FileNotFoundBlueprintError(
                     f"rename failed: {src_rel} -> {dst_rel}"
@@ -347,6 +375,7 @@ def upload_files(
     if multi:  # progress parity: upload_file.py:240,248
         print(f"{len(matches)} files found. Preparing to upload...")
     copies = []
+    ready: set[str] = set()
     for index, src in enumerate(matches):
         dest = determine_destination_full_path(
             destination_folder_name=dest_folder,
@@ -357,7 +386,7 @@ def upload_files(
         def copy(src=src, dest=dest, index=index):
             if multi:  # in-thunk for sequential/parallel line parity
                 print(f"Uploading file {index + 1} of {len(matches)}")
-            client.copy_from_local(src, dest)
+            client.copy_from_local(src, dest, ready)
             print(
                 f"{src} successfully uploaded to {client.root_uri}/{dest}"
             )  # upload_file.py:188-189
@@ -400,6 +429,9 @@ def move_files(
     multi = source_file_name_match_type == "regex_match"
     if multi:  # progress parity: move_file.py:180,192 (1-based, lowercase)
         print(f"{len(matches)} files found. Preparing to move...")
+    same_fs = (src_client.fs.getUri().toString()
+               == dst_client.fs.getUri().toString())
+    ready: set[str] = set()
     for index, rel in enumerate(matches, 1):
         dest = determine_destination_full_path(
             destination_folder_name=dest_folder,
@@ -409,7 +441,7 @@ def move_files(
         )
         if multi:
             print(f"moving file {index} of {len(matches)}")
-        src_client.server_side_move(rel, dst_client, dest)
+        src_client.server_side_move(rel, dst_client, dest, same_fs, ready)
         print(f"File moved from {rel} to {dest}")  # move_file.py:155
         moved.append(dest)
     return moved

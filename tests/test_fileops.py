@@ -53,6 +53,81 @@ def test_list_names_sorted(spark, tree):
     assert "data/a.csv" in names and "data/sub/a.csv" in names
 
 
+# -- listing semantics: pinned against an os.walk oracle ------------------
+
+
+@pytest.fixture()
+def deep_tree(tmp_path):
+    """Three levels of folders, names with spaces and non-ASCII
+    characters, and an empty sub-directory."""
+    root = tmp_path / "deep"
+    files = [
+        "top.txt",
+        "l1/a b.csv",
+        "l1/ünï.txt",
+        "l1/l2/x.bin",
+        "l1/l2/l3/ßeta gamma.json",
+        "l1/l2/l3/z.bin",
+        "other/o.txt",
+    ]
+    for rel in files:
+        (root / rel).parent.mkdir(parents=True, exist_ok=True)
+        (root / rel).write_text(rel)
+    (root / "l1" / "empty").mkdir()
+    (root / "l1" / "l2" / "also-empty").mkdir()
+    return root
+
+
+def _walk_oracle(root, prefix: str = "") -> list[str]:
+    base = os.path.join(root, prefix) if prefix else str(root)
+    return sorted(
+        os.path.relpath(os.path.join(d, f), root)
+        for d, _dirs, fs in os.walk(base)
+        for f in fs
+        if not f.endswith(".crc")
+    )
+
+
+def test_list_names_equals_walk_oracle(spark, deep_tree):
+    names = FsClient(spark, _uri(deep_tree)).list_names("")
+    assert names == _walk_oracle(deep_tree)
+    assert "l1/l2/l3/ßeta gamma.json" in names and "l1/a b.csv" in names
+
+
+def test_list_names_under_prefix(spark, deep_tree):
+    client = FsClient(spark, _uri(deep_tree))
+    assert client.list_names("l1/l2") == _walk_oracle(deep_tree, "l1/l2")
+    # leading/trailing slashes are cleaned like every folder argument
+    assert client.list_names("/l1/l2/") == _walk_oracle(deep_tree, "l1/l2")
+
+
+def test_list_names_skips_checksum_side_files(spark, deep_tree):
+    """Hadoop's local filesystem keeps checksums in ``.<name>.crc`` side
+    files; the listing shows the objects only."""
+    (deep_tree / "l1" / "l2" / ".x.bin.crc").write_bytes(b"crc")
+    (deep_tree / ".top.txt.crc").write_bytes(b"crc")
+    names = FsClient(spark, _uri(deep_tree)).list_names("")
+    assert names == _walk_oracle(deep_tree)
+    assert not any(n.endswith(".crc") for n in names)
+
+
+def test_list_names_prefix_naming_one_object(spark, deep_tree):
+    client = FsClient(spark, _uri(deep_tree))
+    assert client.list_names("l1/l2/x.bin") == ["l1/l2/x.bin"]
+    assert client.list_names("l1/a b.csv") == ["l1/a b.csv"]
+
+
+def test_list_names_missing_prefix_is_empty(spark, deep_tree):
+    assert FsClient(spark, _uri(deep_tree)).list_names("no/such/dir") == []
+
+
+def test_list_names_empty_directory_contributes_nothing(spark, deep_tree):
+    client = FsClient(spark, _uri(deep_tree))
+    assert client.list_names("l1/empty") == []
+    names = client.list_names("l1")
+    assert not any("empty" in n for n in names)
+
+
 def test_download_exact(spark, tree, tmp_path, monkeypatch):
     monkeypatch.chdir(tmp_path)
     out = download_files(
@@ -174,6 +249,34 @@ def test_move_multi_regex_enumerates_from_1(spark, tree, tmp_path):
         destination_file_name="m.csv",
     )
     assert out == ["m_1.csv", "m_2.csv"]
+
+
+def test_move_into_new_nested_folder_overwrites_existing(spark, tree,
+                                                          tmp_path):
+    """Every object of one call lands in a folder the call creates; an
+    object already at a destination is overwritten, not kept."""
+    dest = tmp_path / "dest_bucket"
+    (dest / "x" / "y").mkdir(parents=True)
+    (dest / "x" / "y" / "m_2.csv").write_text("stale")
+    out = move_files(
+        spark, _uri(tree), _uri(dest),
+        source_file_name=r"a\.csv",
+        source_file_name_match_type="regex_match",
+        destination_folder_name="x/y/z", destination_file_name="m.csv",
+    )
+    assert out == ["x/y/z/m_1.csv", "x/y/z/m_2.csv"]
+    assert (dest / "x" / "y" / "z" / "m_1.csv").read_text() == "a1"
+    assert (dest / "x" / "y" / "z" / "m_2.csv").read_text() == "a3"
+    out = move_files(
+        spark, _uri(dest), _uri(dest),
+        source_folder_name="x/y/z", source_file_name=r"m_2",
+        source_file_name_match_type="regex_match",
+        destination_folder_name="x/y",
+    )
+    assert out == ["x/y/m_2.csv"]
+    assert (dest / "x" / "y" / "m_2.csv").read_text() == "a3"
+    assert FsClient(spark, _uri(dest)).list_names("x") == [
+        "x/y/m_2.csv", "x/y/z/m_1.csv"]
 
 
 def test_remove_regex(spark, tree):
@@ -325,6 +428,35 @@ def test_delete_failure_raises_205(spark, tree):
     with pytest.raises(FileNotFoundBlueprintError) as exc:
         client.delete("data/never-existed.bin")
     assert exc.value.exit_code == 205
+
+
+def test_parallel_upload_shares_one_new_folder(spark, tmp_path, monkeypatch):
+    """Concurrent copies of one call share its set of checked folders:
+    every object lands, in a folder none of them found existing."""
+    import sys
+
+    src = tmp_path / "src"
+    src.mkdir()
+    for i in range(24):
+        (src / f"f{i:02d}.bin").write_text(f"payload {i}")
+    bucket = tmp_path / "bucket"
+    bucket.mkdir()
+    monkeypatch.chdir(tmp_path)
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        out = upload_files(
+            spark, _uri(bucket),
+            source_folder_name="src", source_file_name=r"\.bin$",
+            source_file_name_match_type="regex_match",
+            destination_folder_name="new/deep", max_workers=8,
+        )
+    finally:
+        sys.setswitchinterval(interval)
+    assert out == [f"new/deep/f{i:02d}.bin" for i in range(24)]
+    for i in range(24):
+        assert (bucket / "new" / "deep" / f"f{i:02d}.bin").read_text() == (
+            f"payload {i}")
 
 
 def test_parallel_download_matches_sequential(spark, tree, tmp_path,
