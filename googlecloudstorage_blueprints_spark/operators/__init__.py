@@ -3,8 +3,9 @@
 Every analytics operator registers itself with :func:`register`, providing
 the Spark implementation ``(spark, sf_dir) -> DataFrame`` and, when the
 semantics are ANSI-SQL-expressible, a DuckDB oracle SQL string over the same
-fixture tables.  ``__spark_entry__.py`` exposes the merged registry to the
-correctness driver.
+fixture tables.  ``all_queries`` / ``all_oracles`` return registration
+order; ``__spark_entry__.py`` exposes the merged registry to the
+correctness harness and owns the order in which keys are checked.
 """
 
 from __future__ import annotations
@@ -80,40 +81,15 @@ def _load_all() -> None:
     )
 
 
-# The correctness driver adjudicates keys in dict order and has a bounded
-# budget (~50 keys per round), so ordering is part of the driver contract.
-# The ordering is GENERATED from the CORRECTNESS_r{N}.json history by
-# scripts/gen_driver_first.py (oldest-adjudication-first; see its module
-# docstring for the tiebreak rules) into _driver_order.py.  Rerun the
-# script after adding operators or when a new CORRECTNESS file lands;
-# tests/test_driver_order.py fails if the committed order is stale.
-try:
-    from googlecloudstorage_blueprints_spark.operators._driver_order import (
-        DRIVER_FIRST as _DRIVER_FIRST,
-    )
-except ImportError:  # pragma: no cover - pre-generation bootstrap
-    _DRIVER_FIRST: list[str] = []
-_DRIVER_LAST: list[str] = []
-
-
-def _ordered_names() -> list[str]:
-    names = list(REGISTRY)
-    first = [n for n in _DRIVER_FIRST if n in names]
-    last = [n for n in _DRIVER_LAST if n in names]
-    pinned = set(first) | set(last)
-    mid = [n for n in names if n not in pinned]
-    return first + mid + last
-
-
 def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     _load_all()
-    return {name: REGISTRY[name].fn for name in _ordered_names()}
+    return {name: op.fn for name, op in REGISTRY.items()}
 
 
 def all_oracles() -> dict[str, str]:
     _load_all()
     return {
-        name: REGISTRY[name].oracle
-        for name in _ordered_names()
-        if REGISTRY[name].oracle is not None
+        name: op.oracle
+        for name, op in REGISTRY.items()
+        if op.oracle is not None
     }

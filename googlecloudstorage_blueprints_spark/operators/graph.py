@@ -408,7 +408,7 @@ def copurchase_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpointed layout re-shuffles every round no matter how it
     # was partitioned (measured A/B at sf0.1, outputs bit-identical
     # at all three SFs: shipped-checkpoint med 8.17 s → dst-cache med
-    # 4.26 s; scripts/pagerank_dst_ab.py).  The cache is released in
+    # 4.26 s; OPTIMIZATION_r18.md §2.13).  The cache is released in
     # the hygiene close below.
     loop_key = "dst" if broadcast_nodes else "src"
     # Partition-count sizing (r18 advice): bare defaultParallelism is

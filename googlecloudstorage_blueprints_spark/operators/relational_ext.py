@@ -936,7 +936,7 @@ def table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     (fires only when the scan yields fewer partitions than cores;
     multi-split real input never pays the shuffle) parallelizes it:
     measured med 2.14 → 1.64 s warm at sf0.1, values identical
-    (scripts/digest_ab.py)."""
+    (OPTIMIZATION_r19.md §2)."""
     o = load_table(spark, sf_dir, "orders")
     par = spark.sparkContext.defaultParallelism
     if o.rdd.getNumPartitions() < par:

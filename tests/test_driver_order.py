@@ -1,71 +1,62 @@
-"""Pin the generated driver adjudication ordering.
+"""Pin the key check order derived in ``__spark_entry__``.
 
-The correctness driver walks ``queries()`` in dict order with a ~50-key
-budget, so the ordering in ``operators/_driver_order.py`` is part of the
-driver contract.  These tests fail when the committed order is stale
-(operators added / CORRECTNESS files landed without regenerating) or when
-the generator's policy regresses.
+The correctness harness walks ``queries()`` in dict order with a ~50-key
+budget, so the order is part of the entry-point contract.  It is computed from
+the ``CORRECTNESS_r{N}.json`` history on every call; these tests pin the
+policy and show that a new history file rotates the order by itself.
 """
 
 from __future__ import annotations
 
-import importlib
-import sys
-from pathlib import Path
+import glob
+import json
+import shutil
 
-REPO = Path(__file__).resolve().parents[1]
-sys.path.insert(0, str(REPO / "scripts"))
-
-gen = importlib.import_module("gen_driver_first")
-
-
-def test_committed_order_is_fresh():
-    committed = (
-        REPO
-        / "googlecloudstorage_blueprints_spark"
-        / "operators"
-        / "_driver_order.py"
-    ).read_text()
-    assert committed == gen.render(gen.compute_order()), (
-        "stale _driver_order.py: rerun python scripts/gen_driver_first.py"
-    )
+import __spark_entry__ as ent
+from googlecloudstorage_blueprints_spark.operators import REGISTRY
 
 
 def test_order_covers_whole_registry_exactly_once():
-    from googlecloudstorage_blueprints_spark.operators import (
-        REGISTRY,
-        _load_all,
-        all_queries,
-    )
-
-    _load_all()
-    order = gen.compute_order()
+    order = ent.driver_order()
     assert sorted(order) == sorted(REGISTRY)
-    assert list(all_queries()) == order
+    assert len(order) == len(set(order))
 
 
 def test_oldest_adjudication_comes_first():
-    """Staleness dominates: a key last seen in round N never precedes a
-    changed/never-seen key, and rounds are non-decreasing down the list."""
-    latest = gen.latest_adjudication()
-    changed = set(gen.CHANGED_THIS_ROUND)
-    order = gen.compute_order()
-    rounds = [
-        -1 if n in changed else latest.get(n, -1) for n in order
-    ]
+    """Staleness dominates: run numbers are non-decreasing down the list,
+    with never-checked keys (run -1) in front."""
+    latest = ent.latest_adjudication()
+    rounds = [latest.get(n, -1) for n in ent.driver_order()]
     assert rounds == sorted(rounds)
 
 
-def test_changed_keys_lead():
-    order = gen.compute_order()
-    latest = gen.latest_adjudication()
-    # changed keys share the front -1 group with never-seen keys; the
-    # head is that whole group (all of it fits the driver's ~50 budget)
-    n_front = sum(
-        1
-        for n in order
-        if n in set(gen.CHANGED_THIS_ROUND) or n not in latest
+def test_queries_and_oracles_follow_the_order():
+    order = ent.driver_order()
+    assert list(ent.queries()) == order
+    oracles = ent.oracle_sql()
+    assert list(oracles) == [
+        n for n in order if REGISTRY[n].oracle is not None
+    ]
+    assert all(oracles[n] == REGISTRY[n].oracle for n in oracles)
+
+
+def test_empty_history_is_the_never_seen_policy(tmp_path):
+    order = ent.driver_order(str(tmp_path))
+    assert order == sorted(
+        REGISTRY, key=lambda n: (REGISTRY[n].oracle is None, n)
     )
-    head = order[:n_front]
-    for key in gen.CHANGED_THIS_ROUND:
-        assert key in head, f"{key} marked changed but not front-loaded"
+
+
+def test_new_history_file_rotates_the_order(tmp_path):
+    """No regeneration step: one higher-numbered file naming the head key
+    moves it behind every key checked in an earlier run."""
+    for src in glob.glob(f"{ent.HISTORY_DIR}/CORRECTNESS_r*.json"):
+        shutil.copy(src, tmp_path)
+    before = ent.driver_order(str(tmp_path))
+    head = before[0]
+    top = max(ent.latest_adjudication(str(tmp_path)).values())
+    (tmp_path / f"CORRECTNESS_r{top + 1}.json").write_text(
+        json.dumps({head: {"rows_match": True}})
+    )
+    after = ent.driver_order(str(tmp_path))
+    assert after == [n for n in before if n != head] + [head]

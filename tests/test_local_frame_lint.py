@@ -22,6 +22,7 @@ helper.
 
 from __future__ import annotations
 
+import ast
 import glob
 import os
 
@@ -33,20 +34,48 @@ PKG = os.path.join(
 ALLOWED = {os.path.join("functions", "frames.py")}
 
 
-def test_no_direct_createdataframe_outside_frames_helper():
+def _offenders(root: str) -> list[str]:
+    """Real ``createDataFrame(...)`` call nodes under ``root`` outside the
+    allowed helper; text in docstrings and comments is not a call."""
     offenders = []
     for path in sorted(
-        glob.glob(os.path.join(PKG, "**", "*.py"), recursive=True)
+        glob.glob(os.path.join(root, "**", "*.py"), recursive=True)
     ):
-        rel = os.path.relpath(path, PKG)
+        rel = os.path.relpath(path, root)
         if rel in ALLOWED:
             continue
         with open(path) as fh:
-            for lineno, line in enumerate(fh, 1):
-                if "createDataFrame(" in line and not line.lstrip().startswith(
-                    "#"
-                ):
-                    offenders.append(f"{rel}:{lineno}: {line.strip()}")
+            src = fh.read()
+        lines = src.splitlines()
+        offenders += [
+            f"{rel}:{node.lineno}: {lines[node.lineno - 1].strip()}"
+            for node in ast.walk(ast.parse(src))
+            if isinstance(node, ast.Call)
+            and getattr(node.func, "attr", getattr(node.func, "id", None))
+            == "createDataFrame"
+        ]
+    return offenders
+
+
+def test_lint_flags_calls_not_mentions(tmp_path):
+    mod = tmp_path / "mod.py"
+    mod.write_text(
+        '"""Never call ``spark.createDataFrame(rows)`` directly."""\n'
+        "# spark.createDataFrame(rows)\n"
+    )
+    assert _offenders(str(tmp_path)) == []
+    mod.write_text(
+        "def f(spark, rows):\n"
+        "    return spark.createDataFrame(\n"
+        "        rows)\n"
+    )
+    assert _offenders(str(tmp_path)) == [
+        "mod.py:2: return spark.createDataFrame("
+    ]
+
+
+def test_no_direct_createdataframe_outside_frames_helper():
+    offenders = _offenders(PKG)
     assert not offenders, (
         "direct createDataFrame call(s) found — route driver-side row "
         "sets through functions.frames.local_rows_frame instead:\n"

@@ -6,7 +6,7 @@
    RoundRobinPartitioning, the one-row-group fixture still spreads the
    Expand+partial across cores, and the profile rows are identical
    either way (measured med 2.14 → 1.64 s warm at sf0.1;
-   scripts/digest_ab.py).
+   OPTIMIZATION_r19.md §2).
 """
 
 from __future__ import annotations
