@@ -1,9 +1,13 @@
-"""Fast-lane CLI smoke tests: one round trip through every file verb and
-the reference's exit codes (200/201/205).  The rest of the CLI surface is
-in ``test_cli.py``, which runs under ``-m ""``."""
+"""Fast-lane CLI smoke tests: one round trip through every file verb, the
+reference's exit codes (200/201/205) and the ``validate`` exit codes.  The
+rest of the CLI surface is in ``test_cli.py``, which runs under ``-m ""``."""
 
 from __future__ import annotations
 
+import shutil
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
 from googlecloudstorage_blueprints_spark.errors import InvalidCredentialsError
@@ -92,3 +96,35 @@ def test_cli_credentials_failure_exits_200(spark, monkeypatch, capsys):
                "--source-file-name", "x"])
     assert rc == 200
     assert "error (200): key file rejected" in capsys.readouterr().err
+
+
+def test_cli_validate_exit_codes(spark, sf_dir, tmp_path, capsys):
+    """``validate``: identical copies exit 0, one flipped ``region.r_name``
+    cell exits 205 naming the table, an unknown table exits 2."""
+    a, b = tmp_path / "a", tmp_path / "b"
+    for d in (a, b):
+        d.mkdir()
+        for t in ("region", "nation"):
+            shutil.copy(f"{sf_dir}/{t}.parquet", d / f"{t}.parquet")
+
+    def validate(tables):
+        return main(["validate", "--source-dir", str(a),
+                     "--dest-dir", str(b), "--tables", tables])
+
+    assert validate("region,nation") == 0
+    assert "validate: 2 table(s) match" in capsys.readouterr().out
+
+    region = pq.read_table(a / "region.parquet")
+    names = region.column("r_name").to_pylist()
+    names[0] += "-corrupted"
+    pq.write_table(region.set_column(
+        region.schema.get_field_index("r_name"), "r_name",
+        pa.array(names, pa.string())), b / "region.parquet")
+    assert validate("region,nation") == 205
+    captured = capsys.readouterr()
+    assert "FAIL region:" in captured.out
+    assert "OK   nation:" in captured.out
+    assert "validate: content mismatch" in captured.err
+
+    assert validate("nope") == 2
+    assert "unknown table(s) ['nope']" in capsys.readouterr().err
