@@ -29,7 +29,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-__all__ = ["TABLES", "load_table", "register_views"]
+__all__ = ["TABLES", "load_table", "normalize_timestamps", "register_views"]
 
 # Plan cache: (applicationId, sf_dir, table) -> analyzed DataFrame.  A
 # DataFrame is an immutable logical plan, so handing the same object to
@@ -77,13 +77,19 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         return cached
     for stale in [k for k in _PLAN_CACHE if k[0] != app]:
         del _PLAN_CACHE[stale]
-    path = f"{sf_dir}/{name}.parquet"
-    ts_cols = _TIMESTAMP_COLS.get(name, ())
-    if ts_cols:
+    if name in _TIMESTAMP_COLS:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
+    path = f"{sf_dir}/{name}.parquet"
+    df = normalize_timestamps(spark.read.parquet(path), name)
+    _PLAN_CACHE[key] = df
+    return df
+
+
+def normalize_timestamps(df: DataFrame, name: str) -> DataFrame:
+    """The catalog's one timestamp rule, shared by the batch loader and
+    the stream readers (``streaming.events_stream.read_table_stream``)."""
     dtypes = dict(df.dtypes)
-    for c in ts_cols:
+    for c in _TIMESTAMP_COLS.get(name, ()):
         if dtypes.get(c) == "bigint":
             # int64 nanos → µs timestamp, truncating like DuckDB's reader
             df = df.withColumn(
@@ -97,10 +103,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # without shifting them — bit-identical to DuckDB's naive read, and it
     # keeps timestamp-only builtins (unix_micros, window(), to_utc_timestamp)
     # working no matter which vintage generated the files.
-    ntz_cols = [c for c, t in df.dtypes if t == "timestamp_ntz"]
-    for c in ntz_cols:
-        df = df.withColumn(c, F.col(c).cast("timestamp"))
-    _PLAN_CACHE[key] = df
+    for c, t in df.dtypes:
+        if t == "timestamp_ntz":
+            df = df.withColumn(c, F.col(c).cast("timestamp"))
     return df
 
 

@@ -20,9 +20,41 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from googlecloudstorage_blueprints_spark.session import apply_runtime_conf
+from googlecloudstorage_blueprints_spark.sources.catalog import (
+    normalize_timestamps,
+)
 
 WATERMARK = "10 minutes"
 SESSION_GAP = "30 minutes"
+
+
+def read_table_stream(
+    spark: SparkSession,
+    sf_dir: str,
+    table: str,
+    glob: str | None = None,
+    max_files_per_trigger: int | None = None,
+) -> DataFrame:
+    """Catalog ``table`` as a file-source stream, with the batch catalog's
+    timestamp rule (``sources.catalog.normalize_timestamps``: int64 nanos
+    → µs, every TIMESTAMP_NTZ → TIMESTAMP — watermarks and window()
+    require TIMESTAMP), so any fixture vintage streams the way it loads.
+
+    The fixture directory holds all tables; ``glob`` (default
+    ``<table>.parquet``) scopes the stream to that table's file(s).
+    ``max_files_per_trigger=1`` over a multi-file directory replays
+    history as MULTIPLE micro-batches — how tests exercise cross-batch
+    state (open sessions, timeouts) instead of collapsing the backlog into
+    one batch."""
+    apply_runtime_conf(spark)
+    glob = glob if glob is not None else f"{table}.parquet"
+    static = spark.read.option("pathGlobFilter", glob).parquet(sf_dir)
+    reader = spark.readStream.schema(static.schema).option(
+        "pathGlobFilter", glob
+    )
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return normalize_timestamps(reader.parquet(sf_dir), table)
 
 
 def read_events_stream(
@@ -31,32 +63,10 @@ def read_events_stream(
     glob: str = "events.parquet",
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
-    """Events as a file-source stream with the same ns→µs conversion as
-    the batch catalog loader.  ``max_files_per_trigger=1`` over a
-    multi-file directory replays history as MULTIPLE micro-batches — how
-    tests exercise cross-batch state (open sessions, timeouts) instead of
-    collapsing the backlog into one batch."""
-    apply_runtime_conf(spark)
-    static = spark.read.option("pathGlobFilter", glob).parquet(sf_dir)
-    # the fixture directory holds all tables; pathGlobFilter scopes the
-    # stream to the events file(s) only
-    reader = spark.readStream.schema(static.schema).option(
-        "pathGlobFilter", glob
+    """Events as a file-source stream (``read_table_stream``)."""
+    return read_table_stream(
+        spark, sf_dir, "events", glob, max_files_per_trigger
     )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(sf_dir)
-    ts_type = dict(stream.dtypes).get("ts")
-    if ts_type == "bigint":
-        stream = stream.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000"))
-        )
-    elif ts_type == "timestamp_ntz":
-        # newer fixtures store TIMESTAMP(MICROS, ntz); session tz is pinned
-        # UTC so the cast relabels micros without shifting (watermarks and
-        # window() require TIMESTAMP, not TIMESTAMP_NTZ)
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return stream
 
 
 def streaming_tumbling_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -212,13 +222,7 @@ def streaming_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     here they run once per DOCUMENT on a bounded token array, not in a
     corpus-wide hot loop — the explode/groupBy form used by the batch
     funnel is not available under streaming without state.)"""
-    apply_runtime_conf(spark)
-    static = spark.read.option(
-        "pathGlobFilter", "documents.parquet"
-    ).parquet(sf_dir)
-    stream = spark.readStream.schema(static.schema).option(
-        "pathGlobFilter", "documents.parquet"
-    ).parquet(sf_dir)
+    stream = read_table_stream(spark, sf_dir, "documents")
     toks = F.split("text", " ")
     n_tokens = F.size(toks)
     # top-token share via in-row frequency: for each distinct token,
@@ -286,9 +290,7 @@ def streaming_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .persist()
     )
-    stream = spark.readStream.schema(docs_static.schema).option(
-        "pathGlobFilter", "documents.parquet"
-    ).parquet(sf_dir)
+    stream = read_table_stream(spark, sf_dir, "documents")
     hits = (
         stream.where(
             F.col("text").isNotNull()
@@ -326,85 +328,6 @@ def streaming_sliding_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value",
         )
     )
-
-
-def read_lineitem_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    glob: str = "lineitem.parquet",
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Lineitem as a file-source stream (the shipments feed) with the
-    same timestamp_ntz → TIMESTAMP normalization the batch catalog
-    applies to ``l_shipdate`` (fixtures regenerate between rounds and
-    have switched physical timestamp types before — round-5 rule)."""
-    apply_runtime_conf(spark)
-    static = spark.read.option("pathGlobFilter", glob).parquet(sf_dir)
-    reader = spark.readStream.schema(static.schema).option(
-        "pathGlobFilter", glob
-    )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(sf_dir)
-    ship_type = dict(stream.dtypes).get("l_shipdate")
-    if ship_type == "bigint":
-        stream = stream.withColumn(
-            "l_shipdate", F.timestamp_micros(F.expr("l_shipdate div 1000"))
-        )
-    elif ship_type == "timestamp_ntz":
-        stream = stream.withColumn(
-            "l_shipdate", F.col("l_shipdate").cast("timestamp")
-        )
-    return stream
-
-
-def read_orders_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    glob: str = "orders.parquet",
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Orders as a file-source stream (the order-intake feed) with the
-    same timestamp_ntz → TIMESTAMP normalization the batch catalog
-    applies to ``o_orderdate`` (the round-5 rule — fixtures regenerate
-    between rounds and have switched physical timestamp types)."""
-    apply_runtime_conf(spark)
-    static = spark.read.option("pathGlobFilter", glob).parquet(sf_dir)
-    reader = spark.readStream.schema(static.schema).option(
-        "pathGlobFilter", glob
-    )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(sf_dir)
-    od_type = dict(stream.dtypes).get("o_orderdate")
-    if od_type == "bigint":
-        stream = stream.withColumn(
-            "o_orderdate", F.timestamp_micros(F.expr("o_orderdate div 1000"))
-        )
-    elif od_type == "timestamp_ntz":
-        stream = stream.withColumn(
-            "o_orderdate", F.col("o_orderdate").cast("timestamp")
-        )
-    return stream
-
-
-def read_documents_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    glob: str = "documents.parquet",
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Documents as a file-source stream (the corpus-ingest feed) — no
-    timestamp column, so no ntz normalization is needed; the glob /
-    maxFilesPerTrigger knobs match the other readers."""
-    apply_runtime_conf(spark)
-    static = spark.read.option("pathGlobFilter", glob).parquet(sf_dir)
-    reader = spark.readStream.schema(static.schema).option(
-        "pathGlobFilter", glob
-    )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(sf_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -490,17 +413,19 @@ def _ship_latency_joined(
 ) -> DataFrame:
     """The raw watermarked order⋈shipment interval join (event-time
     columns retained for downstream stateful chaining)."""
-    o = read_orders_stream(
+    o = read_table_stream(
         spark,
         orders_dir or sf_dir,
-        glob=orders_glob,
-        max_files_per_trigger=max_files_per_trigger,
+        "orders",
+        orders_glob,
+        max_files_per_trigger,
     ).select("o_orderkey", "o_orderdate")
-    li = read_lineitem_stream(
+    li = read_table_stream(
         spark,
         lineitem_dir or sf_dir,
-        glob=lineitem_glob,
-        max_files_per_trigger=max_files_per_trigger,
+        "lineitem",
+        lineitem_glob,
+        max_files_per_trigger,
     ).select("l_orderkey", "l_linenumber", "l_shipdate")
     o = o.withWatermark("o_orderdate", watermark)
     li = li.withWatermark("l_shipdate", watermark)

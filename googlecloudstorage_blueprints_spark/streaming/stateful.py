@@ -35,6 +35,7 @@ from pyspark.sql.types import (
 from googlecloudstorage_blueprints_spark.streaming.events_stream import (
     WATERMARK,
     read_events_stream,
+    read_table_stream,
 )
 
 SESSION_GAP_US = 30 * 60 * 1_000_000  # 30 min, µs — matches SESSION_GAP
@@ -232,16 +233,10 @@ def streaming_lsh_candidates(
         hashed_shingle_docs,
         minhash_signatures_arrow,
     )
-    from googlecloudstorage_blueprints_spark.session import apply_runtime_conf
 
-    apply_runtime_conf(spark)
-    static = spark.read.option("pathGlobFilter", glob).parquet(sf_dir)
-    reader = spark.readStream.schema(static.schema).option(
-        "pathGlobFilter", glob
+    stream = read_table_stream(
+        spark, sf_dir, "documents", glob, max_files_per_trigger
     )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(sf_dir)
     bands = minhash_signatures_arrow(
         hashed_shingle_docs(stream.where(F.col("text").isNotNull())),
         emit_bands=True,
@@ -325,16 +320,9 @@ def streaming_sequence_pack(
     the batch operator bit-for-bit when replay order is doc_id order
     (test-pinned); out-of-order arrival packs in arrival order, which is
     the correct online semantics (a packer cannot reorder history)."""
-    from googlecloudstorage_blueprints_spark.session import apply_runtime_conf
-
-    apply_runtime_conf(spark)
-    static = spark.read.option("pathGlobFilter", glob).parquet(sf_dir)
-    reader = spark.readStream.schema(static.schema).option(
-        "pathGlobFilter", glob
+    stream = read_table_stream(
+        spark, sf_dir, "documents", glob, max_files_per_trigger
     )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(sf_dir)
     toks = stream.where(F.col("text").isNotNull()).select(
         "source",
         "doc_id",
@@ -1283,12 +1271,8 @@ def streaming_first_ship_sla(
     from googlecloudstorage_blueprints_spark.sources.catalog import (
         load_table,
     )
-    from googlecloudstorage_blueprints_spark.streaming.events_stream import (
-        read_lineitem_stream,
-    )
-
-    li = read_lineitem_stream(
-        spark, sf_dir, glob=glob, max_files_per_trigger=max_files_per_trigger
+    li = read_table_stream(
+        spark, sf_dir, "lineitem", glob, max_files_per_trigger
     )
     changelog = (
         li.select("l_orderkey", "l_linenumber", "l_shipdate")
@@ -2110,12 +2094,8 @@ def streaming_order_close(
     Scale: state is one fixed-width (day, line) pair per live order —
     the bound the in-flight working set has anyway; one orderkey
     shuffle per micro-batch."""
-    from googlecloudstorage_blueprints_spark.streaming.events_stream import (
-        read_lineitem_stream,
-    )
-
-    li = read_lineitem_stream(
-        spark, sf_dir, glob=glob, max_files_per_trigger=max_files_per_trigger
+    li = read_table_stream(
+        spark, sf_dir, "lineitem", glob, max_files_per_trigger
     )
     return (
         li.select("l_orderkey", "l_linenumber", "l_shipdate")
@@ -2343,12 +2323,8 @@ def streaming_cohort_retention(
 
     Scale: state is one calendar-bounded month array + version per
     customer; one o_custkey shuffle per micro-batch."""
-    from googlecloudstorage_blueprints_spark.streaming.events_stream import (
-        read_orders_stream,
-    )
-
-    orders = read_orders_stream(
-        spark, sf_dir, glob=glob, max_files_per_trigger=max_files_per_trigger
+    orders = read_table_stream(
+        spark, sf_dir, "orders", glob, max_files_per_trigger
     )
     return (
         orders.select("o_custkey", "o_orderdate")
@@ -2471,12 +2447,8 @@ def streaming_topk_words(
 
     Scale: fixed C-counter state per shard — corpus-size-independent;
     one shard shuffle per micro-batch."""
-    from googlecloudstorage_blueprints_spark.streaming.events_stream import (
-        read_documents_stream,
-    )
-
-    docs = read_documents_stream(
-        spark, sf_dir, glob=glob, max_files_per_trigger=max_files_per_trigger
+    docs = read_table_stream(
+        spark, sf_dir, "documents", glob, max_files_per_trigger
     )
     words = (
         docs.where(F.col("text").isNotNull())
@@ -3159,9 +3131,10 @@ def streaming_table_digest(
     replayed file double-counts — so exactly-once rides the
     checkpointed file source's committed-file skip (restart pin).
 
-    Timestamp_ntz columns are normalized to TIMESTAMP before hashing
-    (the catalog shim, value-exact under the UTC session tz), so any
-    catalog table streams; the default feed is documents (the
+    Timestamps are normalized by the batch catalog's own rule before
+    hashing (``read_table_stream``: int64 nanos → µs, ntz → TIMESTAMP,
+    value-exact under the UTC session tz), so any catalog table of any
+    fixture vintage streams; the default feed is documents (the
     corpus-ingest surface).
 
     Scale: stateless hash + one {TABLE_DIGEST_SHARDS}-key shuffle per
@@ -3173,28 +3146,14 @@ def streaming_table_digest(
     from googlecloudstorage_blueprints_spark.operators.audit import (
         row_hash_expr,
     )
-    from googlecloudstorage_blueprints_spark.session import (
-        apply_runtime_conf,
-    )
 
     if table not in TABLE_DIGEST_SPEC:
         raise ValueError(
             f"unknown table {table!r} (catalog: {sorted(TABLE_DIGEST_SPEC)})"
         )
-    apply_runtime_conf(spark)
-    glob = glob if glob is not None else f"{table}.parquet"
-    static = spark.read.option("pathGlobFilter", glob).parquet(sf_dir)
-    reader = spark.readStream.schema(static.schema).option(
-        "pathGlobFilter", glob
+    stream = read_table_stream(
+        spark, sf_dir, table, glob, max_files_per_trigger
     )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(sf_dir)
-    for f_name, f_type in stream.dtypes:
-        if f_type == "timestamp_ntz":
-            stream = stream.withColumn(
-                f_name, F.col(f_name).cast("timestamp")
-            )
     _s, h = row_hash_expr(table)
     hashed = (
         stream.select(h.alias("h"))

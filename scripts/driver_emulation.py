@@ -12,7 +12,7 @@ the host hands us.  Keys are walked in the correctness harness's order
 the harness checks next.  For each key it runs the Spark query at
 the target SF; oracle-backed keys are hash-compared against DuckDB on
 row count + sorted column names + order-insensitive canonical values
-(tests/test_oracle_parity.py's canonicalization); rows-only keys must
+(the ``tests/parity.py`` compare the oracle-parity tests use); rows-only keys must
 return a non-empty schema and at least one row (a zero-row result would
 make the rows-only check vacuous).
 
@@ -34,7 +34,6 @@ import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
-sys.path.insert(0, os.path.join(REPO, "tests"))
 
 HOSTILE_TZ = "America/New_York"
 
@@ -62,47 +61,33 @@ def main() -> int:
     qs, os_ = ent.queries(), ent.oracle_sql()
     assert set(os_) <= set(qs)
 
-    from test_oracle_parity import _canon_rows, _duck
+    from tests.parity import compare, duck_con
 
     unknown = [n for n in args.keys if n not in qs]
     if unknown:
         print(f"error: unknown keys {unknown}", file=sys.stderr)
         return 2
     names = [n for n in qs if not args.keys or n in args.keys][: args.head]
-    con = _duck(args.sf_dir)
+    con = duck_con(args.sf_dir)
     fails: list[str] = []
     n_oracle = n_rows_only = 0
     for name in names:
-        try:
-            sdf = qs[name](spark, args.sf_dir)
-            spark_rows = [tuple(r) for r in sdf.collect()]
-            if name not in os_:
-                n_rows_only += 1
-                if not sdf.columns or not spark_rows:
-                    what = "empty schema" if not sdf.columns else "zero rows"
-                    fails.append(f"{name}: {what}")
-                    print(f"  FAIL {name}: {what}")
-                else:
-                    print(f"  ok   {name} (rows-only, {len(spark_rows)})")
+        v = compare(spark, args.sf_dir, qs[name], os_.get(name), con)
+        if v.tag == "ROWS_ONLY_OK":
+            n_rows_only += 1
+            if v.columns and v.rows:
+                print(f"  ok   {name} (rows-only, {len(v.rows)})")
                 continue
-            res = con.execute(os_[name])
-            duck_colnames = [d[0] for d in res.description]
-            duck_rows = res.fetchall()
+            what = "empty schema" if not v.columns else "zero rows"
+        elif v.tag == "MATCH":
             n_oracle += 1
-            ok = (
-                sorted(sdf.columns) == sorted(duck_colnames)
-                and len(spark_rows) == len(duck_rows)
-                and _canon_rows(sdf.columns, spark_rows)
-                == _canon_rows(duck_colnames, duck_rows)
-            )
-            if ok:
-                print(f"  ok   {name} ({len(spark_rows)} rows)")
-            else:
-                fails.append(f"{name}: hash/schema/rows mismatch")
-                print(f"  FAIL {name}")
-        except Exception as ex:
-            fails.append(f"{name}: {str(ex)[:120]}")
-            print(f"  FAIL {name}: {str(ex)[:120]}")
+            print(f"  ok   {name} ({len(v.rows)} rows)")
+            continue
+        else:
+            n_oracle += v.tag == "MISMATCH"
+            what = f"{v.tag} {v.detail}"
+        fails.append(f"{name}: {what}")
+        print(f"  FAIL {name}: {what}")
     con.close()
     spark.stop()
     print(

@@ -26,16 +26,9 @@ from __future__ import annotations
 import os
 import sys
 
-import duckdb
-
 sys.path.insert(
     0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 )
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
 
 # (op, column) -> why it is allowed to be vacuous on fixtures.
 # Every entry must name the planted test that pins the path.
@@ -89,14 +82,10 @@ def _allowed(op: str, col: str) -> bool:
 def main() -> int:
     sf = os.environ.get("VACUITY_SF_DIR", "/root/testdata/sf0.01")
     from googlecloudstorage_blueprints_spark.operators import all_oracles
+    from tests.parity import duck_con
 
     oracles = all_oracles()
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{sf}/{t}.parquet')"
-        )
+    con = duck_con(sf)
 
     new, allowed = [], []
     for name in sorted(oracles):

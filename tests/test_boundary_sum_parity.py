@@ -19,7 +19,6 @@ from __future__ import annotations
 
 import datetime
 
-import duckdb
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
@@ -28,6 +27,7 @@ from googlecloudstorage_blueprints_spark.operators import (
     all_oracles,
     all_queries,
 )
+from tests.parity import assert_parity, compare
 
 _SHIP = datetime.datetime(1998, 1, 1)
 
@@ -70,30 +70,19 @@ def boundary_dir(tmp_path_factory):
 
 
 def test_pricing_summary_on_boundary_sums(spark, boundary_dir):
-    from tests.test_oracle_parity import _canon_rows
-
-    sdf = all_queries()["pricing_summary"](spark, boundary_dir)
-    spark_rows = [tuple(r) for r in sdf.collect()]
-    by_group = {(r[0], r[1]): r for r in spark_rows}
+    v = compare(
+        spark,
+        boundary_dir,
+        all_queries()["pricing_summary"],
+        all_oracles()["pricing_summary"],
+    )
+    assert_parity(v, "cross-engine divergence on a planted boundary sum")
+    by_group = {(r[0], r[1]): r for r in v.rows}
 
     # exact rational totals — 4dp targets, not boundaries
     bf = by_group[("B", "F")]
-    assert bf[sdf.columns.index("sum_disc_price")] == 101.005
-    assert bf[sdf.columns.index("sum_charge")] == 101.1055
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW lineitem AS SELECT * FROM "
-        f"read_parquet('{boundary_dir}/lineitem.parquet')"
-    )
-    res = con.execute(all_oracles()["pricing_summary"])
-    duck_colnames = [d[0] for d in res.description]
-    duck_rows = res.fetchall()
-    con.close()
-
-    assert _canon_rows(sdf.columns, spark_rows) == _canon_rows(
-        duck_colnames, duck_rows
-    ), "cross-engine divergence on a planted boundary sum"
+    assert bf[v.columns.index("sum_disc_price")] == 101.005
+    assert bf[v.columns.index("sum_charge")] == 101.1055
 
 
 def test_revenue_ops_are_4dp_not_2dp():

@@ -44,13 +44,11 @@ def test_operator_wrapper_normalizes_hostile_session_timezone(spark):
     timestamp math diverges from the UTC-based DuckDB oracles.  Pin it:
     poison the session tz, run a timestamp-heavy operator through the
     REGISTRY wrapper, and hash-compare against the oracle."""
-    import duckdb
-
     from googlecloudstorage_blueprints_spark.operators import (
         all_oracles,
         all_queries,
     )
-    from tests.test_oracle_parity import _canon_rows
+    from tests.parity import canon_rows, duck_con
 
     sf = "/root/testdata/sf0.001"
     spark.conf.set("spark.sql.session.timeZone", "America/New_York")
@@ -62,15 +60,10 @@ def test_operator_wrapper_normalizes_hostile_session_timezone(spark):
     finally:
         spark.conf.set("spark.sql.session.timeZone", "UTC")
 
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW events AS SELECT * FROM "
-        f"read_parquet('{sf}/events.parquet')"
-    )
-    res = con.execute(all_oracles()["latest_snapshot"])
-    duck_cols = [d[0] for d in res.description]
-    duck_rows = res.fetchall()
-    con.close()
-    assert _canon_rows(sdf.columns, spark_rows) == _canon_rows(
+    with duck_con(sf) as con:
+        res = con.execute(all_oracles()["latest_snapshot"])
+        duck_cols = [d[0] for d in res.description]
+        duck_rows = res.fetchall()
+    assert canon_rows(sdf.columns, spark_rows) == canon_rows(
         duck_cols, duck_rows
     ), "hostile-timezone session diverged from the UTC oracle"

@@ -15,7 +15,6 @@ pathological sources and re-runs the driver-style hash compare:
 
 from __future__ import annotations
 
-import duckdb
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
@@ -24,6 +23,7 @@ from googlecloudstorage_blueprints_spark.operators import (
     all_oracles,
     all_queries,
 )
+from tests.parity import assert_parity, compare, duck_con
 
 SF_SRC = "/root/testdata/sf0.001"
 
@@ -51,44 +51,20 @@ def divzero_dir(tmp_path_factory):
     return str(out)
 
 
-def _duck_docs(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{sf_dir}/documents.parquet')"
-    )
-    return con
-
-
 @pytest.mark.parametrize("name", EDGE_OPS)
 def test_divzero_edges_match(spark, name, divzero_dir):
-    from tests.test_oracle_parity import _canon_rows
-
-    sdf = all_queries()[name](spark, divzero_dir)
-    spark_rows = [tuple(r) for r in sdf.collect()]
-
-    con = _duck_docs(divzero_dir)
-    res = con.execute(all_oracles()[name])
-    duck_colnames = [d[0] for d in res.description]
-    duck_rows = res.fetchall()
-    con.close()
+    v = compare(spark, divzero_dir, all_queries()[name], all_oracles()[name])
+    # row count and values must agree at the div-zero edge
+    assert_parity(v, name)
 
     # the pathological sources must actually be exercised, not dropped
     # upstream: char_class_profile keeps edge_no_alpha (NULL ratio);
     # word_zipf_slope drops edge_one_word on BOTH engines via the guard
-    srcs = {r[0] for r in spark_rows}
+    srcs = {r[0] for r in v.rows}
     if name == "char_class_profile":
         assert "edge_no_alpha" in srcs
     else:
         assert "edge_one_word" not in srcs
-
-    assert len(spark_rows) == len(duck_rows), (
-        f"{name}: row count diverged at the div-zero edge "
-        f"(spark={len(spark_rows)} duck={len(duck_rows)})"
-    )
-    assert _canon_rows(sdf.columns, spark_rows) == _canon_rows(
-        duck_colnames, duck_rows
-    ), f"{name}: value divergence at the div-zero edge"
 
 
 def test_length_outlier_mad_planted_artifact(spark, tmp_path):
@@ -97,12 +73,7 @@ def test_length_outlier_mad_planted_artifact(spark, tmp_path):
     pin both paths: the artifact is flagged on BOTH engines with the
     same rounded robust-z, and the zero-MAD source is silently excluded
     (NULLIF guard) instead of diverging NULL-vs-inf."""
-    import duckdb
     import pandas as pd
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from googlecloudstorage_blueprints_spark.operators import all_oracles
 
     rows = []
     # normal source: lengths spread 100..148, one 50_000-char artifact
@@ -129,14 +100,11 @@ def test_length_outlier_mad_planted_artifact(spark, tmp_path):
     assert all(r != 99 for r in got if got[r] is None)
     assert not any(200 <= d < 210 for d in got), "MAD=0 source leaked"
 
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{tmp_path}/documents.parquet')"
-    )
-    duck = {
-        r[0]: r[3]
-        for r in con.execute(all_oracles()["length_outlier_mad"]).fetchall()
-    }
-    con.close()
+    with duck_con(str(tmp_path)) as con:
+        duck = {
+            r[0]: r[3]
+            for r in con.execute(
+                all_oracles()["length_outlier_mad"]
+            ).fetchall()
+        }
     assert got == duck, "cross-engine divergence on planted corpus"

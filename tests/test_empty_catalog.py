@@ -4,8 +4,8 @@ The most common botched table copy is an EMPTY one (a move that wrote
 the directory but no rows, a backfill that matched nothing) — exactly
 the input the `validate` family exists to flag, so the engine must not
 crash or silently diverge from the oracle on it.  The full sweep lives
-in ``scripts/empty_catalog_audit.py`` (all 318 keys, standing
-round-open script); this test pins the 16 keys the r17 sweep found
+in ``scripts/catalog_audit.py --catalog empty`` (all 318 keys,
+standing round-open script); this test pins the 16 keys the r17 sweep found
 broken, each fixed one of three ways:
 
 - grouping_rollup/cube/sets: DuckDB (SQL-standard) emits the ()
@@ -21,7 +21,7 @@ broken, each fixed one of three ways:
   embedding cosine, kmeans, pc1, pagerank, markov) early-return empty
   typed frames instead of AxisError/ZeroDivision/KeyError.
 
-The companion SINGLE-ROW sweep (``--mode single``: one row per table,
+The companion SINGLE-ROW sweep (``--catalog single``: one row per table,
 FK integrity deliberately broken) found four more — every explicit
 sample-variance spelling divides by n-1, which a one-member group makes
 0 (Spark ANSI throws; the fixture never has one-member label/source
@@ -31,19 +31,13 @@ identity wherever groups have >=2 members.
 
 from __future__ import annotations
 
-import math
-
-import duckdb
-import pyarrow.parquet as pq
 import pytest
 
 from googlecloudstorage_blueprints_spark.operators import (
     all_oracles,
     all_queries,
 )
-from googlecloudstorage_blueprints_spark.sources.catalog import TABLES
-
-SRC_SF = "/root/testdata/sf0.001"
+from tests.parity import assert_parity, build_catalog, compare
 
 FIXED_KEYS = [
     "contamination_ngram_sensitivity",
@@ -77,56 +71,19 @@ SINGLE_ROW_KEYS = [
 
 @pytest.fixture(scope="module")
 def empty_dir(tmp_path_factory):
-    out = tmp_path_factory.mktemp("empty_catalog")
-    for t in TABLES:
-        schema = pq.read_schema(f"{SRC_SF}/{t}.parquet")
-        pq.write_table(schema.empty_table(), out / f"{t}.parquet")
-    return str(out)
+    return build_catalog("empty", tmp_path_factory.mktemp("empty_catalog"))
 
 
 @pytest.fixture(scope="module")
 def single_row_dir(tmp_path_factory):
-    out = tmp_path_factory.mktemp("single_row_catalog")
-    for t in TABLES:
-        tbl = pq.read_table(f"{SRC_SF}/{t}.parquet")
-        pq.write_table(tbl.slice(0, 1), out / f"{t}.parquet")
-    return str(out)
-
-
-def _canon(v):
-    if v is None:
-        return "NULL"
-    if isinstance(v, float):
-        return "NaN" if math.isnan(v) else repr(v)
-    if isinstance(v, bool):
-        return "true" if v else "false"
-    return str(v)
+    return build_catalog(
+        "single", tmp_path_factory.mktemp("single_row_catalog")
+    )
 
 
 def _run_and_compare(spark, sf_dir, name):
-    queries, oracles = all_queries(), all_oracles()
-    sdf = queries[name](spark, sf_dir)
-    srows = [tuple(r) for r in sdf.collect()]
-    if name not in oracles:
-        # rows-only keys: the pin is "runs, typed schema, no crash"
-        assert sdf.columns
-        return
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS "
-            f"SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
-    res = con.execute(oracles[name])
-    dcols = [d[0] for d in res.description]
-    drows = res.fetchall()
-    con.close()
-    assert sorted(sdf.columns) == sorted(dcols), name
-    sorder = sorted(range(len(sdf.columns)), key=lambda i: sdf.columns[i])
-    dorder = sorted(range(len(dcols)), key=lambda i: dcols[i])
-    s = sorted(tuple(_canon(r[i]) for i in sorder) for r in srows)
-    d = sorted(tuple(_canon(r[i]) for i in dorder) for r in drows)
-    assert s == d, f"{name}: spark={s[:3]} duck={d[:3]}"
+    v = compare(spark, sf_dir, all_queries()[name], all_oracles().get(name))
+    assert_parity(v, name)
 
 
 @pytest.mark.parametrize("name", FIXED_KEYS)

@@ -336,18 +336,10 @@ def test_split_leakage_planted_cross_split_duplicate(spark, tmp_path):
     assert row["n_leaking_groups"] == 1
     assert row["n_leaking_docs"] == 2
     # and the planted table still hash-matches its oracle
-    import duckdb as _dd
-
-    con = _dd.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings"
-    ).split():
-        con.sql(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{sf_dir}/{t}.parquet')"
-        )
     from googlecloudstorage_blueprints_spark.operators import all_oracles
+    from tests.parity import duck_con
+
+    con = duck_con(sf_dir)
 
     orows = con.sql(all_oracles()["split_leakage_check"]).fetchall()
     assert orows[0] == (

@@ -35,12 +35,10 @@ from googlecloudstorage_blueprints_spark.operators import (
     all_oracles,
     all_queries,
 )
+from googlecloudstorage_blueprints_spark.sources.catalog import TABLES
+from tests.parity import duck_con
 
 SF = "/root/testdata/sf0.001"
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
 
 QUERIES = None
 
@@ -71,12 +69,7 @@ def _driver_compare(spark, sf_dir: str, name: str):
     srows = sorted(
         tuple(str(r[c]) for c in scols) for r in sdf.collect()
     )
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    con = duck_con(sf_dir)
     res = con.sql(all_oracles()[name])
     ocols = list(res.columns)
     idx = [ocols.index(c) for c in sorted(ocols)]

@@ -16,7 +16,6 @@ from __future__ import annotations
 
 import bisect
 
-import duckdb
 import pytest
 
 from googlecloudstorage_blueprints_spark.operators import (
@@ -26,6 +25,7 @@ from googlecloudstorage_blueprints_spark.operators import (
 from googlecloudstorage_blueprints_spark.operators.behavior import (
     PCTL_SKETCH_ACCURACY,
 )
+from tests.parity import duck_con
 
 SFS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01"]
 
@@ -34,14 +34,8 @@ _US_PER_HOUR = 3_600_000_000
 
 def _group_values(sf_dir: str, sql: str):
     """Run a duckdb SQL returning (k1, k2, vals-sorted-list) rows."""
-    con = duckdb.connect()
-    for t in ("events", "orders"):
-        con.sql(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{sf_dir}/{t}.parquet')"
-        )
-    rows = con.sql(sql).fetchall()
-    con.close()
+    with duck_con(sf_dir) as con:
+        rows = con.sql(sql).fetchall()
     return {(r[0], r[1]): r[2] for r in rows}
 
 

@@ -25,12 +25,10 @@ import pyarrow.parquet as pq
 import pytest
 
 from googlecloudstorage_blueprints_spark.operators import all_queries
+from googlecloudstorage_blueprints_spark.sources.catalog import TABLES
+from tests.parity import duck_con
 
 SF = "/root/testdata/sf0.001"
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
 
 
 def _planted_dir(tmp_path, replace: dict):
@@ -110,8 +108,6 @@ def test_band_sweep_planted_mid_jaccard_pair_bends_curve(
 
 
 def _driver_compare(spark, sf_dir: str, name: str):
-    import duckdb
-
     from googlecloudstorage_blueprints_spark.operators import all_oracles
 
     sdf = all_queries()[name](spark, sf_dir)
@@ -119,12 +115,7 @@ def _driver_compare(spark, sf_dir: str, name: str):
     srows = sorted(
         tuple(str(r[c]) for c in scols) for r in sdf.collect()
     )
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    con = duck_con(sf_dir)
     res = con.sql(all_oracles()[name])
     ocols = list(res.columns)
     idx = [ocols.index(c) for c in sorted(ocols)]

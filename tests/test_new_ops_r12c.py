@@ -16,7 +16,6 @@ from __future__ import annotations
 
 import shutil
 
-import duckdb
 import pyarrow as pa
 import pyarrow.parquet as pq
 
@@ -24,12 +23,10 @@ from googlecloudstorage_blueprints_spark.operators import (
     all_oracles,
     all_queries,
 )
+from googlecloudstorage_blueprints_spark.sources.catalog import TABLES
+from tests.parity import assert_parity, compare
 
 SF = "/root/testdata/sf0.001"
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
 
 _US_PER_DAY = 86_400_000_000
 _US_PER_WEEK = _US_PER_DAY * 7
@@ -75,24 +72,9 @@ def _docs_table(rows):
 
 def _cross_engine(spark, name: str, sf_dir: str):
     """Driver-style canonical compare of the Spark op vs its oracle."""
-    from tests.test_oracle_parity import _canon_rows
-
-    sdf = all_queries()[name](spark, sf_dir)
-    spark_rows = [tuple(r) for r in sdf.collect()]
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{sf_dir}/{t}.parquet')"
-        )
-    res = con.execute(all_oracles()[name])
-    duck_cols = [d[0] for d in res.description]
-    duck_rows = res.fetchall()
-    assert sorted(sdf.columns) == sorted(duck_cols)
-    assert _canon_rows(sdf.columns, spark_rows) == _canon_rows(
-        duck_cols, duck_rows
-    )
-    return spark_rows, sdf.columns
+    v = compare(spark, sf_dir, all_queries()[name], all_oracles()[name])
+    assert_parity(v, name)
+    return v.rows, v.columns
 
 
 def _growth_events():

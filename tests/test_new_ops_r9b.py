@@ -273,25 +273,21 @@ def test_vocab_growth_offset_ids_keep_zero_checkpoints(spark, tmp_path):
     """doc_ids 900-909 under max+1 = 910: every cutoff below k = 10
     precedes all docs, so checkpoints 1-9 must emit ZERO rows (not
     vanish) — identically on both engines (the spine-join fix)."""
-    import duckdb
-
     from googlecloudstorage_blueprints_spark.operators import all_oracles
+    from tests.parity import duck_con
 
     _write_docs(
         tmp_path, [(900 + i, f"w{i} w{i}", "s") for i in range(10)]
     )
     sdf = _q()["vocab_growth_curve"](spark, str(tmp_path))
     srows = sorted(tuple(r) for r in sdf.collect())
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{tmp_path}/documents.parquet')"
-    )
-    drows = sorted(
-        tuple(r)
-        for r in con.execute(all_oracles()["vocab_growth_curve"]).fetchall()
-    )
-    con.close()
+    with duck_con(str(tmp_path)) as con:
+        drows = sorted(
+            tuple(r)
+            for r in con.execute(
+                all_oracles()["vocab_growth_curve"]
+            ).fetchall()
+        )
     assert len(srows) == 10, "zero checkpoints dropped"
     assert srows == drows
     # k=1..9 all zero; k=10 covers everything (10 docs, 20 tokens,

@@ -4,8 +4,8 @@ After the empty table, the second classic botched-migration signature
 is a NULL-riddled one (failed casts, schema drift, placeholder-writing
 loaders).  The fixtures are 100% non-NULL, so none of the oracle
 surface had ever been exercised on NULL cells; the full sweep
-(``scripts/null_catalog_audit.py`` — all 318 keys, standing round-open
-script, ~1/3 of every column's cells NULLed in a deterministic
+(``scripts/catalog_audit.py --catalog null`` — all 318 keys, standing
+round-open script, ~1/3 of every column's cells NULLed in a deterministic
 stagger) found 56 broken keys in five classes, all fixed
 identity-on-non-NULL-input:
 
@@ -37,20 +37,14 @@ catalog; the standing audit re-checks all 318 keys each round.
 
 from __future__ import annotations
 
-import math
-
-import duckdb
-import pyarrow as pa
-import pyarrow.parquet as pq
 import pytest
 
 from googlecloudstorage_blueprints_spark.operators import (
     all_oracles,
     all_queries,
 )
-from googlecloudstorage_blueprints_spark.sources.catalog import TABLES
+from tests.parity import assert_parity, build_catalog, compare
 
-SRC_SF = "/root/testdata/sf0.001"
 SLICE_ROWS = 150  # small but NULL-dense enough to fire every class
 
 PINNED_KEYS = [
@@ -80,71 +74,14 @@ PINNED_KEYS = [
 
 @pytest.fixture(scope="module")
 def null_dir(tmp_path_factory):
-    """First SLICE_ROWS rows of every table with the audit's stagger:
-    cell (row i, column ordinal j) is NULLed when (i*31 + j*17) % 3 == 0
-    — ~1/3 of every column, varying which columns go NULL together."""
-    out = tmp_path_factory.mktemp("null_catalog_small")
-    for t in TABLES:
-        tbl = pq.read_table(f"{SRC_SF}/{t}.parquet").slice(0, SLICE_ROWS)
-        arrays, fields = [], []
-        for j, field in enumerate(tbl.schema):
-            vals = [
-                None if (i * 31 + j * 17) % 3 == 0 else v
-                for i, v in enumerate(tbl.column(j).to_pylist())
-            ]
-            arrays.append(pa.array(vals, field.type))
-            fields.append(pa.field(field.name, field.type, nullable=True))
-        pq.write_table(
-            pa.table(
-                dict(zip([f.name for f in fields], arrays)),
-                schema=pa.schema(fields),
-            ),
-            out / f"{t}.parquet",
-        )
-    return str(out)
-
-
-def _canon(v):
-    if v is None:
-        return "NULL"
-    if isinstance(v, float):
-        return "NaN" if math.isnan(v) else repr(v)
-    if isinstance(v, bool):
-        return "true" if v else "false"
-    return str(v)
+    """First SLICE_ROWS rows of every table with the audit's stagger (~1/3
+    of every column NULLed, varying which columns go NULL together)."""
+    return build_catalog(
+        "null", tmp_path_factory.mktemp("null_catalog_small"), rows=SLICE_ROWS
+    )
 
 
 @pytest.mark.parametrize("name", PINNED_KEYS)
 def test_null_catalog_runs_and_matches_oracle(spark, null_dir, name):
-    queries, oracles = all_queries(), all_oracles()
-    sdf = queries[name](spark, null_dir)
-    srows = [tuple(r) for r in sdf.collect()]
-    if name not in oracles:
-        assert sdf.columns
-        return
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS "
-            f"SELECT * FROM read_parquet('{null_dir}/{t}.parquet')"
-        )
-    res = con.execute(oracles[name])
-    dcols = [d[0] for d in res.description]
-    drows = res.fetchall()
-    con.close()
-    assert sorted(sdf.columns) == sorted(dcols), name
-    sorder = sorted(range(len(sdf.columns)), key=lambda i: sdf.columns[i])
-    dorder = sorted(range(len(dcols)), key=lambda i: dcols[i])
-    s = sorted(tuple(_canon(r[i]) for i in sorder) for r in srows)
-    d = sorted(tuple(_canon(r[i]) for i in dorder) for r in drows)
-    assert s == d, f"{name}: spark={s[:3]} duck={d[:3]}"
-
-
-def test_null_stagger_actually_nulls_cells(null_dir):
-    """Guard the pin's premise: the staggered catalog really carries
-    NULLs in every column (a refactor that dropped the stagger would
-    turn every pin above vacuous)."""
-    for t in TABLES:
-        tbl = pq.read_table(f"{null_dir}/{t}.parquet")
-        for j in range(tbl.num_columns):
-            assert tbl.column(j).null_count > 0, (t, j)
+    v = compare(spark, null_dir, all_queries()[name], all_oracles().get(name))
+    assert_parity(v, name)

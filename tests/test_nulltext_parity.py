@@ -12,7 +12,6 @@ guard keeps both engines aligned.
 
 from __future__ import annotations
 
-import duckdb
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
@@ -21,6 +20,7 @@ from googlecloudstorage_blueprints_spark.operators import (
     all_oracles,
     all_queries,
 )
+from tests.parity import assert_parity, compare
 
 SF_SRC = "/root/testdata/sf0.001"
 
@@ -60,32 +60,8 @@ def nulltext_dir(tmp_path_factory):
     return str(out)
 
 
-def _duck_docs(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{sf_dir}/documents.parquet')"
-    )
-    return con
-
-
 @pytest.mark.parametrize("name", TOKENIZING_OPS)
 def test_tokenizing_ops_match_with_null_text(spark, name, nulltext_dir):
-    from tests.test_oracle_parity import _canon_rows
-
-    sdf = all_queries()[name](spark, nulltext_dir)
-    spark_rows = [tuple(r) for r in sdf.collect()]
-
-    con = _duck_docs(nulltext_dir)
-    res = con.execute(all_oracles()[name])
-    duck_colnames = [d[0] for d in res.description]
-    duck_rows = res.fetchall()
-    con.close()
-
-    assert len(spark_rows) == len(duck_rows), (
-        f"{name}: row count diverged with NULL text present "
-        f"(spark={len(spark_rows)} duck={len(duck_rows)})"
-    )
-    assert _canon_rows(sdf.columns, spark_rows) == _canon_rows(
-        duck_colnames, duck_rows
-    ), f"{name}: value divergence with NULL text present"
+    v = compare(spark, nulltext_dir, all_queries()[name], all_oracles()[name])
+    # row count and values must agree with NULL text present
+    assert_parity(v, name)

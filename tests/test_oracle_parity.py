@@ -6,17 +6,15 @@ driver's CORRECTNESS check so regressions surface before a round ends.
 
 from __future__ import annotations
 
-import math
 import os
 
-import duckdb
 import pytest
 
 from googlecloudstorage_blueprints_spark.operators import (
     all_oracles,
     all_queries,
 )
-from googlecloudstorage_blueprints_spark.sources.catalog import TABLES
+from tests.parity import assert_parity, compare, duck_con
 
 SF_DIR = os.environ.get("PARITY_SF_DIR", "/root/testdata/sf0.001")
 
@@ -24,62 +22,9 @@ QUERIES = all_queries()
 ORACLES = all_oracles()
 
 
-def _duck(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
-    return con
-
-
-def _canon_value(v) -> str:
-    if v is None:
-        return "NULL"
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        # canonical float text — repr round-trips float64 exactly
-        return repr(v)
-    if isinstance(v, bool):
-        return "true" if v else "false"
-    return str(v)
-
-
-def _canon_rows(cols, rows) -> list[tuple]:
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    return sorted(
-        tuple(_canon_value(row[i]) for i in order) for row in rows
-    )
-
-
 @pytest.mark.parametrize("name", sorted(ORACLES))
 def test_oracle_parity(spark, name):
-    sdf = QUERIES[name](spark, SF_DIR)
-    spark_cols = sorted(sdf.columns)
-    spark_rows = [tuple(r) for r in sdf.collect()]
-
-    con = _duck(SF_DIR)
-    res = con.execute(ORACLES[name])
-    duck_colnames = [d[0] for d in res.description]
-    duck_cols = sorted(duck_colnames)
-    duck_rows = res.fetchall()
-    con.close()
-
-    assert spark_cols == duck_cols, (
-        f"{name}: column mismatch spark={spark_cols} duck={duck_cols}"
-    )
-    assert len(spark_rows) == len(duck_rows), (
-        f"{name}: row count spark={len(spark_rows)} duck={len(duck_rows)}"
-    )
-    s = _canon_rows(sdf.columns, spark_rows)
-    d = _canon_rows(duck_colnames, duck_rows)
-    mism = [i for i, (a, b) in enumerate(zip(s, d)) if a != b][:5]
-    assert s == d, (
-        f"{name}: value mismatch at sorted rows {mism}; "
-        f"first: spark={s[mism[0]] if mism else None} "
-        f"duck={d[mism[0]] if mism else None}"
-    )
+    assert_parity(compare(spark, SF_DIR, QUERIES[name], ORACLES[name]), name)
 
 
 def test_oracle_ops_emit_scalar_columns_only(spark):
@@ -103,10 +48,7 @@ def test_oracle_ops_emit_scalar_columns_only(spark):
 )
 def test_rows_only_ops_run(spark, name):
     """Ops without an oracle must still run and return a stable schema."""
-    sdf = QUERIES[name](spark, SF_DIR)
-    rows = sdf.collect()
-    assert sdf.columns, f"{name}: empty schema"
-    assert rows is not None
+    assert_parity(compare(spark, SF_DIR, QUERIES[name]), name)
 
 
 def test_oracle_schema_types_align_cross_engine(spark):
@@ -116,9 +58,7 @@ def test_oracle_schema_types_align_cross_engine(spark):
     schema check could flag it).  Cheap: Spark dtypes come from
     analysis and DuckDB types from relation binding — nothing
     executes."""
-    import duckdb
-
-    con = _duck(SF_DIR)
+    con = duck_con(SF_DIR)
     canon = {
         "BIGINT": {"bigint"},
         "INTEGER": {"int"},

@@ -26,7 +26,6 @@ from __future__ import annotations
 
 import os
 
-import duckdb
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
@@ -36,6 +35,7 @@ from googlecloudstorage_blueprints_spark.operators import (
     all_queries,
 )
 from googlecloudstorage_blueprints_spark.sources.catalog import TABLES
+from tests.parity import assert_parity, compare
 
 SF_SRC = "/root/testdata/sf0.001"
 
@@ -84,30 +84,10 @@ def planted_dir(tmp_path_factory):
     return _planted_dir(tmp_path_factory)
 
 
-def _duck(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS "
-            f"SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
-    return con
-
-
 def _compare(spark, name: str, sf_dir: str):
-    from tests.test_oracle_parity import _canon_rows
-
-    sdf = all_queries()[name](spark, sf_dir)
-    spark_rows = [tuple(r) for r in sdf.collect()]
-    con = _duck(sf_dir)
-    res = con.execute(all_oracles()[name])
-    duck_colnames = [d[0] for d in res.description]
-    duck_rows = res.fetchall()
-    con.close()
-    assert _canon_rows(sdf.columns, spark_rows) == _canon_rows(
-        duck_colnames, duck_rows
-    ), f"{name}: cross-engine divergence on planted corpus"
-    return spark_rows
+    v = compare(spark, sf_dir, all_queries()[name], all_oracles()[name])
+    assert_parity(v, f"{name}: cross-engine divergence on planted corpus")
+    return v.rows
 
 
 def test_join_anti_planted_orderless_customer(spark, planted_dir):

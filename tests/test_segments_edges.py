@@ -19,7 +19,6 @@ paths — the cases the driver fixtures never produce:
 
 from __future__ import annotations
 
-import duckdb
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
@@ -28,6 +27,7 @@ from googlecloudstorage_blueprints_spark.operators import (
     all_oracles,
     all_queries,
 )
+from tests.parity import assert_parity, compare
 
 SF_SRC = "/root/testdata/sf0.001"
 
@@ -46,25 +46,10 @@ def _write_from_template(src_table: str, out_dir, columns: dict) -> None:
     )
 
 
-def _compare(spark, name: str, sf_dir: str, tables: list[str]):
-    from tests.test_oracle_parity import _canon_rows
-
-    sdf = all_queries()[name](spark, str(sf_dir))
-    spark_rows = [tuple(r) for r in sdf.collect()]
-    con = duckdb.connect()
-    for t in tables:
-        con.execute(
-            f"CREATE VIEW {t} AS "
-            f"SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
-    res = con.execute(all_oracles()[name])
-    duck_colnames = [d[0] for d in res.description]
-    duck_rows = res.fetchall()
-    con.close()
-    assert _canon_rows(sdf.columns, spark_rows) == _canon_rows(
-        duck_colnames, duck_rows
-    ), f"{name}: cross-engine divergence on planted corpus"
-    return spark_rows
+def _compare(spark, name: str, sf_dir):
+    v = compare(spark, str(sf_dir), all_queries()[name], all_oracles()[name])
+    assert_parity(v, f"{name}: cross-engine divergence on planted corpus")
+    return v.rows
 
 
 def test_decile_report_sparse_and_tied(spark, tmp_path):
@@ -78,7 +63,7 @@ def test_decile_report_sparse_and_tied(spark, tmp_path):
             "o_totalprice": prices,
         },
     )
-    rows = _compare(spark, "orders_decile_report", tmp_path, ["orders"])
+    rows = _compare(spark, "orders_decile_report", tmp_path)
     by_decile = {r[0]: r[1] for r in rows}
     # 7 rows over 10 deciles: rn 1..7 -> decile (rn-1)*10 div 7 + 1
     assert by_decile == {1: 1, 2: 1, 3: 1, 5: 1, 6: 1, 8: 1, 9: 1}
@@ -98,7 +83,7 @@ def test_supplier_abc_exact_boundary_tie(spark, tmp_path):
             "l_discount": [0.0, 0.0],
         },
     )
-    rows = _compare(spark, "supplier_abc_class", tmp_path, ["lineitem"])
+    rows = _compare(spark, "supplier_abc_class", tmp_path)
     classes = {r[0]: r[1] for r in rows}
     assert classes == {"A": 1, "C": 1}, (
         "exact-boundary supplier must be class A on both engines"
@@ -116,7 +101,7 @@ def test_price_size_slope_single_size_brand_is_null(spark, tmp_path):
             "p_retailprice": [100.0, 150.0, 200.0],
         },
     )
-    rows = _compare(spark, "part_price_size_slope", tmp_path, ["part"])
+    rows = _compare(spark, "part_price_size_slope", tmp_path)
     assert len(rows) == 1 and rows[0][2] is None, (
         "zero OLS denominator must be NULL, not inf/NaN"
     )
@@ -137,7 +122,7 @@ def test_hour_autocorr_constant_rate_is_null(spark, tmp_path):
             "event_type": ["flat"] * 6,
         },
     )
-    rows = _compare(spark, "events_hour_autocorr", tmp_path, ["events"])
+    rows = _compare(spark, "events_hour_autocorr", tmp_path)
     assert len(rows) == 1 and rows[0][1] == 5 and rows[0][2] is None, (
         "zero-variance series must be NULL autocorr on both engines"
     )
@@ -163,8 +148,7 @@ def test_cluster_size_histogram_planted_duplicates(spark, tmp_path):
         },
     )
     rows = _compare(
-        spark, "dedup_cluster_size_histogram", tmp_path, ["documents"]
-    )
+        spark, "dedup_cluster_size_histogram", tmp_path)
     assert {r[0]: (r[1], r[2]) for r in rows} == {
         1: (5, 5),
         2: (1, 2),
@@ -190,8 +174,7 @@ def test_funnel_conversion_time_no_entries_is_null(spark, tmp_path):
         },
     )
     rows = _compare(
-        spark, "events_funnel_conversion_time", tmp_path, ["events"]
-    )
+        spark, "events_funnel_conversion_time", tmp_path)
     assert len(rows) == 1
     n_entered, n_converted, rate = rows[0][0], rows[0][1], rows[0][2]
     assert (n_entered, n_converted, rate) == (0, 0, None)

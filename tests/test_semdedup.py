@@ -17,7 +17,6 @@ greedy keeper is dominance, not transitive clustering.
 
 from __future__ import annotations
 
-import duckdb
 import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -30,6 +29,7 @@ from googlecloudstorage_blueprints_spark.operators import (
 from googlecloudstorage_blueprints_spark.operators.semdedup import (
     _survivorship_summary,
 )
+from tests.parity import assert_parity, compare
 
 DIM = 64
 
@@ -71,38 +71,23 @@ def planted_dir(tmp_path_factory):
     return str(out)
 
 
-def _duck_summary(sf_dir: str):
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW embeddings AS SELECT * FROM "
-        f"read_parquet('{sf_dir}/embeddings.parquet')"
-    )
-    res = con.execute(all_oracles()["dedup_semantic"])
-    cols = [d[0] for d in res.description]
-    rows = res.fetchall()
-    con.close()
-    return cols, rows
-
-
 def test_exact_keeper_drops_planted_copies_cross_engine(spark, planted_dir):
-    from tests.test_oracle_parity import _canon_rows
-
-    sdf = all_queries()["dedup_semantic"](spark, planted_dir)
-    spark_rows = [tuple(r) for r in sdf.collect()]
-    by_label = {r[0]: r for r in spark_rows}
+    v = compare(
+        spark,
+        planted_dir,
+        all_queries()["dedup_semantic"],
+        all_oracles()["dedup_semantic"],
+    )
+    assert_parity(v, "cross-engine divergence on planted semantic dups")
+    by_label = {r[0]: r for r in v.rows}
 
     # groups of 2/3/2 at labels 0/1/2 → one survivor each: 1/2/1 dropped
-    i_drop = sdf.columns.index("n_dropped")
+    i_drop = v.columns.index("n_dropped")
     assert by_label[0][i_drop] == 1
     assert by_label[1][i_drop] == 2
     assert by_label[2][i_drop] == 1
     # labels 3-9 hold only orthogonal singletons: nothing dropped
     assert all(by_label[lb][i_drop] == 0 for lb in range(3, 10))
-
-    duck_cols, duck_rows = _duck_summary(planted_dir)
-    assert _canon_rows(sdf.columns, spark_rows) == _canon_rows(
-        duck_cols, duck_rows
-    ), "cross-engine divergence on planted semantic dups"
 
 
 def test_ann_tier_matches_exact_on_high_cosine(spark, planted_dir):

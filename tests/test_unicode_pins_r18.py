@@ -1,9 +1,9 @@
 """Planted pins for the r18 hostile-unicode audit findings.
 
-scripts/unicode_catalog_audit.py (standing since r18) found three real
-cross-engine divergences the ASCII-ish fixtures could never exercise;
-each fix gets a planted detection-path pin here so a regression fires
-red even if the audit is skipped:
+``scripts/catalog_audit.py --catalog unicode`` (standing since r18)
+found three real cross-engine divergences the ASCII-ish fixtures could
+never exercise; each fix gets a planted detection-path pin here so a
+regression fires red even if the audit is skipped:
 
 1. doc_char_entropy — NEGATIVE ZERO: a single-char alphabet makes
    -SUM(p·log2 p) read -0.0, which DuckDB ROUND preserves and the
@@ -25,17 +25,13 @@ from __future__ import annotations
 import hashlib
 import re
 
-import duckdb
-import pyarrow as pa
-import pyarrow.parquet as pq
 import pytest
 
 from googlecloudstorage_blueprints_spark.operators import (
     all_oracles,
     all_queries,
 )
-
-SRC_SF = "/root/testdata/sf0.001"
+from tests.parity import build_catalog, duck_con
 
 PLANTED = [
     # (text, lang, source)
@@ -48,42 +44,9 @@ PLANTED = [
 
 @pytest.fixture(scope="module")
 def planted_dir(tmp_path_factory):
-    out = tmp_path_factory.mktemp("unicode_pins")
-    from googlecloudstorage_blueprints_spark.sources.catalog import TABLES
-
-    for t in TABLES:
-        if t == "documents":
-            continue
-        pq.write_table(
-            pq.read_table(f"{SRC_SF}/{t}.parquet"), f"{out}/{t}.parquet"
-        )
-    schema = pq.read_schema(f"{SRC_SF}/documents.parquet")
-    docs = pa.table(
-        {
-            "doc_id": pa.array(range(len(PLANTED)), pa.int64()),
-            "text": pa.array([p[0] for p in PLANTED], pa.string()),
-            "lang": pa.array([p[1] for p in PLANTED], pa.string()),
-            "source": pa.array([p[2] for p in PLANTED], pa.string()),
-            "n_chars": pa.array(
-                [len(p[0]) for p in PLANTED], pa.int64()
-            ),
-        },
-        schema=schema,
+    return build_catalog(
+        "unicode", tmp_path_factory.mktemp("unicode_pins"), docs=PLANTED
     )
-    pq.write_table(docs, f"{out}/documents.parquet")
-    return str(out)
-
-
-def _duck(sf_dir):
-    from googlecloudstorage_blueprints_spark.sources.catalog import TABLES
-
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{sf_dir}/{t}.parquet')"
-        )
-    return con
 
 
 def test_char_entropy_negative_zero_guard(spark, planted_dir):
@@ -92,7 +55,7 @@ def test_char_entropy_negative_zero_guard(spark, planted_dir):
     # the constant doc reads EXACTLY +0.0 — repr, not just ==, because
     # the canonicalizer stringifies and '-0.0' != '0.0'
     assert repr(srow[0]["char_entropy"]) == "0.0"
-    con = _duck(planted_dir)
+    con = duck_con(planted_dir)
     drow = {
         r[0]: r
         for r in con.execute(
@@ -110,7 +73,7 @@ def test_metadata_agg_counts_utf8_bytes(spark, planted_dir):
         PLANTED[1][0].encode("utf-8")
     )
     assert srows["src1"]["total_payload_bytes"] == expect_src1
-    con = _duck(planted_dir)
+    con = duck_con(planted_dir)
     drows = {
         r[0]: r
         for r in con.execute(
@@ -125,7 +88,7 @@ def test_metadata_agg_counts_utf8_bytes(spark, planted_dir):
 def test_fingerprint_ascii_fold_cross_engine(spark, planted_dir):
     sdf = all_queries()["text_normalize_fingerprint"](spark, planted_dir)
     srows = {r["doc_id"]: r for r in sdf.collect()}
-    con = _duck(planted_dir)
+    con = duck_con(planted_dir)
     drows = {
         r[0]: r
         for r in con.execute(
