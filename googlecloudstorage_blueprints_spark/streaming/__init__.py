@@ -1,93 +1,38 @@
 """Structured Streaming twins of the batch event operators."""
 
+from googlecloudstorage_blueprints_spark.streaming import stateful as _stateful
 from googlecloudstorage_blueprints_spark.streaming.events_stream import (
     read_events_stream,
-    streaming_session_window,
-    streaming_tumbling_agg,
     run_stream_to_memory,
+    run_stream_to_partitioned_parquet,
+    streaming_anomaly,
+    streaming_contamination,
+    streaming_enriched,
+    streaming_quality_filter,
+    streaming_session_window,
+    streaming_ship_latency_join,
+    streaming_ship_latency_windows,
+    streaming_sliding_agg,
+    streaming_tumbling_agg,
 )
 from googlecloudstorage_blueprints_spark.streaming.stateful import (
-    streaming_active_streaks,
-    streaming_cohort_retention,
-    streaming_cooccurrence,
-    streaming_dedup,
-    streaming_first_ship_sla,
-    streaming_first_touch,
-    streaming_funnel_attribution,
-    streaming_funnel_delays,
-    streaming_gapfill,
-    streaming_growth_accounting,
-    streaming_dau_wau,
-    streaming_daily_uniques_hll,
-    streaming_hourly_load_percentiles,
-    streaming_intersession_gaps,
-    streaming_latest_snapshot,
-    streaming_lsh_candidates,
-    streaming_order_close,
-    streaming_pair_latency,
-    streaming_scd2_intervals,
-    streaming_sequence_pack,
-    streaming_session_depth,
-    streaming_session_entries,
-    streaming_session_path_trigrams,
-    streaming_session_starts,
     merge_digest_rows,
-    streaming_stateful_sessions,
-    streaming_table_digest,
-    streaming_topk_words,
-    streaming_transition_matrix,
-    streaming_weekly_conversion,
+    streaming_dedup,
+)
+
+# every keyed-state twin, by its row name in the spec table
+globals().update(
+    (name, getattr(_stateful, name)) for name in _stateful.STATEFUL_TWINS
 )
 
 __all__ = [
     "read_events_stream",
     "streaming_tumbling_agg",
     "streaming_session_window",
-    "streaming_stateful_sessions",
-    "streaming_active_streaks",
-    "streaming_cohort_retention",
-    "streaming_cooccurrence",
+    *_stateful.STATEFUL_TWINS,
     "streaming_dedup",
-    "streaming_first_ship_sla",
-    "streaming_first_touch",
-    "streaming_funnel_attribution",
-    "streaming_funnel_delays",
-    "streaming_gapfill",
-    "streaming_growth_accounting",
-    "streaming_dau_wau",
-    "streaming_daily_uniques_hll",
-    "streaming_hourly_load_percentiles",
-    "streaming_intersession_gaps",
-    "streaming_latest_snapshot",
-    "streaming_lsh_candidates",
-    "streaming_order_close",
-    "streaming_pair_latency",
-    "streaming_scd2_intervals",
-    "streaming_sequence_pack",
-    "streaming_session_depth",
-    "streaming_session_entries",
-    "streaming_session_path_trigrams",
-    "streaming_session_starts",
-    "streaming_table_digest",
-    "streaming_topk_words",
-    "streaming_transition_matrix",
-    "streaming_weekly_conversion",
     "merge_digest_rows",
     "run_stream_to_memory",
-]
-
-from googlecloudstorage_blueprints_spark.streaming.events_stream import (  # noqa: E402
-    run_stream_to_partitioned_parquet,
-    streaming_anomaly,
-    streaming_contamination,
-    streaming_enriched,
-    streaming_quality_filter,
-    streaming_ship_latency_join,
-    streaming_ship_latency_windows,
-    streaming_sliding_agg,
-)
-
-__all__ += [
     "streaming_anomaly",
     "streaming_contamination",
     "streaming_enriched",

@@ -1,22 +1,41 @@
-"""Custom stateful streaming operators (``applyInPandasWithState``) plus
+"""Keyed-state streaming twins (``applyInPandasWithState``) plus
 watermarked stream dedup.
 
-``streaming_session_window`` (events_stream.py) uses the built-in
-``session_window`` — the right default.  This module is the escape hatch
-for session semantics the builtin can't express (per-session running
-aggregates beyond count/sum, custom close conditions): an explicit
-keyed-state sessionizer.  State is O(1) per live user — one open session
-tuple — and is evicted by event-time timeout as the watermark passes, so
-memory is bounded by |concurrently-active users|, not history.  That is the
-property that matters on an unbounded 100 TB/day stream.
+Each twin is the incremental form of a batch operator: a pandas kernel
+``_name(key, pdfs, state)`` folds a key's micro-batch rows into a small
+fixed-width state and emits rows that equal the batch operator's over
+any in-order replay.  ``STATEFUL_TWINS`` (bottom of the module) is the
+one spec table: per twin, its source table (and so its default
+``glob``), the columns it projects, its watermark column (``None`` for
+twins that never time out on event time), its group keys, kernel,
+output and state schemas, and timeout.  ``keyed_state`` is the one
+builder behind it, and the only ``applyInPandasWithState`` call in the
+package: project → watermark → ``groupBy(keys)`` → kernel, in append
+mode.  A twin whose row carries a docstring is generated from the row
+as ``twin(spark, sf_dir, glob, max_files_per_trigger)``; a twin with its
+own pre-step, post-step or parameter keeps a short ``def`` that builds
+its stream and hands it to ``keyed_state``.
 
-``streaming_dedup`` is idempotent-ingestion dedup:
-``dropDuplicatesWithinWatermark`` keeps one row per event_id and ages its
-dedup state out with the watermark (a plain ``dropDuplicates`` on a stream
-would hold every id forever).
+To add a twin: write the kernel and its schemas, add one row (with the
+docstring), and exercise the kernel in
+``tests/test_stateful_kernels_properties.py`` — that file's meta-test
+reads the kernels from the table and fails for one it does not
+exercise.  The package exports every row by name.
+
+``streaming_stateful_sessions`` is the escape hatch for session
+semantics the builtin ``session_window`` (events_stream.py) can't
+express: state is one open-session tuple per live user, evicted by
+event-time timeout as the watermark passes, so memory is bounded by
+|concurrently-active users|, not history.  ``streaming_dedup`` is
+idempotent-ingestion dedup: ``dropDuplicatesWithinWatermark`` keeps one
+row per event_id and ages its dedup state out with the watermark (a
+plain ``dropDuplicates`` on a stream would hold every id forever).
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
+from typing import NamedTuple
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -37,6 +56,41 @@ from googlecloudstorage_blueprints_spark.streaming.events_stream import (
     read_events_stream,
     read_table_stream,
 )
+
+_NO_TIMEOUT = GroupStateTimeout.NoTimeout
+_EVENT_TIME = GroupStateTimeout.EventTimeTimeout
+_TYPED_EVENTS = ("user_id", "event_id", "ts", "event_type")
+
+
+class TwinSpec(NamedTuple):
+    """One row of ``STATEFUL_TWINS``."""
+
+    table: str  # catalog table streamed; default glob ``<table>.parquet``
+    columns: tuple | None  # projected first; None keeps the frame as given
+    watermark: str | None  # event-time column; None sets no watermark
+    keys: tuple
+    kernel: Callable
+    out: StructType
+    state: StructType
+    timeout: str
+    doc: str | None = None  # set for twins generated from the row
+
+
+def keyed_state(
+    stream: DataFrame, name: str, kernel: Callable | None = None
+) -> DataFrame:
+    """Run twin ``name``'s row of ``STATEFUL_TWINS`` over ``stream``:
+    projection, watermark, one shuffle on the group keys, then the
+    kernel (``kernel`` replaces the row's, for a parametrised twin)."""
+    spec = STATEFUL_TWINS[name]
+    if spec.columns is not None:
+        stream = stream.select(*spec.columns)
+    if spec.watermark is not None:
+        stream = stream.withWatermark(spec.watermark, WATERMARK)
+    return stream.groupBy(*spec.keys).applyInPandasWithState(
+        kernel or spec.kernel, spec.out, spec.state, "append", spec.timeout
+    )
+
 
 SESSION_GAP_US = 30 * 60 * 1_000_000  # 30 min, µs — matches SESSION_GAP
 
@@ -122,31 +176,6 @@ def _sessionize(key: tuple, pdfs, state: GroupState):
     state.setTimeoutTimestamp(last // 1000 + SESSION_GAP_US // 1000)
     if closed:
         yield pd.DataFrame(closed)
-
-
-def streaming_stateful_sessions(
-    spark: SparkSession,
-    sf_dir: str,
-    glob: str = "events.parquet",
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Explicit keyed-state sessionization via ``applyInPandasWithState`` —
-    the custom-operator path when ``session_window`` semantics don't fit.
-    One shuffle on user_id; state store holds one tuple per live user."""
-    events = read_events_stream(
-        spark, sf_dir, glob=glob, max_files_per_trigger=max_files_per_trigger
-    )
-    return (
-        events.withWatermark("ts", WATERMARK)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _sessionize,
-            _OUTPUT_SCHEMA,
-            _STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.EventTimeTimeout,
-        )
-    )
 
 
 def streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -241,13 +270,7 @@ def streaming_lsh_candidates(
         hashed_shingle_docs(stream.where(F.col("text").isNotNull())),
         emit_bands=True,
     )
-    return bands.groupBy("band_id", "band_hash").applyInPandasWithState(
-        _band_bucket_pairs,
-        _LSH_OUT_SCHEMA,
-        _LSH_STATE_SCHEMA,
-        "append",
-        GroupStateTimeout.NoTimeout,
-    )
+    return keyed_state(bands, "streaming_lsh_candidates")
 
 
 # ---------------------------------------------------------------------------
@@ -328,13 +351,7 @@ def streaming_sequence_pack(
         "doc_id",
         F.size(F.split("text", " ")).cast("long").alias("n_tokens"),
     )
-    return toks.groupBy("source").applyInPandasWithState(
-        _pack_bins,
-        _PACK_OUT_SCHEMA,
-        _PACK_STATE_SCHEMA,
-        "append",
-        GroupStateTimeout.NoTimeout,
-    )
+    return keyed_state(toks, "streaming_sequence_pack")
 
 
 # ---------------------------------------------------------------------------
@@ -486,17 +503,8 @@ def streaming_gapfill(
     events = read_events_stream(
         spark, sf_dir, glob=glob, max_files_per_trigger=max_files_per_trigger
     )
-    return (
-        events.select("user_id", "ts", "value")
-        .withWatermark("ts", WATERMARK)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _make_gapfill(evict_horizon_us),
-            _GAPFILL_OUT_SCHEMA,
-            _GAPFILL_STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.EventTimeTimeout,
-        )
+    return keyed_state(
+        events, "streaming_gapfill", _make_gapfill(evict_horizon_us)
     )
 
 
@@ -564,42 +572,6 @@ def _latest_per_key(key: tuple, pdfs, state: GroupState):
     )
 
 
-def streaming_latest_snapshot(
-    spark: SparkSession,
-    sf_dir: str,
-    glob: str = "events.parquet",
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Streaming CDC compaction — the incremental twin of the batch
-    ``latest_snapshot`` operator (operators/warehouse.py): keyed state
-    keeps each key's newest (ts_us, event_id) record and emits an update
-    row only when the snapshot advances.
-
-    One shuffle on user_id per micro-batch; state is ONE fixed-width
-    tuple per key — deliberately NO timeout, because a snapshot's state
-    is its value (dropping an idle key would forget its latest record;
-    memory is O(|live keys|), the same bound the downstream compacted
-    table has).  Losing races to (ts_us, event_id) makes redelivery and
-    out-of-order arrival no-ops, so the changelog is replay-idempotent;
-    its newest row per key equals the batch operator over any in-order
-    replay (test-pinned in tests/test_streaming.py)."""
-    events = read_events_stream(
-        spark, sf_dir, glob=glob, max_files_per_trigger=max_files_per_trigger
-    )
-    return (
-        events.select("user_id", "event_id", "ts", "event_type", "value")
-        .withWatermark("ts", WATERMARK)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _latest_per_key,
-            _SNAPSHOT_OUT_SCHEMA,
-            _SNAPSHOT_STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
 # ---------------------------------------------------------------------------
 # streaming transition counts: last-event-type keyed state
 # ---------------------------------------------------------------------------
@@ -655,40 +627,6 @@ def _transition_counts(key: tuple, pdfs, state: GroupState):
         )
 
 
-def streaming_transition_matrix(
-    spark: SparkSession,
-    sf_dir: str,
-    glob: str = "events.parquet",
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Streaming first-order Markov transition counts — the incremental
-    twin of the batch ``events_transition_matrix`` (operators/events.py):
-    keyed state holds one (ts_us, event_id, type) tuple per user to
-    bridge micro-batch boundaries; emissions are per-batch partial
-    (src, dst, n) counts that sum to the batch lead-window counts over
-    any in-order replay (test-pinned, including a multi-batch split).
-
-    State is O(|live users|) fixed-width tuples; each micro-batch
-    shuffles once on user_id and emits at most |types|² rows per user —
-    the unbounded stream never accumulates more than the last event per
-    key."""
-    events = read_events_stream(
-        spark, sf_dir, glob=glob, max_files_per_trigger=max_files_per_trigger
-    )
-    return (
-        events.select("user_id", "event_id", "ts", "event_type")
-        .withWatermark("ts", WATERMARK)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _transition_counts,
-            _TRANSITION_OUT_SCHEMA,
-            _TRANSITION_STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
 # ---------------------------------------------------------------------------
 # streaming co-occurrence: seen-type-set keyed state
 # ---------------------------------------------------------------------------
@@ -731,38 +669,6 @@ def _cooccurrence_pairs(key: tuple, pdfs, state: GroupState):
     state.update((sorted(seen),))
     if out:
         yield pd.DataFrame(out)
-
-
-def streaming_cooccurrence(
-    spark: SparkSession,
-    sf_dir: str,
-    glob: str = "events.parquet",
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Streaming event-type co-occurrence — the incremental twin of the
-    batch ``events_cooccurrence`` counts (operators/events.py): keyed
-    state holds each user's seen-type set (≤|types| strings, an
-    enum-bounded NOT history-bounded state), and a first sighting of a
-    type emits one increment per previously-seen type.  Summed emissions
-    equal the batch distinct-(user, pair) counts over any replay —
-    including redelivery, since repeats are absorbed by the set
-    (test-pinned).  One shuffle on user_id per micro-batch; emission
-    volume is bounded by |types|² per user EVER, not per batch."""
-    events = read_events_stream(
-        spark, sf_dir, glob=glob, max_files_per_trigger=max_files_per_trigger
-    )
-    return (
-        events.select("user_id", "event_id", "ts", "event_type")
-        .withWatermark("ts", WATERMARK)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _cooccurrence_pairs,
-            _COOC_OUT_SCHEMA,
-            _COOC_STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.NoTimeout,
-        )
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -843,44 +749,6 @@ def _scd2_intervals(key: tuple, pdfs, state: GroupState):
     yield pd.DataFrame(out)
 
 
-def streaming_scd2_intervals(
-    spark: SparkSession,
-    sf_dir: str,
-    glob: str = "events.parquet",
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Streaming SCD type-2 maintenance — the incremental twin of the
-    batch ``scd2_intervals`` operator (operators/warehouse.py): the
-    classic warehouse job of applying a CDC feed to a dimension-history
-    table without rebuilding it.
-
-    Keyed state is ONE open interval per key (fixed width — never the
-    key's history), so memory is O(|live keys|), the same bound the
-    dimension table itself has; one shuffle on user_id per micro-batch.
-    Closed intervals are emitted exactly once and are final — exactly
-    the append stream an SCD2 table sink wants; the open interval is
-    re-emitted with NULL valid_to_us and superseded by its closed form
-    at the next change (newest-emission-per-(key, valid_from) is the
-    current table, mirroring ``streaming_latest_snapshot``'s changelog
-    contract).  (ts_us, event_id)-race absorption makes full-backlog
-    redelivery a no-op (test-pinned in tests/test_streaming.py)."""
-    events = read_events_stream(
-        spark, sf_dir, glob=glob, max_files_per_trigger=max_files_per_trigger
-    )
-    return (
-        events.select("user_id", "event_id", "ts", "event_type")
-        .withWatermark("ts", WATERMARK)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _scd2_intervals,
-            _SCD2_OUT_SCHEMA,
-            _SCD2_STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
 # ---------------------------------------------------------------------------
 # streaming user-activity distinct: seen-day-set keyed state (DAU/WAU feed)
 # ---------------------------------------------------------------------------
@@ -927,43 +795,6 @@ def _activity_days(key: tuple, pdfs, state: GroupState):
     state.update((sorted(seen | days),))
     yield pd.DataFrame(
         {"user_id": int(user_id), "epoch_day": fresh}
-    )
-
-
-def streaming_dau_wau(
-    spark: SparkSession,
-    sf_dir: str,
-    glob: str = "events.parquet",
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Streaming activity-distinct feed — the incremental twin of the
-    batch ``events_dau_wau`` operator's core (operators/events.py): that
-    op's entire decomposition rides on the distinct (user, active-day)
-    frame; this maintains that frame incrementally, emitting each (user,
-    day) exactly once.  Downstream DAU is a per-day count of emissions
-    and WAU a count over each day's trailing 7 — plain stateless
-    aggregations of this append stream (the same constant 7× explode,
-    applied to a stream that only ever grows by first sightings).
-
-    Keyed state is the user's seen-day set — bounded by |days in
-    retention|, NOT event volume (a user's thousandth event on a day
-    adds nothing); one shuffle on user_id per micro-batch.  Set
-    absorption makes full-backlog redelivery a no-op (test-pinned in
-    tests/test_streaming.py)."""
-    events = read_events_stream(
-        spark, sf_dir, glob=glob, max_files_per_trigger=max_files_per_trigger
-    )
-    return (
-        events.select("user_id", "ts")
-        .withWatermark("ts", WATERMARK)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _activity_days,
-            _ACTIVITY_OUT_SCHEMA,
-            _ACTIVITY_STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.NoTimeout,
-        )
     )
 
 
@@ -1041,42 +872,6 @@ def _path_trigram_counts(key: tuple, pdfs, state: GroupState):
         )
 
 
-def streaming_session_path_trigrams(
-    spark: SparkSession,
-    sf_dir: str,
-    glob: str = "events.parquet",
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Streaming within-session path trigrams — the incremental twin of
-    the batch ``session_path_trigrams`` top-k's count core
-    (operators/behavior.py:session_trigram_counts): keyed state is the
-    current session's trailing TWO events per user (fixed width — never
-    the whole path), bridging both micro-batch boundaries and session
-    boundaries; emissions are per-batch partial (trigram, n) counts
-    that sum to the batch counts over any in-order replay, including a
-    time-ordered multi-batch split (test-pinned).
-
-    State is O(|live users|) six-field tuples; each micro-batch
-    shuffles once on user_id.  The batch op needs the whole session
-    collected to zip — the stream never holds more than two events per
-    key, which is the property that matters on an unbounded stream."""
-    events = read_events_stream(
-        spark, sf_dir, glob=glob, max_files_per_trigger=max_files_per_trigger
-    )
-    return (
-        events.select("user_id", "event_id", "ts", "event_type")
-        .withWatermark("ts", WATERMARK)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _path_trigram_counts,
-            _PATH_OUT_SCHEMA,
-            _PATH_STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
 # ---------------------------------------------------------------------------
 # streaming funnel conversion delays: first-entry/converted keyed state
 # ---------------------------------------------------------------------------
@@ -1150,45 +945,6 @@ def _make_funnel_delays(from_type: str, to_type: str):
 
     fn.__doc__ = fn.__doc__.format(**{"from": from_type, "to": to_type})
     return fn
-
-
-def streaming_funnel_delays(
-    spark: SparkSession,
-    sf_dir: str,
-    glob: str = "events.parquet",
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Streaming conversion-delay feed — the incremental twin of the
-    batch ``events_funnel_conversion_time`` core (operators/behavior.py):
-    that op reduces per-user first-entry/first-conversion timestamps to
-    one percentile row; this emits each converted user's delay exactly
-    once, and the batch op's delay SET equals the emission set over any
-    replay — including full-backlog redelivery, which the converted
-    latch absorbs (test-pinned).  Downstream percentiles are a plain
-    stateless aggregation of this append stream.
-
-    Keyed state is two fixed-width fields per user; one user_id shuffle
-    per micro-batch."""
-    from googlecloudstorage_blueprints_spark.operators.behavior import (
-        FUNNEL_FROM,
-        FUNNEL_TO,
-    )
-
-    events = read_events_stream(
-        spark, sf_dir, glob=glob, max_files_per_trigger=max_files_per_trigger
-    )
-    return (
-        events.select("user_id", "event_id", "ts", "event_type")
-        .withWatermark("ts", WATERMARK)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _make_funnel_delays(FUNNEL_FROM, FUNNEL_TO),
-            _FUNNEL_OUT_SCHEMA,
-            _FUNNEL_STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.NoTimeout,
-        )
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1274,18 +1030,7 @@ def streaming_first_ship_sla(
     li = read_table_stream(
         spark, sf_dir, "lineitem", glob, max_files_per_trigger
     )
-    changelog = (
-        li.select("l_orderkey", "l_linenumber", "l_shipdate")
-        .withWatermark("l_shipdate", WATERMARK)
-        .groupBy("l_orderkey")
-        .applyInPandasWithState(
-            _first_ship_per_order,
-            _FIRSTSHIP_OUT_SCHEMA,
-            _FIRSTSHIP_STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.NoTimeout,
-        )
-    )
+    changelog = keyed_state(li, "streaming_first_ship_sla")
     orders = load_table(spark, orders_dir or sf_dir, "orders").select(
         F.col("o_orderkey"),
         F.col("o_orderpriority"),
@@ -1402,36 +1147,6 @@ def _sessionize_entries(key: tuple, pdfs, state: GroupState):
         yield pd.DataFrame(closed)
 
 
-def streaming_session_entries(
-    spark: SparkSession,
-    sf_dir: str,
-    glob: str = "events.parquet",
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Streaming session-entry feed — the incremental twin of the
-    ``session_bounce_rate`` core: closed sessions arrive as
-    (entry_type, bounds, n_events) rows, so per-entry-type bounce
-    rates downstream are one stateless aggregate of this append stream
-    (bounce = n_events == 1).  Same gap rule, timeout closure, and
-    (ts, event_id) entry race as the batch windows — pinned batch-equal
-    over replay in tests."""
-    events = read_events_stream(
-        spark, sf_dir, glob=glob, max_files_per_trigger=max_files_per_trigger
-    )
-    return (
-        events.select("user_id", "event_id", "ts", "event_type")
-        .withWatermark("ts", WATERMARK)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _sessionize_entries,
-            _ENTRY_OUT_SCHEMA,
-            _ENTRY_STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
 # ---------------------------------------------------------------------------
 # streaming session depth + conversion (feed for session_depth_conversion)
 # ---------------------------------------------------------------------------
@@ -1521,35 +1236,6 @@ def _sessionize_depth(key: tuple, pdfs, state: GroupState):
         yield pd.DataFrame(closed)
 
 
-def streaming_session_depth(
-    spark: SparkSession,
-    sf_dir: str,
-    glob: str = "events.parquet",
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Streaming session-depth feed — the incremental twin of the
-    ``session_depth_conversion`` core: closed sessions arrive as
-    (bounds, n_events, converted) rows, so depth-bucket conversion
-    rates downstream are one stateless aggregate of this append
-    stream.  Same gap rule and timeout closure as the batch windows —
-    pinned batch-equal over replay in tests."""
-    events = read_events_stream(
-        spark, sf_dir, glob=glob, max_files_per_trigger=max_files_per_trigger
-    )
-    return (
-        events.select("user_id", "ts", "event_type")
-        .withWatermark("ts", WATERMARK)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _sessionize_depth,
-            _DEPTH_OUT_SCHEMA,
-            _DEPTH_STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
 # ---------------------------------------------------------------------------
 # streaming first-touch attribution: running-min changelog per user (r11)
 # ---------------------------------------------------------------------------
@@ -1608,41 +1294,6 @@ def _first_touch_per_user(key: tuple, pdfs, state: GroupState):
                 "first_type": cand[2],
             }
         ]
-    )
-
-
-def streaming_first_touch(
-    spark: SparkSession,
-    sf_dir: str,
-    glob: str = "events.parquet",
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Streaming first-touch feed — the incremental twin of the batch
-    ``user_first_touch_attribution`` first-pick core
-    (operators/behavior.py): each user's acquisition event arrives as a
-    running-min changelog row, so the per-channel attribution rollup
-    downstream is one stateless aggregate over the newest emission per
-    user (which matches the batch rank-window pick exactly —
-    test-pinned, including under full-backlog redelivery).
-
-    Scale: state is one fixed-width triple per user, no timeout (a
-    user's first touch must survive idle periods — memory is O(|users|),
-    the bound the downstream attribution table has anyway); one user_id
-    shuffle per micro-batch."""
-    events = read_events_stream(
-        spark, sf_dir, glob=glob, max_files_per_trigger=max_files_per_trigger
-    )
-    return (
-        events.select("user_id", "event_id", "ts", "event_type")
-        .withWatermark("ts", WATERMARK)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _first_touch_per_user,
-            _FIRSTTOUCH_OUT_SCHEMA,
-            _FIRSTTOUCH_STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.NoTimeout,
-        )
     )
 
 
@@ -1712,42 +1363,6 @@ def _pair_latency_sums(key: tuple, pdfs, state: GroupState):
         )
 
 
-def streaming_pair_latency(
-    spark: SparkSession,
-    sf_dir: str,
-    glob: str = "events.parquet",
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Streaming type→type hand-off latency — the incremental twin of
-    the batch ``event_pair_latency`` count/total core
-    (operators/behavior.py): per-batch partial (n_pairs, total_gap_us)
-    rows per (prev, next) type pair; summing partials over any in-order
-    replay reproduces the batch lag window's exact BIGINT counts and
-    gap totals (test-pinned, including a time-ordered multi-batch
-    split).  The batch op's percentile columns are deliberately NOT
-    streamed — interpolated quantiles aren't mergeable partials; at
-    100 TB the streaming side feeds a t-digest/approx sketch instead.
-
-    Scale: state is one fixed-width (ts_us, event_id, type) tuple per
-    user, no timeout; each micro-batch shuffles once on user_id and
-    emits at most |types|² rows per user."""
-    events = read_events_stream(
-        spark, sf_dir, glob=glob, max_files_per_trigger=max_files_per_trigger
-    )
-    return (
-        events.select("user_id", "event_id", "ts", "event_type")
-        .withWatermark("ts", WATERMARK)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _pair_latency_sums,
-            _PAIR_LATENCY_OUT_SCHEMA,
-            _PAIR_LATENCY_STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
 # ---------------------------------------------------------------------------
 # streaming intersession gaps: return-latency partial sums (r13)
 # ---------------------------------------------------------------------------
@@ -1806,43 +1421,6 @@ def _intersession_gap_sums(key: tuple, pdfs, state: GroupState):
         )
 
 
-def streaming_intersession_gaps(
-    spark: SparkSession,
-    sf_dir: str,
-    glob: str = "events.parquet",
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Streaming return-latency — the incremental twin of the batch
-    ``user_intersession_gap_stats`` count/total core
-    (operators/behavior.py): per-batch partial (n_gaps, total_gap_us)
-    rows per user; summing partials over any in-order replay
-    reproduces the batch op's exact BIGINT gap count and total (users
-    with no completed gap never emit, so the users-that-emitted set IS
-    n_users_multi).  The batch op's p50/p90 columns are deliberately
-    NOT streamed — interpolated quantiles aren't mergeable partials
-    (the pair-latency precedent); at 100 TB the streaming side feeds a
-    t-digest/approx sketch instead.
-
-    Scale: state is one fixed-width (ts_us, event_id) tuple per user,
-    no timeout; each micro-batch shuffles once on user_id and emits at
-    most one partial row per user."""
-    events = read_events_stream(
-        spark, sf_dir, glob=glob, max_files_per_trigger=max_files_per_trigger
-    )
-    return (
-        events.select("user_id", "event_id", "ts")
-        .withWatermark("ts", WATERMARK)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _intersession_gap_sums,
-            _INTERSESSION_OUT_SCHEMA,
-            _INTERSESSION_STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
 # ---------------------------------------------------------------------------
 # streaming session starts: the session-count changelog (r13)
 # ---------------------------------------------------------------------------
@@ -1885,40 +1463,6 @@ def _session_start_marks(key: tuple, pdfs, state: GroupState):
                 "start_ts_us": starts,
             }
         )
-
-
-def streaming_session_starts(
-    spark: SparkSession,
-    sf_dir: str,
-    glob: str = "events.parquet",
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Streaming session-count changelog — the incremental twin of
-    ``user_session_count_histogram``'s per-user session counts
-    (operators/behavior.py): one append-only mark per session the gap
-    rule opens; COUNT(marks) per user over any in-order replay equals
-    the batch 1 + Σ is_new, and the histogram is a downstream regroup
-    of those counts (batch-equality pinned).  Unlike the partial-sum
-    twins each mark is emitted exactly once, so the changelog is also
-    a session-start event stream (rate rollups, alerting) for free.
-
-    Scale: state is one fixed-width (ts_us, event_id) tuple per user,
-    no timeout; at most one shuffle per micro-batch on user_id."""
-    events = read_events_stream(
-        spark, sf_dir, glob=glob, max_files_per_trigger=max_files_per_trigger
-    )
-    return (
-        events.select("user_id", "event_id", "ts")
-        .withWatermark("ts", WATERMARK)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _session_start_marks,
-            _SESSION_STARTS_OUT_SCHEMA,
-            _INTERSESSION_STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.NoTimeout,
-        )
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1978,47 +1522,6 @@ def _weekly_conversion_marks(key: tuple, pdfs, state: GroupState):
     yield pd.DataFrame(out)
 
 
-def streaming_weekly_conversion(
-    spark: SparkSession,
-    sf_dir: str,
-    glob: str = "events.parquet",
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Streaming conditional-distinct feed — the incremental twin of
-    the batch ``weekly_conversion_trend`` distinct core
-    (operators/behavior.py): n_active and n_buyers are per-week
-    COUNT(DISTINCT user) and COUNT(DISTINCT user WHERE purchased),
-    and this maintains both incrementally, emitting each (user, week)
-    at most once per kind ('active' on first sighting, 'buyer' on
-    first purchase sighting) — the ``streaming_dau_wau`` seen-set
-    pattern extended to a CONDITIONAL distinct.  Downstream, the batch
-    table's distinct columns are a stateless per-week count of each
-    kind and conversion_share their ratio (test-pinned, including
-    under full-backlog redelivery — set absorption makes replay a
-    no-op).  The batch op's n_purchases/purchase_value columns are
-    plain sums any stateless streaming aggregate carries; the stateful
-    part worth a kernel is the distinct pair.
-
-    Scale: state is two week-sets per user — bounded by |weeks in
-    retention|, never event volume; one user_id shuffle per
-    micro-batch."""
-    events = read_events_stream(
-        spark, sf_dir, glob=glob, max_files_per_trigger=max_files_per_trigger
-    )
-    return (
-        events.select("user_id", "ts", "event_type")
-        .withWatermark("ts", WATERMARK)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _weekly_conversion_marks,
-            _WEEKLY_CONV_OUT_SCHEMA,
-            _WEEKLY_CONV_STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
 # ---------------------------------------------------------------------------
 # streaming order-close changelog: running-MAX ship per order (r12)
 # ---------------------------------------------------------------------------
@@ -2072,41 +1575,6 @@ def _order_close_per_order(key: tuple, pdfs, state: GroupState):
                 "close_line": cand[1],
             }
         ]
-    )
-
-
-def streaming_order_close(
-    spark: SparkSession,
-    sf_dir: str,
-    glob: str = "lineitem.parquet",
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Streaming order-close feed — the incremental twin of the batch
-    ``orders_inflight_monthly`` span core (operators/warehouse.py):
-    that op's sweep-line ledger needs each order's LAST ship day (the
-    orderkey-keyed MAX); this maintains it as a running-max changelog,
-    so the downstream in-flight ledger is a stateless ±1 delta
-    aggregate over the newest emission per order plus the orders-side
-    start days.  Newest-emission-per-order equals the batch MAX
-    exactly (test-pinned, including under full-backlog redelivery —
-    non-advancing rows lose the max race and emit nothing).
-
-    Scale: state is one fixed-width (day, line) pair per live order —
-    the bound the in-flight working set has anyway; one orderkey
-    shuffle per micro-batch."""
-    li = read_table_stream(
-        spark, sf_dir, "lineitem", glob, max_files_per_trigger
-    )
-    return (
-        li.select("l_orderkey", "l_linenumber", "l_shipdate")
-        .groupBy("l_orderkey")
-        .applyInPandasWithState(
-            _order_close_per_order,
-            _ORDERCLOSE_OUT_SCHEMA,
-            _ORDERCLOSE_STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.NoTimeout,
-        )
     )
 
 
@@ -2187,46 +1655,6 @@ def _growth_class_diff(key: tuple, pdfs, state: GroupState):
     yield pd.DataFrame(out)
 
 
-def streaming_growth_accounting(
-    spark: SparkSession,
-    sf_dir: str,
-    glob: str = "events.parquet",
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Streaming growth-accounting feed — the incremental twin of the
-    batch ``user_growth_accounting`` classifier
-    (operators/behavior.py): each (user, active-week) carries a
-    NEW / RETAINED / RESURRECTED class, and this maintains the
-    classification as a versioned changelog that RECLASSIFIES when
-    late or out-of-order weeks land (the first twin whose state
-    transition rewrites neighbours rather than racing one scalar).
-    Downstream, the batch op's n_new/n_retained/n_resurrected columns
-    are a stateless per-week count over the newest (max-ver) row per
-    (user, week) — test-pinned, including under an out-of-order
-    two-file split and full-backlog redelivery.  Churn attribution is
-    deliberately NOT streamed: "went silent in week w" is decidable
-    only at week close, i.e. by the same watermark-delayed rollup any
-    batch pass does.
-
-    Scale: state is one calendar-bounded week array + version per
-    user; one user_id shuffle per micro-batch."""
-    events = read_events_stream(
-        spark, sf_dir, glob=glob, max_files_per_trigger=max_files_per_trigger
-    )
-    return (
-        events.select("user_id", "ts")
-        .withWatermark("ts", WATERMARK)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _growth_class_diff,
-            _GROWTH_OUT_SCHEMA,
-            _GROWTH_STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
 # ---------------------------------------------------------------------------
 # streaming cohort retention: reclassifying (cohort, offset) changelog (r14)
 # ---------------------------------------------------------------------------
@@ -2299,44 +1727,6 @@ def _cohort_assign_diff(key: tuple, pdfs, state: GroupState):
             for m, (c, off) in sorted(after.items())
             if before.get(m) != (c, off)
         ]
-    )
-
-
-def streaming_cohort_retention(
-    spark: SparkSession,
-    sf_dir: str,
-    glob: str = "orders.parquet",
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Streaming cohort-assignment feed — the incremental twin of the
-    batch ``customer_cohort_retention`` triangle
-    (operators/relational_tpch2.py): each (customer, active-month)
-    carries its (cohort_month, month_offset) cell, maintained as a
-    versioned changelog that RECLASSIFIES when late orders land (the
-    second reclassifying twin after ``streaming_growth_accounting`` —
-    and the stronger case: an earlier first order rewrites EVERY cell
-    of the customer, not just neighbours).  Downstream, the batch
-    op's n_active/cohort_size/retention_share columns are a stateless
-    count over the newest (max-ver) row per (customer, month) —
-    test-pinned, including under an out-of-order two-file split and
-    full-backlog redelivery.
-
-    Scale: state is one calendar-bounded month array + version per
-    customer; one o_custkey shuffle per micro-batch."""
-    orders = read_table_stream(
-        spark, sf_dir, "orders", glob, max_files_per_trigger
-    )
-    return (
-        orders.select("o_custkey", "o_orderdate")
-        .withWatermark("o_orderdate", WATERMARK)
-        .groupBy("o_custkey")
-        .applyInPandasWithState(
-            _cohort_assign_diff,
-            _COHORT_OUT_SCHEMA,
-            _COHORT_STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.NoTimeout,
-        )
     )
 
 
@@ -2459,13 +1849,7 @@ def streaming_topk_words(
             "word",
         )
     )
-    return words.groupBy("shard").applyInPandasWithState(
-        _space_saving_counts,
-        _TOPK_WORDS_OUT_SCHEMA,
-        _TOPK_WORDS_STATE_SCHEMA,
-        "append",
-        GroupStateTimeout.NoTimeout,
-    )
+    return keyed_state(words, "streaming_topk_words")
 
 
 streaming_topk_words.__doc__ = streaming_topk_words.__doc__.format(
@@ -2482,10 +1866,11 @@ _space_saving_counts.__doc__ = _space_saving_counts.__doc__.format(
 # purchase) reclassifying changelog (r15 — 30th twin)
 # ---------------------------------------------------------------------------
 
-# Mirror of operators.behavior.FUNNEL_FROM/FUNNEL_TO — duplicated as
-# literals so the Arrow worker running the kernel never imports the
-# operator registry; pinned equal to the batch constants by the twin
-# test (test_streaming.py).
+# Mirror of operators.behavior.FUNNEL_FROM/FUNNEL_TO for both funnel
+# twins (this kernel and the funnel-delays row) — duplicated as literals
+# so the Arrow worker running a kernel never imports the operator
+# registry; pinned equal to the batch constants by the twins'
+# batch-equality tests (test_streaming.py).
 _FUNNEL_ATTR_FROM = "signup"
 _FUNNEL_ATTR_TO = "purchase"
 
@@ -2612,20 +1997,11 @@ def streaming_funnel_attribution(
     events = read_events_stream(
         spark, sf_dir, glob=glob, max_files_per_trigger=max_files_per_trigger
     )
-    return (
+    return keyed_state(
         events.where(
             F.col("event_type").isin(_FUNNEL_ATTR_FROM, _FUNNEL_ATTR_TO)
-        )
-        .select("user_id", "ts", "event_type")
-        .withWatermark("ts", WATERMARK)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _funnel_attribution_diff,
-            _FUNNEL_ATTR_OUT_SCHEMA,
-            _FUNNEL_ATTR_STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.NoTimeout,
-        )
+        ),
+        "streaming_funnel_attribution",
     )
 
 
@@ -2757,19 +2133,9 @@ def streaming_daily_uniques_hll(
         spark, sf_dir, glob=glob, max_files_per_trigger=max_files_per_trigger
     )
     day = F.expr("unix_micros(ts) div 86400000000").cast("long")
-    return (
-        events.select(
-            day.alias("epoch_day"), "user_id", F.col("ts")
-        )
-        .withWatermark("ts", WATERMARK)
-        .groupBy("epoch_day")
-        .applyInPandasWithState(
-            _hll_day_registers,
-            _HLL_OUT_SCHEMA,
-            _HLL_STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.NoTimeout,
-        )
+    return keyed_state(
+        events.select(day.alias("epoch_day"), "user_id", F.col("ts")),
+        "streaming_daily_uniques_hll",
     )
 
 
@@ -2847,45 +2213,6 @@ def _streak_diff(key: tuple, pdfs, state: GroupState):
                 "ver": ver,
             }
         ]
-    )
-
-
-def streaming_active_streaks(
-    spark: SparkSession,
-    sf_dir: str,
-    glob: str = "events.parquet",
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Streaming longest-activity-streak feed — the incremental twin of
-    batch ``user_active_streaks`` (operators/behavior.py): each user
-    carries the length of their longest consecutive-week run, and this
-    maintains it as a versioned changelog whose newest (max-ver) row
-    per user always equals the batch value over everything delivered.
-    The batch op's histogram (streak_weeks, n_users, user_share) is a
-    stateless regroup of those newest rows — test-pinned, including
-    under a planted out-of-order delivery that exercises the
-    streak-MERGE path (late gap week joins two islands; the streak
-    jumps superadditively) and full-backlog redelivery (week-set
-    absorption emits nothing).
-
-    Scale: state is one calendar-bounded week array + version per
-    user; one user_id shuffle per micro-batch — same envelope as
-    ``streaming_growth_accounting``, which shares the week-set state
-    but classifies per-week rather than reducing to one scalar."""
-    events = read_events_stream(
-        spark, sf_dir, glob=glob, max_files_per_trigger=max_files_per_trigger
-    )
-    return (
-        events.select("user_id", "ts")
-        .withWatermark("ts", WATERMARK)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _streak_diff,
-            _STREAK_OUT_SCHEMA,
-            _STREAK_STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.NoTimeout,
-        )
     )
 
 
@@ -2978,47 +2305,6 @@ def _hourly_load_pctl(key: tuple, pdfs, state: GroupState):
                 "ver": ver,
             }
         ]
-    )
-
-
-def streaming_hourly_load_percentiles(
-    spark: SparkSession,
-    sf_dir: str,
-    glob: str = "events.parquet",
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Streaming EXACT hourly-load percentiles — the incremental twin
-    of batch ``events_hourly_load_percentiles`` (operators/behavior.py)
-    and the first twin to emit percentile columns: the newest (max-ver)
-    row per event type carries bit-identical n_hours / max_load /
-    p50/p90/p99 to the batch op over everything delivered (the
-    interpolation is the exact formula both engines use, pinned by
-    tests/test_quantile_interp_parity.py).  The pair-latency and
-    intersession twins deliberately left their percentile columns
-    batch-only because their input multisets are DATA-sized (one gap
-    per event); here the multiset is the (hour → count) ledger —
-    CALENDAR-bounded — so the whole thing rides in state and the
-    percentiles stream exactly, no sketch needed (the batch registry's
-    ``events_hourly_load_percentiles_approx`` remains the unbounded-
-    horizon fallback).
-
-    Scale: state is one cell per (type, active hour) — ~9k cells per
-    type-year at any traffic volume; one event_type shuffle per
-    micro-batch."""
-    events = read_events_stream(
-        spark, sf_dir, glob=glob, max_files_per_trigger=max_files_per_trigger
-    )
-    return (
-        events.select("event_type", "ts")
-        .withWatermark("ts", WATERMARK)
-        .groupBy("event_type")
-        .applyInPandasWithState(
-            _hourly_load_pctl,
-            _HOURLY_PCTL_OUT_SCHEMA,
-            _HOURLY_PCTL_STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.NoTimeout,
-        )
     )
 
 
@@ -3165,13 +2451,7 @@ def streaming_table_digest(
             "h",
         )
     )
-    return hashed.groupBy("table_name", "shard").applyInPandasWithState(
-        _table_digest_partials,
-        _TABLE_DIGEST_OUT_SCHEMA,
-        _TABLE_DIGEST_STATE_SCHEMA,
-        "append",
-        GroupStateTimeout.NoTimeout,
-    )
+    return keyed_state(hashed, "streaming_table_digest")
 
 
 streaming_table_digest.__doc__ = streaming_table_digest.__doc__.format(
@@ -3203,4 +2483,410 @@ def merge_digest_rows(rows) -> tuple[int, int, int]:
 
 merge_digest_rows.__doc__ = merge_digest_rows.__doc__.format(
     TABLE_DIGEST_SHARDS=TABLE_DIGEST_SHARDS
+)
+
+
+STATEFUL_TWINS: dict[str, TwinSpec] = {
+    "streaming_stateful_sessions": TwinSpec(
+        "events", None, "ts", ("user_id",), _sessionize, _OUTPUT_SCHEMA,
+        _STATE_SCHEMA, _EVENT_TIME,
+        """Explicit keyed-state sessionization via ``applyInPandasWithState`` —
+        the custom-operator path when ``session_window`` semantics don't fit.
+        One shuffle on user_id; state store holds one tuple per live user.""",
+    ),
+    "streaming_lsh_candidates": TwinSpec(
+        "documents", None, None, ("band_id", "band_hash"), _band_bucket_pairs,
+        _LSH_OUT_SCHEMA, _LSH_STATE_SCHEMA, _NO_TIMEOUT,
+    ),
+    "streaming_sequence_pack": TwinSpec(
+        "documents", None, None, ("source",), _pack_bins, _PACK_OUT_SCHEMA,
+        _PACK_STATE_SCHEMA, _NO_TIMEOUT,
+    ),
+    "streaming_gapfill": TwinSpec(
+        "events", ("user_id", "ts", "value"), "ts", ("user_id",),
+        _make_gapfill(GAPFILL_EVICT_HORIZON_US), _GAPFILL_OUT_SCHEMA,
+        _GAPFILL_STATE_SCHEMA, _EVENT_TIME,
+    ),
+    "streaming_latest_snapshot": TwinSpec(
+        "events", ("user_id", "event_id", "ts", "event_type", "value"), "ts",
+        ("user_id",), _latest_per_key, _SNAPSHOT_OUT_SCHEMA,
+        _SNAPSHOT_STATE_SCHEMA, _NO_TIMEOUT,
+        """Streaming CDC compaction — the incremental twin of the batch
+        ``latest_snapshot`` operator (operators/warehouse.py): keyed state
+        keeps each key's newest (ts_us, event_id) record and emits an update
+        row only when the snapshot advances.
+
+        One shuffle on user_id per micro-batch; state is ONE fixed-width
+        tuple per key — deliberately NO timeout, because a snapshot's state
+        is its value (dropping an idle key would forget its latest record;
+        memory is O(|live keys|), the same bound the downstream compacted
+        table has).  Losing races to (ts_us, event_id) makes redelivery and
+        out-of-order arrival no-ops, so the changelog is replay-idempotent;
+        its newest row per key equals the batch operator over any in-order
+        replay (test-pinned in tests/test_streaming.py).""",
+    ),
+    "streaming_transition_matrix": TwinSpec(
+        "events", _TYPED_EVENTS, "ts", ("user_id",), _transition_counts,
+        _TRANSITION_OUT_SCHEMA, _TRANSITION_STATE_SCHEMA, _NO_TIMEOUT,
+        """Streaming first-order Markov transition counts — the incremental
+        twin of the batch ``events_transition_matrix`` (operators/events.py):
+        keyed state holds one (ts_us, event_id, type) tuple per user to
+        bridge micro-batch boundaries; emissions are per-batch partial
+        (src, dst, n) counts that sum to the batch lead-window counts over
+        any in-order replay (test-pinned, including a multi-batch split).
+
+        State is O(|live users|) fixed-width tuples; each micro-batch
+        shuffles once on user_id and emits at most |types|² rows per user —
+        the unbounded stream never accumulates more than the last event per
+        key.""",
+    ),
+    "streaming_cooccurrence": TwinSpec(
+        "events", _TYPED_EVENTS, "ts", ("user_id",), _cooccurrence_pairs,
+        _COOC_OUT_SCHEMA, _COOC_STATE_SCHEMA, _NO_TIMEOUT,
+        """Streaming event-type co-occurrence — the incremental twin of the
+        batch ``events_cooccurrence`` counts (operators/events.py): keyed
+        state holds each user's seen-type set (≤|types| strings, an
+        enum-bounded NOT history-bounded state), and a first sighting of a
+        type emits one increment per previously-seen type.  Summed emissions
+        equal the batch distinct-(user, pair) counts over any replay —
+        including redelivery, since repeats are absorbed by the set
+        (test-pinned).  One shuffle on user_id per micro-batch; emission
+        volume is bounded by |types|² per user EVER, not per batch.""",
+    ),
+    "streaming_scd2_intervals": TwinSpec(
+        "events", _TYPED_EVENTS, "ts", ("user_id",), _scd2_intervals,
+        _SCD2_OUT_SCHEMA, _SCD2_STATE_SCHEMA, _NO_TIMEOUT,
+        """Streaming SCD type-2 maintenance — the incremental twin of the
+        batch ``scd2_intervals`` operator (operators/warehouse.py): the
+        classic warehouse job of applying a CDC feed to a dimension-history
+        table without rebuilding it.
+
+        Keyed state is ONE open interval per key (fixed width — never the
+        key's history), so memory is O(|live keys|), the same bound the
+        dimension table itself has; one shuffle on user_id per micro-batch.
+        Closed intervals are emitted exactly once and are final — exactly
+        the append stream an SCD2 table sink wants; the open interval is
+        re-emitted with NULL valid_to_us and superseded by its closed form
+        at the next change (newest-emission-per-(key, valid_from) is the
+        current table, mirroring ``streaming_latest_snapshot``'s changelog
+        contract).  (ts_us, event_id)-race absorption makes full-backlog
+        redelivery a no-op (test-pinned in tests/test_streaming.py).""",
+    ),
+    "streaming_dau_wau": TwinSpec(
+        "events", ("user_id", "ts"), "ts", ("user_id",), _activity_days,
+        _ACTIVITY_OUT_SCHEMA, _ACTIVITY_STATE_SCHEMA, _NO_TIMEOUT,
+        """Streaming activity-distinct feed — the incremental twin of the
+        batch ``events_dau_wau`` operator's core (operators/events.py): that
+        op's entire decomposition rides on the distinct (user, active-day)
+        frame; this maintains that frame incrementally, emitting each (user,
+        day) exactly once.  Downstream DAU is a per-day count of emissions
+        and WAU a count over each day's trailing 7 — plain stateless
+        aggregations of this append stream (the same constant 7× explode,
+        applied to a stream that only ever grows by first sightings).
+
+        Keyed state is the user's seen-day set — bounded by |days in
+        retention|, NOT event volume (a user's thousandth event on a day
+        adds nothing); one shuffle on user_id per micro-batch.  Set
+        absorption makes full-backlog redelivery a no-op (test-pinned in
+        tests/test_streaming.py).""",
+    ),
+    "streaming_session_path_trigrams": TwinSpec(
+        "events", _TYPED_EVENTS, "ts", ("user_id",), _path_trigram_counts,
+        _PATH_OUT_SCHEMA, _PATH_STATE_SCHEMA, _NO_TIMEOUT,
+        """Streaming within-session path trigrams — the incremental twin of
+        the batch ``session_path_trigrams`` top-k's count core
+        (operators/behavior.py:session_trigram_counts): keyed state is the
+        current session's trailing TWO events per user (fixed width — never
+        the whole path), bridging both micro-batch boundaries and session
+        boundaries; emissions are per-batch partial (trigram, n) counts
+        that sum to the batch counts over any in-order replay, including a
+        time-ordered multi-batch split (test-pinned).
+
+        State is O(|live users|) six-field tuples; each micro-batch
+        shuffles once on user_id.  The batch op needs the whole session
+        collected to zip — the stream never holds more than two events per
+        key, which is the property that matters on an unbounded stream.""",
+    ),
+    "streaming_funnel_delays": TwinSpec(
+        "events", _TYPED_EVENTS, "ts", ("user_id",),
+        _make_funnel_delays(_FUNNEL_ATTR_FROM, _FUNNEL_ATTR_TO),
+        _FUNNEL_OUT_SCHEMA, _FUNNEL_STATE_SCHEMA, _NO_TIMEOUT,
+        """Streaming conversion-delay feed — the incremental twin of the
+        batch ``events_funnel_conversion_time`` core (operators/behavior.py):
+        that op reduces per-user first-entry/first-conversion timestamps to
+        one percentile row; this emits each converted user's delay exactly
+        once, and the batch op's delay SET equals the emission set over any
+        replay — including full-backlog redelivery, which the converted
+        latch absorbs (test-pinned).  Downstream percentiles are a plain
+        stateless aggregation of this append stream.
+
+        Keyed state is two fixed-width fields per user; one user_id shuffle
+        per micro-batch.""",
+    ),
+    "streaming_first_ship_sla": TwinSpec(
+        "lineitem", ("l_orderkey", "l_linenumber", "l_shipdate"), "l_shipdate",
+        ("l_orderkey",), _first_ship_per_order, _FIRSTSHIP_OUT_SCHEMA,
+        _FIRSTSHIP_STATE_SCHEMA, _NO_TIMEOUT,
+    ),
+    "streaming_session_entries": TwinSpec(
+        "events", _TYPED_EVENTS, "ts", ("user_id",), _sessionize_entries,
+        _ENTRY_OUT_SCHEMA, _ENTRY_STATE_SCHEMA, _EVENT_TIME,
+        """Streaming session-entry feed — the incremental twin of the
+        ``session_bounce_rate`` core: closed sessions arrive as
+        (entry_type, bounds, n_events) rows, so per-entry-type bounce
+        rates downstream are one stateless aggregate of this append stream
+        (bounce = n_events == 1).  Same gap rule, timeout closure, and
+        (ts, event_id) entry race as the batch windows — pinned batch-equal
+        over replay in tests.""",
+    ),
+    "streaming_session_depth": TwinSpec(
+        "events", ("user_id", "ts", "event_type"), "ts", ("user_id",),
+        _sessionize_depth, _DEPTH_OUT_SCHEMA, _DEPTH_STATE_SCHEMA, _EVENT_TIME,
+        """Streaming session-depth feed — the incremental twin of the
+        ``session_depth_conversion`` core: closed sessions arrive as
+        (bounds, n_events, converted) rows, so depth-bucket conversion
+        rates downstream are one stateless aggregate of this append
+        stream.  Same gap rule and timeout closure as the batch windows —
+        pinned batch-equal over replay in tests.""",
+    ),
+    "streaming_first_touch": TwinSpec(
+        "events", _TYPED_EVENTS, "ts", ("user_id",), _first_touch_per_user,
+        _FIRSTTOUCH_OUT_SCHEMA, _FIRSTTOUCH_STATE_SCHEMA, _NO_TIMEOUT,
+        """Streaming first-touch feed — the incremental twin of the batch
+        ``user_first_touch_attribution`` first-pick core
+        (operators/behavior.py): each user's acquisition event arrives as a
+        running-min changelog row, so the per-channel attribution rollup
+        downstream is one stateless aggregate over the newest emission per
+        user (which matches the batch rank-window pick exactly —
+        test-pinned, including under full-backlog redelivery).
+
+        Scale: state is one fixed-width triple per user, no timeout (a
+        user's first touch must survive idle periods — memory is O(|users|),
+        the bound the downstream attribution table has anyway); one user_id
+        shuffle per micro-batch.""",
+    ),
+    "streaming_pair_latency": TwinSpec(
+        "events", _TYPED_EVENTS, "ts", ("user_id",), _pair_latency_sums,
+        _PAIR_LATENCY_OUT_SCHEMA, _PAIR_LATENCY_STATE_SCHEMA, _NO_TIMEOUT,
+        """Streaming type→type hand-off latency — the incremental twin of
+        the batch ``event_pair_latency`` count/total core
+        (operators/behavior.py): per-batch partial (n_pairs, total_gap_us)
+        rows per (prev, next) type pair; summing partials over any in-order
+        replay reproduces the batch lag window's exact BIGINT counts and
+        gap totals (test-pinned, including a time-ordered multi-batch
+        split).  The batch op's percentile columns are deliberately NOT
+        streamed — interpolated quantiles aren't mergeable partials; at
+        100 TB the streaming side feeds a t-digest/approx sketch instead.
+
+        Scale: state is one fixed-width (ts_us, event_id, type) tuple per
+        user, no timeout; each micro-batch shuffles once on user_id and
+        emits at most |types|² rows per user.""",
+    ),
+    "streaming_intersession_gaps": TwinSpec(
+        "events", ("user_id", "event_id", "ts"), "ts", ("user_id",),
+        _intersession_gap_sums, _INTERSESSION_OUT_SCHEMA,
+        _INTERSESSION_STATE_SCHEMA, _NO_TIMEOUT,
+        """Streaming return-latency — the incremental twin of the batch
+        ``user_intersession_gap_stats`` count/total core
+        (operators/behavior.py): per-batch partial (n_gaps, total_gap_us)
+        rows per user; summing partials over any in-order replay
+        reproduces the batch op's exact BIGINT gap count and total (users
+        with no completed gap never emit, so the users-that-emitted set IS
+        n_users_multi).  The batch op's p50/p90 columns are deliberately
+        NOT streamed — interpolated quantiles aren't mergeable partials
+        (the pair-latency precedent); at 100 TB the streaming side feeds a
+        t-digest/approx sketch instead.
+
+        Scale: state is one fixed-width (ts_us, event_id) tuple per user,
+        no timeout; each micro-batch shuffles once on user_id and emits at
+        most one partial row per user.""",
+    ),
+    "streaming_session_starts": TwinSpec(
+        "events", ("user_id", "event_id", "ts"), "ts", ("user_id",),
+        _session_start_marks, _SESSION_STARTS_OUT_SCHEMA,
+        _INTERSESSION_STATE_SCHEMA, _NO_TIMEOUT,
+        """Streaming session-count changelog — the incremental twin of
+        ``user_session_count_histogram``'s per-user session counts
+        (operators/behavior.py): one append-only mark per session the gap
+        rule opens; COUNT(marks) per user over any in-order replay equals
+        the batch 1 + Σ is_new, and the histogram is a downstream regroup
+        of those counts (batch-equality pinned).  Unlike the partial-sum
+        twins each mark is emitted exactly once, so the changelog is also
+        a session-start event stream (rate rollups, alerting) for free.
+
+        Scale: state is one fixed-width (ts_us, event_id) tuple per user,
+        no timeout; at most one shuffle per micro-batch on user_id.""",
+    ),
+    "streaming_weekly_conversion": TwinSpec(
+        "events", ("user_id", "ts", "event_type"), "ts", ("user_id",),
+        _weekly_conversion_marks, _WEEKLY_CONV_OUT_SCHEMA,
+        _WEEKLY_CONV_STATE_SCHEMA, _NO_TIMEOUT,
+        """Streaming conditional-distinct feed — the incremental twin of
+        the batch ``weekly_conversion_trend`` distinct core
+        (operators/behavior.py): n_active and n_buyers are per-week
+        COUNT(DISTINCT user) and COUNT(DISTINCT user WHERE purchased),
+        and this maintains both incrementally, emitting each (user, week)
+        at most once per kind ('active' on first sighting, 'buyer' on
+        first purchase sighting) — the ``streaming_dau_wau`` seen-set
+        pattern extended to a CONDITIONAL distinct.  Downstream, the batch
+        table's distinct columns are a stateless per-week count of each
+        kind and conversion_share their ratio (test-pinned, including
+        under full-backlog redelivery — set absorption makes replay a
+        no-op).  The batch op's n_purchases/purchase_value columns are
+        plain sums any stateless streaming aggregate carries; the stateful
+        part worth a kernel is the distinct pair.
+
+        Scale: state is two week-sets per user — bounded by |weeks in
+        retention|, never event volume; one user_id shuffle per
+        micro-batch.""",
+    ),
+    "streaming_order_close": TwinSpec(
+        "lineitem", ("l_orderkey", "l_linenumber", "l_shipdate"), None,
+        ("l_orderkey",), _order_close_per_order, _ORDERCLOSE_OUT_SCHEMA,
+        _ORDERCLOSE_STATE_SCHEMA, _NO_TIMEOUT,
+        """Streaming order-close feed — the incremental twin of the batch
+        ``orders_inflight_monthly`` span core (operators/warehouse.py):
+        that op's sweep-line ledger needs each order's LAST ship day (the
+        orderkey-keyed MAX); this maintains it as a running-max changelog,
+        so the downstream in-flight ledger is a stateless ±1 delta
+        aggregate over the newest emission per order plus the orders-side
+        start days.  Newest-emission-per-order equals the batch MAX
+        exactly (test-pinned, including under full-backlog redelivery —
+        non-advancing rows lose the max race and emit nothing).
+
+        Scale: state is one fixed-width (day, line) pair per live order —
+        the bound the in-flight working set has anyway; one orderkey
+        shuffle per micro-batch.""",
+    ),
+    "streaming_growth_accounting": TwinSpec(
+        "events", ("user_id", "ts"), "ts", ("user_id",), _growth_class_diff,
+        _GROWTH_OUT_SCHEMA, _GROWTH_STATE_SCHEMA, _NO_TIMEOUT,
+        """Streaming growth-accounting feed — the incremental twin of the
+        batch ``user_growth_accounting`` classifier
+        (operators/behavior.py): each (user, active-week) carries a
+        NEW / RETAINED / RESURRECTED class, and this maintains the
+        classification as a versioned changelog that RECLASSIFIES when
+        late or out-of-order weeks land (the first twin whose state
+        transition rewrites neighbours rather than racing one scalar).
+        Downstream, the batch op's n_new/n_retained/n_resurrected columns
+        are a stateless per-week count over the newest (max-ver) row per
+        (user, week) — test-pinned, including under an out-of-order
+        two-file split and full-backlog redelivery.  Churn attribution is
+        deliberately NOT streamed: "went silent in week w" is decidable
+        only at week close, i.e. by the same watermark-delayed rollup any
+        batch pass does.
+
+        Scale: state is one calendar-bounded week array + version per
+        user; one user_id shuffle per micro-batch.""",
+    ),
+    "streaming_cohort_retention": TwinSpec(
+        "orders", ("o_custkey", "o_orderdate"), "o_orderdate", ("o_custkey",),
+        _cohort_assign_diff, _COHORT_OUT_SCHEMA, _COHORT_STATE_SCHEMA,
+        _NO_TIMEOUT,
+        """Streaming cohort-assignment feed — the incremental twin of the
+        batch ``customer_cohort_retention`` triangle
+        (operators/relational_tpch2.py): each (customer, active-month)
+        carries its (cohort_month, month_offset) cell, maintained as a
+        versioned changelog that RECLASSIFIES when late orders land (the
+        second reclassifying twin after ``streaming_growth_accounting`` —
+        and the stronger case: an earlier first order rewrites EVERY cell
+        of the customer, not just neighbours).  Downstream, the batch
+        op's n_active/cohort_size/retention_share columns are a stateless
+        count over the newest (max-ver) row per (customer, month) —
+        test-pinned, including under an out-of-order two-file split and
+        full-backlog redelivery.
+
+        Scale: state is one calendar-bounded month array + version per
+        customer; one o_custkey shuffle per micro-batch.""",
+    ),
+    "streaming_topk_words": TwinSpec(
+        "documents", None, None, ("shard",), _space_saving_counts,
+        _TOPK_WORDS_OUT_SCHEMA, _TOPK_WORDS_STATE_SCHEMA, _NO_TIMEOUT,
+    ),
+    "streaming_funnel_attribution": TwinSpec(
+        "events", ("user_id", "ts", "event_type"), "ts", ("user_id",),
+        _funnel_attribution_diff, _FUNNEL_ATTR_OUT_SCHEMA,
+        _FUNNEL_ATTR_STATE_SCHEMA, _NO_TIMEOUT,
+    ),
+    "streaming_daily_uniques_hll": TwinSpec(
+        "events", None, "ts", ("epoch_day",), _hll_day_registers,
+        _HLL_OUT_SCHEMA, _HLL_STATE_SCHEMA, _NO_TIMEOUT,
+    ),
+    "streaming_active_streaks": TwinSpec(
+        "events", ("user_id", "ts"), "ts", ("user_id",), _streak_diff,
+        _STREAK_OUT_SCHEMA, _STREAK_STATE_SCHEMA, _NO_TIMEOUT,
+        """Streaming longest-activity-streak feed — the incremental twin of
+        batch ``user_active_streaks`` (operators/behavior.py): each user
+        carries the length of their longest consecutive-week run, and this
+        maintains it as a versioned changelog whose newest (max-ver) row
+        per user always equals the batch value over everything delivered.
+        The batch op's histogram (streak_weeks, n_users, user_share) is a
+        stateless regroup of those newest rows — test-pinned, including
+        under a planted out-of-order delivery that exercises the
+        streak-MERGE path (late gap week joins two islands; the streak
+        jumps superadditively) and full-backlog redelivery (week-set
+        absorption emits nothing).
+
+        Scale: state is one calendar-bounded week array + version per
+        user; one user_id shuffle per micro-batch — same envelope as
+        ``streaming_growth_accounting``, which shares the week-set state
+        but classifies per-week rather than reducing to one scalar.""",
+    ),
+    "streaming_hourly_load_percentiles": TwinSpec(
+        "events", ("event_type", "ts"), "ts", ("event_type",),
+        _hourly_load_pctl, _HOURLY_PCTL_OUT_SCHEMA, _HOURLY_PCTL_STATE_SCHEMA,
+        _NO_TIMEOUT,
+        """Streaming EXACT hourly-load percentiles — the incremental twin
+        of batch ``events_hourly_load_percentiles`` (operators/behavior.py)
+        and the first twin to emit percentile columns: the newest (max-ver)
+        row per event type carries bit-identical n_hours / max_load /
+        p50/p90/p99 to the batch op over everything delivered (the
+        interpolation is the exact formula both engines use, pinned by
+        tests/test_quantile_interp_parity.py).  The pair-latency and
+        intersession twins deliberately left their percentile columns
+        batch-only because their input multisets are DATA-sized (one gap
+        per event); here the multiset is the (hour → count) ledger —
+        CALENDAR-bounded — so the whole thing rides in state and the
+        percentiles stream exactly, no sketch needed (the batch registry's
+        ``events_hourly_load_percentiles_approx`` remains the unbounded-
+        horizon fallback).
+
+        Scale: state is one cell per (type, active hour) — ~9k cells per
+        type-year at any traffic volume; one event_type shuffle per
+        micro-batch.""",
+    ),
+    "streaming_table_digest": TwinSpec(
+        "documents", None, None, ("table_name", "shard"),
+        _table_digest_partials, _TABLE_DIGEST_OUT_SCHEMA,
+        _TABLE_DIGEST_STATE_SCHEMA, _NO_TIMEOUT,
+    ),
+}
+
+
+def _table_twin(name: str, spec: TwinSpec) -> Callable:
+    """The public twin for a row without a ``def`` of its own."""
+
+    def twin(
+        spark: SparkSession,
+        sf_dir: str,
+        glob: str = f"{spec.table}.parquet",
+        max_files_per_trigger: int | None = None,
+    ) -> DataFrame:
+        return keyed_state(
+            read_table_stream(
+                spark, sf_dir, spec.table, glob, max_files_per_trigger
+            ),
+            name,
+        )
+
+    twin.__name__ = twin.__qualname__ = name
+    # the row's literal sits one indent deeper than a def's docstring
+    twin.__doc__ = spec.doc.replace("\n    ", "\n")
+    return twin
+
+
+globals().update(
+    (name, _table_twin(name, spec))
+    for name, spec in STATEFUL_TWINS.items()
+    if spec.doc is not None
 )

@@ -18,6 +18,10 @@ own pandas path and its values-identical fallback).  Everything else,
 including zero-row early returns (kept uniform so a future copy-paste of
 one can't reintroduce the slow path on a hot site), goes through the
 helper.
+
+The same walker holds ``applyInPandasWithState`` to one call site, inside
+``streaming.stateful.keyed_state``: a keyed-state twin is a row of that
+module's spec table, not a new copy of the wiring.
 """
 
 from __future__ import annotations
@@ -31,30 +35,55 @@ PKG = os.path.join(
     "googlecloudstorage_blueprints_spark",
 )
 
-ALLOWED = {os.path.join("functions", "frames.py")}
+# call name -> the (file, enclosing def) sites allowed to make it; a
+# ``None`` def allows the whole file
+ALLOWED = {
+    "createDataFrame": {(os.path.join("functions", "frames.py"), None)},
+    "applyInPandasWithState": {
+        (os.path.join("streaming", "stateful.py"), "keyed_state")
+    },
+}
 
 
-def _offenders(root: str) -> list[str]:
-    """Real ``createDataFrame(...)`` call nodes under ``root`` outside the
-    allowed helper; text in docstrings and comments is not a call."""
-    offenders = []
+def _sites(root: str, call: str) -> list[tuple[str, str | None, str]]:
+    """(file, enclosing def, ``file:line: source``) for every real
+    ``call(...)`` node under ``root``; text in docstrings and comments is
+    not a call."""
+    sites = []
     for path in sorted(
         glob.glob(os.path.join(root, "**", "*.py"), recursive=True)
     ):
         rel = os.path.relpath(path, root)
-        if rel in ALLOWED:
-            continue
         with open(path) as fh:
             src = fh.read()
         lines = src.splitlines()
-        offenders += [
-            f"{rel}:{node.lineno}: {lines[node.lineno - 1].strip()}"
-            for node in ast.walk(ast.parse(src))
-            if isinstance(node, ast.Call)
-            and getattr(node.func, "attr", getattr(node.func, "id", None))
-            == "createDataFrame"
+        found, stack = [], [(ast.parse(src), None)]
+        while stack:
+            node, fn = stack.pop()
+            for child in ast.iter_child_nodes(node):
+                if isinstance(child, ast.Call) and getattr(
+                    child.func, "attr", getattr(child.func, "id", None)
+                ) == call:
+                    found.append((child.lineno, fn))
+                is_def = isinstance(
+                    child, (ast.FunctionDef, ast.AsyncFunctionDef)
+                )
+                stack.append((child, child.name if is_def else fn))
+        sites += [
+            (rel, fn, f"{rel}:{ln}: {lines[ln - 1].strip()}")
+            for ln, fn in sorted(found, key=lambda site: site[0])
         ]
-    return offenders
+    return sites
+
+
+def _offenders(root: str, call: str = "createDataFrame") -> list[str]:
+    """``call(...)`` sites under ``root`` outside its allowed sites."""
+    allowed = ALLOWED[call]
+    return [
+        text
+        for rel, fn, text in _sites(root, call)
+        if (rel, None) not in allowed and (rel, fn) not in allowed
+    ]
 
 
 def test_lint_flags_calls_not_mentions(tmp_path):
@@ -74,6 +103,19 @@ def test_lint_flags_calls_not_mentions(tmp_path):
     ]
 
 
+def test_lint_allows_a_call_only_in_its_def(tmp_path):
+    (tmp_path / "streaming").mkdir()
+    (tmp_path / "streaming" / "stateful.py").write_text(
+        "def keyed_state(g, k):\n"
+        "    return g.applyInPandasWithState(k)\n"
+        "def twin(g, k):\n"
+        "    return g.applyInPandasWithState(k)\n"
+    )
+    assert _offenders(str(tmp_path), "applyInPandasWithState") == [
+        "streaming/stateful.py:4: return g.applyInPandasWithState(k)"
+    ]
+
+
 def test_no_direct_createdataframe_outside_frames_helper():
     offenders = _offenders(PKG)
     assert not offenders, (
@@ -81,3 +123,15 @@ def test_no_direct_createdataframe_outside_frames_helper():
         "sets through functions.frames.local_rows_frame instead:\n"
         + "\n".join(offenders)
     )
+
+
+def test_one_keyed_state_call_site():
+    """Every keyed-state twin goes through ``streaming.stateful
+    .keyed_state``: its ``applyInPandasWithState`` is the package's
+    only one, so a twin is a row of ``STATEFUL_TWINS``, not new wiring."""
+    offenders = _offenders(PKG, "applyInPandasWithState")
+    assert not offenders, (
+        "applyInPandasWithState outside streaming.stateful.keyed_state — "
+        "add a STATEFUL_TWINS row instead:\n" + "\n".join(offenders)
+    )
+    assert len(_sites(PKG, "applyInPandasWithState")) == 1

@@ -34,7 +34,7 @@ from googlecloudstorage_blueprints_spark.operators import (
     all_queries,
 )
 from googlecloudstorage_blueprints_spark.sources.catalog import TABLES
-from tests.parity import duck_con
+from tests.parity import assert_parity, compare
 
 SF = "/root/testdata/sf0.001"
 
@@ -58,23 +58,6 @@ def _planted_dir(tmp_path, replace: dict):
         else:
             shutil.copy(f"{SF}/{t}.parquet", out / f"{t}.parquet")
     return str(out)
-
-
-def _driver_compare(spark, sf_dir: str, name: str):
-    """The driver-style hash compare: sorted stringified cells."""
-    sdf = _q()[name](spark, sf_dir)
-    scols = sorted(sdf.columns)
-    srows = sorted(
-        tuple(str(r[c]) for c in scols) for r in sdf.collect()
-    )
-    con = duck_con(sf_dir)
-    res = con.sql(all_oracles()[name])
-    ocols = list(res.columns)
-    idx = [ocols.index(c) for c in sorted(ocols)]
-    orows = sorted(
-        tuple(str(row[i]) for i in idx) for row in res.fetchall()
-    )
-    return srows, orows
 
 
 def test_global_sales_opportunity_planted_prospects(spark, tmp_path):
@@ -109,11 +92,10 @@ def test_global_sales_opportunity_planted_prospects(spark, tmp_path):
         [base.select(extra.column_names), extra]
     )
     sf_dir = _planted_dir(tmp_path, {"customer": planted})
-    srows, orows = _driver_compare(
-        spark, sf_dir, "global_sales_opportunity"
-    )
-    assert srows == orows
-    assert len(srows) > 0
+    name = "global_sales_opportunity"
+    v = compare(spark, sf_dir, _q()[name], all_oracles()[name])
+    assert_parity(v, name)
+    assert len(v.rows) > 0
     # only the three planted prospects qualify (never ordered, rich);
     # every row's count/total reflects exactly them
     got = {
@@ -181,10 +163,10 @@ def test_label_separation_planted_orthogonal_clusters(spark, tmp_path):
         }
     )
     sf_dir = _planted_dir(tmp_path, {"embeddings": tbl})
-    srows, orows = _driver_compare(
-        spark, sf_dir, "embedding_label_separation"
-    )
-    assert srows == orows and len(srows) == 2
+    name = "embedding_label_separation"
+    v = compare(spark, sf_dir, _q()[name], all_oracles()[name])
+    assert_parity(v, name)
+    assert len(v.rows) == 2
     rows = _q()["embedding_label_separation"](spark, sf_dir).collect()
     for r in rows:
         assert r["intra_cos"] == pytest.approx(1.0, abs=1e-6)
@@ -213,8 +195,9 @@ def test_prefix_dup_planted_template_docs(spark, tmp_path):
     )
     planted = pa.concat_tables([base.select(extra.column_names), extra])
     sf_dir = _planted_dir(tmp_path, {"documents": planted})
-    srows, orows = _driver_compare(spark, sf_dir, "doc_prefix_dup_share")
-    assert srows == orows
+    name = "doc_prefix_dup_share"
+    v = compare(spark, sf_dir, _q()[name], all_oracles()[name])
+    assert_parity(v, name)
     got = {
         r["source"]: r
         for r in _q()["doc_prefix_dup_share"](spark, sf_dir).collect()

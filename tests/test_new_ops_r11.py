@@ -36,7 +36,7 @@ from googlecloudstorage_blueprints_spark.operators import (
     all_queries,
 )
 from googlecloudstorage_blueprints_spark.sources.catalog import TABLES
-from tests.parity import duck_con
+from tests.parity import assert_parity, compare
 
 SF = "/root/testdata/sf0.001"
 
@@ -61,22 +61,6 @@ def _planted_dir(tmp_path, replace: dict):
         else:
             shutil.copy(f"{SF}/{t}.parquet", out / f"{t}.parquet")
     return str(out)
-
-
-def _driver_compare(spark, sf_dir: str, name: str):
-    sdf = _q()[name](spark, sf_dir)
-    scols = sorted(sdf.columns)
-    srows = sorted(
-        tuple(str(r[c]) for c in scols) for r in sdf.collect()
-    )
-    con = duck_con(sf_dir)
-    res = con.sql(all_oracles()[name])
-    ocols = list(res.columns)
-    idx = [ocols.index(c) for c in sorted(ocols)]
-    orows = sorted(
-        tuple(str(row[i]) for i in idx) for row in res.fetchall()
-    )
-    return srows, orows
 
 
 def _events_table(rows):
@@ -124,10 +108,9 @@ def test_events_duplicate_check_planted_delta(spark, tmp_path):
     assert got["view"]["max_multiplicity"] == 3
     assert got["purchase"]["n_dup_groups"] == 0
     assert got["purchase"]["max_multiplicity"] == 1
-    srows, orows = _driver_compare(
-        spark, sf, "events_duplicate_check"
-    )
-    assert srows == orows
+    name = "events_duplicate_check"
+    v = compare(spark, sf, _q()[name], all_oracles()[name])
+    assert_parity(v, name)
 
 
 def test_user_gap_survival_planted_gaps(spark, tmp_path):
@@ -149,8 +132,9 @@ def test_user_gap_survival_planted_gaps(spark, tmp_path):
     assert got[3]["n_exceed"] == 1
     assert got[7]["n_exceed"] == 1
     assert got[1]["survival_share"] == pytest.approx(2 / 3)
-    srows, orows = _driver_compare(spark, sf, "user_gap_survival")
-    assert srows == orows
+    name = "user_gap_survival"
+    v = compare(spark, sf, _q()[name], all_oracles()[name])
+    assert_parity(v, name)
 
 
 def test_events_wow_growth_silent_week_zero_then_null(
@@ -172,8 +156,9 @@ def test_events_wow_growth_silent_week_zero_then_null(
     assert by_week[0]["n_events"] == 2 and by_week[0]["wow_ratio"] is None
     assert by_week[1]["n_events"] == 0 and by_week[1]["wow_ratio"] == 0.0
     assert by_week[2]["n_events"] == 1 and by_week[2]["wow_ratio"] is None
-    srows, orows = _driver_compare(spark, sf, "events_wow_growth")
-    assert srows == orows
+    name = "events_wow_growth"
+    v = compare(spark, sf, _q()[name], all_oracles()[name])
+    assert_parity(v, name)
 
 
 def test_user_entropy_buckets_closed_form(spark, tmp_path):
@@ -197,8 +182,9 @@ def test_user_entropy_buckets_closed_form(spark, tmp_path):
     assert got[3]["n_users"] == 1
     assert got[3]["min_entropy_e6"] == 693147
     assert got[3]["avg_events_per_user"] == pytest.approx(4.0)
-    srows, orows = _driver_compare(spark, sf, "user_entropy_buckets")
-    assert srows == orows
+    name = "user_entropy_buckets"
+    v = compare(spark, sf, _q()[name], all_oracles()[name])
+    assert_parity(v, name)
 
 
 def test_order_line_status_matrix_shares_sum_to_one(spark):
@@ -325,10 +311,9 @@ def test_segment_balance_spend_corr_planted_perfect(spark, tmp_path):
     }
     assert got["SEG1"] == pytest.approx(1.0)
     assert got["SEG2"] == pytest.approx(1.0)
-    srows, orows = _driver_compare(
-        spark, sf, "segment_balance_spend_corr"
-    )
-    assert srows == orows
+    name = "segment_balance_spend_corr"
+    v = compare(spark, sf, _q()[name], all_oracles()[name])
+    assert_parity(v, name)
 
 
 def test_events_hourly_load_percentiles_closed_form(spark, tmp_path):
@@ -348,10 +333,9 @@ def test_events_hourly_load_percentiles_closed_form(spark, tmp_path):
     ).collect()
     assert r["n_hours"] == 3 and r["max_load"] == 3
     assert r["p50_load"] == pytest.approx(2.0)
-    srows, orows = _driver_compare(
-        spark, sf, "events_hourly_load_percentiles"
-    )
-    assert srows == orows
+    name = "events_hourly_load_percentiles"
+    v = compare(spark, sf, _q()[name], all_oracles()[name])
+    assert_parity(v, name)
 
 
 def _documents_table(rows):
@@ -389,10 +373,9 @@ def test_doc_repeated_token_runs_planted_loop(spark, tmp_path):
     assert got["sA"]["looping_share"] == pytest.approx(0.5)
     assert got["sB"]["longest_run"] == 1
     assert got["sB"]["n_docs_looping"] == 0
-    srows, orows = _driver_compare(
-        spark, sf, "doc_repeated_token_runs"
-    )
-    assert srows == orows
+    name = "doc_repeated_token_runs"
+    v = compare(spark, sf, _q()[name], all_oracles()[name])
+    assert_parity(v, name)
 
 
 def test_doc_first_token_profile_planted_template(spark, tmp_path):
@@ -417,10 +400,9 @@ def test_doc_first_token_profile_planted_template(spark, tmp_path):
     assert got["mix"]["top_share"] == pytest.approx(0.5)
     # deterministic tiebreak: (cnt DESC, tok ASC) -> 'alpha'
     assert got["mix"]["top_first_token"] == "alpha"
-    srows, orows = _driver_compare(
-        spark, sf, "doc_first_token_profile"
-    )
-    assert srows == orows
+    name = "doc_first_token_profile"
+    v = compare(spark, sf, _q()[name], all_oracles()[name])
+    assert_parity(v, name)
 
 
 def test_length_curriculum_stages_partitions_and_cumulates(spark):
@@ -602,8 +584,9 @@ def test_sessionize_gap_sensitivity_closed_form(spark, tmp_path):
     assert got[60]["n_sessions"] == 2
     assert got[15]["events_per_session"] == pytest.approx(4 / 3)
     assert got[60]["events_per_session"] == pytest.approx(2.0)
-    srows, orows = _driver_compare(spark, sf, "sessionize_gap_sensitivity")
-    assert srows == orows
+    name = "sessionize_gap_sensitivity"
+    v = compare(spark, sf, _q()[name], all_oracles()[name])
+    assert_parity(v, name)
 
 
 def test_source_lang_entropy_closed_form(spark, tmp_path):
@@ -634,8 +617,9 @@ def test_source_lang_entropy_closed_form(spark, tmp_path):
     assert got["duo"]["entropy_e6"] == 693147  # round(ln(2)*1e6)
     assert got["duo"]["top_lang"] == "en"  # tied count, lexicographic
     assert got["duo"]["top_lang_share"] == pytest.approx(0.5)
-    srows, orows = _driver_compare(spark, sf, "source_lang_entropy")
-    assert srows == orows
+    name = "source_lang_entropy"
+    v = compare(spark, sf, _q()[name], all_oracles()[name])
+    assert_parity(v, name)
 
 
 def test_dedup_threshold_sensitivity_planted_mid_jaccard(spark, tmp_path):
@@ -668,10 +652,9 @@ def test_dedup_threshold_sensitivity_planted_mid_jaccard(spark, tmp_path):
     assert got[90]["n_pairs"] == 0  # 17*100 < 90*19
     assert got[90]["n_docs_flagged"] == 0
     assert got[90]["flagged_share"] == 0.0
-    srows, orows = _driver_compare(
-        spark, sf, "dedup_threshold_sensitivity"
-    )
-    assert srows == orows
+    name = "dedup_threshold_sensitivity"
+    v = compare(spark, sf, _q()[name], all_oracles()[name])
+    assert_parity(v, name)
 
 
 def test_tokenizer_fertility_closed_form(spark, tmp_path):
@@ -698,8 +681,9 @@ def test_tokenizer_fertility_closed_form(spark, tmp_path):
     xx = got[("xx", "s2")]
     assert xx["sum_bpe_tokens"] == 0
     assert xx["chars_per_bpe_token"] is None  # NULLIF, not inf
-    srows, orows = _driver_compare(spark, sf, "tokenizer_fertility_by_lang")
-    assert srows == orows
+    name = "tokenizer_fertility_by_lang"
+    v = compare(spark, sf, _q()[name], all_oracles()[name])
+    assert_parity(v, name)
 
 
 def test_context_window_coverage_closed_form(spark, tmp_path):
@@ -729,7 +713,6 @@ def test_context_window_coverage_closed_form(spark, tmp_path):
     assert got[128]["kept_tokens"] == 150
     assert got[128]["kept_share"] == pytest.approx(1.0)
     assert got[32]["fit_share"] == pytest.approx(1 / 3)
-    srows, orows = _driver_compare(
-        spark, sf, "doc_context_window_coverage"
-    )
-    assert srows == orows
+    name = "doc_context_window_coverage"
+    v = compare(spark, sf, _q()[name], all_oracles()[name])
+    assert_parity(v, name)

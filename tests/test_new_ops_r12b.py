@@ -24,9 +24,12 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from googlecloudstorage_blueprints_spark.operators import all_queries
+from googlecloudstorage_blueprints_spark.operators import (
+    all_oracles,
+    all_queries,
+)
 from googlecloudstorage_blueprints_spark.sources.catalog import TABLES
-from tests.parity import duck_con
+from tests.parity import assert_parity, compare
 
 SF = "/root/testdata/sf0.001"
 
@@ -107,25 +110,6 @@ def test_band_sweep_planted_mid_jaccard_pair_bends_curve(
     )
 
 
-def _driver_compare(spark, sf_dir: str, name: str):
-    from googlecloudstorage_blueprints_spark.operators import all_oracles
-
-    sdf = all_queries()[name](spark, sf_dir)
-    scols = sorted(sdf.columns)
-    srows = sorted(
-        tuple(str(r[c]) for c in scols) for r in sdf.collect()
-    )
-    con = duck_con(sf_dir)
-    res = con.sql(all_oracles()[name])
-    ocols = list(res.columns)
-    idx = [ocols.index(c) for c in sorted(ocols)]
-    orows = sorted(
-        tuple(str(row[i]) for i in idx) for row in res.fetchall()
-    )
-    con.close()
-    return srows, orows
-
-
 def test_contamination_sweep_planted_verbatim_spans(spark, tmp_path):
     """At sf0.01 the 8/13-gram sweep rows read zero (fixture has no
     long verbatim cross-eval spans), so the detection path needs a
@@ -157,10 +141,9 @@ def test_contamination_sweep_planted_verbatim_spans(spark, tmp_path):
     assert got[13]["n_shared_ngrams"] == 1
     # flagged_share over the 3 corpus docs
     assert got[3]["flagged_share"] == pytest.approx(2 / 3)
-    srows, orows = _driver_compare(
-        spark, sf, "contamination_ngram_sensitivity"
-    )
-    assert srows == orows
+    name = "contamination_ngram_sensitivity"
+    v = compare(spark, sf, all_queries()[name], all_oracles()[name])
+    assert_parity(v, name)
 
 
 def test_events_value_psi_planted_drift_and_stability(spark, tmp_path):
@@ -198,8 +181,9 @@ def test_events_value_psi_planted_drift_and_stability(spark, tmp_path):
     assert got["stable"]["n_first"] == got["stable"]["n_second"] == 4
     # full magnitude swap: PSI far beyond the 0.25 alarm line (250000)
     assert got["drift"]["psi_e6"] > 250_000
-    srows, orows = _driver_compare(spark, sf, "events_value_psi")
-    assert srows == orows
+    name = "events_value_psi"
+    v = compare(spark, sf, all_queries()[name], all_oracles()[name])
+    assert_parity(v, name)
 
 
 def _events_table(rows):
@@ -303,10 +287,9 @@ def test_orders_inflight_planted_carry_in_and_peak(spark, tmp_path):
         assert got[m]["n_started"] == got[m]["n_closed"] == 0
     assert got["2024-04"]["open_at_month_end"] == 0
     assert got["2024-04"]["n_closed"] == 1
-    srows, orows = _driver_compare(
-        spark, sf, "orders_inflight_monthly"
-    )
-    assert srows == orows
+    name = "orders_inflight_monthly"
+    v = compare(spark, sf, all_queries()[name], all_oracles()[name])
+    assert_parity(v, name)
 
 
 def test_vocab_topk_coverage_planted_boundary_split(spark, tmp_path):
@@ -336,8 +319,9 @@ def test_vocab_topk_coverage_planted_boundary_split(spark, tmp_path):
         assert got[k]["total_tokens"] == 1450
         assert got[k]["n_vocab"] == 1205
         assert got[k]["coverage"] == got[k]["covered_tokens"] / 1450
-    srows, orows = _driver_compare(spark, sf, "vocab_topk_coverage")
-    assert srows == orows
+    name = "vocab_topk_coverage"
+    v = compare(spark, sf, all_queries()[name], all_oracles()[name])
+    assert_parity(v, name)
 
 
 def test_intersession_gaps_exceed_session_cutoff(spark):

@@ -786,31 +786,24 @@ def test_sessionize_entries_kernel_tags_the_minimal_event(case):
 
 
 def test_every_stateful_kernel_is_property_tested():
-    """Meta-test: every applyInPandasWithState kernel defined in
-    streaming/stateful.py (top-level ``_name(key, pdfs, state)``
-    functions plus ``_make_*`` factories) must be exercised somewhere
-    in THIS file.  Adding a kernel without extending the harness fails
-    here, keeping the r8 invariant (the harness caught a real
-    tied-timestamp bug) as the registry grows."""
-    import inspect
-    import re
-
-    from googlecloudstorage_blueprints_spark.streaming import stateful
-
-    src = inspect.getsource(stateful)
-    kernels = re.findall(
-        r"^def (_[a-z0-9_]+)\(key: tuple, pdfs", src, re.M
+    """Meta-test: the kernel of every ``STATEFUL_TWINS`` row in
+    streaming/stateful.py (a factory-built kernel by its ``_make_*``
+    factory) must be exercised somewhere in THIS file.  Adding a twin
+    without extending the harness fails here, keeping the r8 invariant
+    (the harness caught a real tied-timestamp bug) as the table grows."""
+    from googlecloudstorage_blueprints_spark.streaming.stateful import (
+        STATEFUL_TWINS,
     )
-    factories = re.findall(r"^def (_make_[a-z0-9_]+)\(", src, re.M)
-    assert kernels and factories  # the module keeps its shape
-    harness_src = open(__file__).read()
-    missing = [
-        name
-        for name in kernels + factories
-        if name not in harness_src.replace(
-            "test_every_stateful_kernel_is_property_tested", ""
-        )
-    ]
+
+    # a closure's qualified name starts with the factory that built it
+    kernels = {
+        spec.kernel.__qualname__.split(".")[0]
+        for spec in STATEFUL_TWINS.values()
+    }
+    harness_src = open(__file__).read().replace(
+        "test_every_stateful_kernel_is_property_tested", ""
+    )
+    missing = sorted(name for name in kernels if name not in harness_src)
     assert not missing, f"kernels without property tests: {missing}"
 
 

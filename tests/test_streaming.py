@@ -13,16 +13,15 @@ import pyspark.sql.functions as F
 
 from googlecloudstorage_blueprints_spark.operators import all_queries
 from googlecloudstorage_blueprints_spark.streaming import (
+    merge_digest_rows,
     run_stream_to_memory,
     streaming_dedup,
     streaming_session_window,
     streaming_stateful_sessions,
     streaming_tumbling_agg,
 )
-from tests.test_streaming_pins import (
-    _batch_transition_counts,
-    _merge_digest_rows,
-)
+from tests.landing import Landing, halves
+from tests.test_streaming_pins import _batch_transition_counts
 
 SF = "/root/testdata/sf0.001"
 
@@ -185,26 +184,10 @@ def test_stateful_sessions_across_multiple_microbatches(spark, tmp_path):
     schema = events.schema
     third = n // 3
     chunks = [rows[:third], rows[third : 2 * third], rows[2 * third :]]
-    for i, chunk in enumerate(chunks):
-        spark.createDataFrame(chunk, schema).coalesce(1).write.parquet(
-            f"file:{tmp_path}/ev/part{i}"
-        )
-    # flatten: the file source lists files; one parquet file per subdir
-    import glob as g
-    import shutil
-
-    for i, f in enumerate(
-        sorted(g.glob(f"{tmp_path}/ev/part*/part-*.parquet"))
-    ):
-        shutil.copy(f, f"{tmp_path}/ev/{i:02d}_events.parquet")
-        shutil.rmtree(f.rsplit("/", 1)[0])
-
-    multi = run_stream_to_memory(
-        streaming_stateful_sessions(
-            spark, f"file:{tmp_path}/ev", glob="*.parquet",
-            max_files_per_trigger=1,
-        ),
-        "stateful_multibatch",
+    multi = (
+        Landing(spark, tmp_path)
+        .plant(*(spark.createDataFrame(c, schema) for c in chunks))
+        .replay(streaming_stateful_sessions, "stateful_multibatch")
     )
     multi_rows = {
         (r["user_id"], r["start_us"]): (r["end_us"], r["n_events"])
@@ -304,22 +287,14 @@ def test_streaming_lsh_candidates_across_microbatches(spark, tmp_path):
     )
 
     docs = load_table(spark, SF, "documents")
-    out = f"file:{tmp_path}/docs_replay"
-    # two part files in one directory -> two micro-batches at
-    # maxFilesPerTrigger=1
-    docs.where(F.col("doc_id") % 2 == 0).coalesce(1).write.mode(
-        "append"
-    ).parquet(out)
-    docs.where(F.col("doc_id") % 2 == 1).coalesce(1).write.mode(
-        "append"
-    ).parquet(out)
-    stream_df = streaming_lsh_candidates(
-        spark,
-        out,
-        glob="*.parquet",
-        max_files_per_trigger=1,
+    got = (
+        Landing(spark, tmp_path)
+        .plant(
+            docs.where(F.col("doc_id") % 2 == 0),
+            docs.where(F.col("doc_id") % 2 == 1),
+        )
+        .replay(streaming_lsh_candidates, "lsh_cand_batches")
     )
-    got = run_stream_to_memory(stream_df, "lsh_cand_batches")
     got_pairs = {
         (r["doc_a"], r["doc_b"])
         for r in got.select("doc_a", "doc_b").distinct().collect()
@@ -340,21 +315,16 @@ def test_streaming_lsh_candidates_idempotent_on_redelivery(spark, tmp_path):
     bucket residents before pairing (stateful.py _band_bucket_pairs)."""
     from googlecloudstorage_blueprints_spark.sources.catalog import load_table
     from googlecloudstorage_blueprints_spark.streaming import (
-        run_stream_to_memory,
         streaming_lsh_candidates,
     )
 
     docs = load_table(spark, SF, "documents").where(F.col("doc_id") < 200)
-    out = f"file:{tmp_path}/docs_redeliver"
-    # the same doc set written twice -> two micro-batches at
-    # maxFilesPerTrigger=1, the second a pure replay of the first
-    docs.coalesce(1).write.mode("append").parquet(out)
-    docs.coalesce(1).write.mode("append").parquet(out)
-    got = run_stream_to_memory(
-        streaming_lsh_candidates(
-            spark, out, glob="*.parquet", max_files_per_trigger=1
-        ),
-        "lsh_cand_redeliver",
+    # the same doc set twice -> two micro-batches, the second a pure
+    # replay of the first
+    got = (
+        Landing(spark, tmp_path / "twice")
+        .plant(docs, docs)
+        .replay(streaming_lsh_candidates, "lsh_cand_redeliver")
     )
     emitted = [
         (r["doc_a"], r["doc_b"], r["band_id"])
@@ -364,11 +334,10 @@ def test_streaming_lsh_candidates_idempotent_on_redelivery(spark, tmp_path):
     # pairing, so the raw (non-distinct) emission count equals the
     # distinct pair set size
     assert len(emitted) == len(set(emitted))
-    single_out = f"file:{tmp_path}/docs_once"
-    docs.coalesce(1).write.mode("append").parquet(single_out)
-    single = run_stream_to_memory(
-        streaming_lsh_candidates(spark, single_out, glob="*.parquet"),
-        "lsh_cand_once",
+    single = (
+        Landing(spark, tmp_path / "once")
+        .plant(docs)
+        .replay(streaming_lsh_candidates, "lsh_cand_once")
     )
     expected = {
         (r["doc_a"], r["doc_b"], r["band_id"])
@@ -414,7 +383,6 @@ def test_streaming_gapfill_across_microbatches(spark, tmp_path):
     from googlecloudstorage_blueprints_spark.operators import all_queries
     from googlecloudstorage_blueprints_spark.sources.catalog import load_table
     from googlecloudstorage_blueprints_spark.streaming import (
-        run_stream_to_memory,
         streaming_gapfill,
     )
 
@@ -423,18 +391,13 @@ def test_streaming_gapfill_across_microbatches(spark, tmp_path):
         "date_trunc('hour', timestamp_micros(CAST("
         "percentile_approx(unix_micros(ts), 0.5) AS BIGINT))) AS m"
     ).collect()[0]["m"]
-    out = f"file:{tmp_path}/events_split"
-    events.where(F.col("ts") < F.lit(split)).coalesce(1).write.mode(
-        "append"
-    ).parquet(out)
-    events.where(F.col("ts") >= F.lit(split)).coalesce(1).write.mode(
-        "append"
-    ).parquet(out)
-    got = run_stream_to_memory(
-        streaming_gapfill(
-            spark, out, glob="*.parquet", max_files_per_trigger=1
-        ),
-        "gapfill_batches",
+    got = (
+        Landing(spark, tmp_path)
+        .plant(
+            events.where(F.col("ts") < F.lit(split)),
+            events.where(F.col("ts") >= F.lit(split)),
+        )
+        .replay(streaming_gapfill, "gapfill_batches")
     )
     got_rows = {
         (r["user_id"], r["bucket"], r["observed"], r["filled_value"])
@@ -452,9 +415,6 @@ def test_streaming_gapfill_timer_evicts_idle_users(spark, tmp_path):
     state is evicted: a return after the horizon restarts the grid
     instead of emitting an unbounded catch-up fill."""
     import googlecloudstorage_blueprints_spark.streaming.stateful as st
-    from googlecloudstorage_blueprints_spark.streaming import (
-        run_stream_to_memory,
-    )
 
     base = 1_600_000_000_000_000  # µs, on an hour boundary? normalize below
     base -= base % st.HOUR_US
@@ -466,32 +426,27 @@ def test_streaming_gapfill_timer_evicts_idle_users(spark, tmp_path):
         # user 1 returns 6 hours later — far past the 2h horizon
         (1, base + 6 * st.HOUR_US + 30, 3.0),
     ]
-    out = f"file:{tmp_path}/events_evict"
     # four micro-batches: user 1's return is ALONE in the last one — a
     # key with arriving data is never handed hasTimedOut=True, so the
     # eviction must fire in a batch where user 1 is silent (batch 3)
+    land = Landing(spark, tmp_path)
     for off, chunk in (
         (0, rows[:1]),
         (100, rows[1:6]),
         (200, rows[6:8]),
         (300, rows[8:]),
     ):
-        spark.createDataFrame(
-            [(off + i, r[0], r[1], r[2]) for i, r in enumerate(chunk)],
-            "event_id long, user_id long, ts_us long, value double",
-        ).selectExpr(
-            "event_id", "user_id",
-            "timestamp_micros(ts_us) AS ts", "value",
-        ).coalesce(1).write.mode("append").parquet(out)
-    got = run_stream_to_memory(
-        st.streaming_gapfill(
-            spark,
-            out,
-            glob="*.parquet",
-            max_files_per_trigger=1,
-            evict_horizon_us=2 * st.HOUR_US,
-        ),
-        "gapfill_evict",
+        land.plant(
+            spark.createDataFrame(
+                [(off + i, r[0], r[1], r[2]) for i, r in enumerate(chunk)],
+                "event_id long, user_id long, ts_us long, value double",
+            ).selectExpr(
+                "event_id", "user_id",
+                "timestamp_micros(ts_us) AS ts", "value",
+            )
+        )
+    got = land.replay(
+        st.streaming_gapfill, "gapfill_evict", evict_horizon_us=2 * st.HOUR_US
     )
     u1 = sorted(
         (r["bucket"], r["observed"], r["filled_value"])
@@ -507,26 +462,16 @@ def test_streaming_latest_snapshot_idempotent_on_redelivery(spark, tmp_path):
     """Redelivering the whole backlog as a second micro-batch must emit
     ZERO new rows (every row loses the (ts_us, event_id) race to state)
     and the snapshot must still equal the batch operator."""
-    import shutil
-
     from googlecloudstorage_blueprints_spark.operators import all_queries
     from googlecloudstorage_blueprints_spark.streaming import (
-        run_stream_to_memory,
         streaming_latest_snapshot,
     )
 
     src = f"{SF}/events.parquet"
-    (tmp_path / "replay").mkdir()
-    shutil.copy(src, tmp_path / "replay" / "00_events.parquet")
-    shutil.copy(src, tmp_path / "replay" / "01_events.parquet")
-    got = run_stream_to_memory(
-        streaming_latest_snapshot(
-            spark,
-            f"file:{tmp_path}/replay",
-            glob="*.parquet",
-            max_files_per_trigger=1,
-        ),
-        "snapshot_redelivery",
+    got = (
+        Landing(spark, tmp_path)
+        .plant(src, src)
+        .replay(streaming_latest_snapshot, "snapshot_redelivery")
     )
     rows = got.collect()
     per_key = {}
@@ -552,27 +497,14 @@ def test_streaming_transition_matrix_across_microbatches(spark, tmp_path):
     and totals equal the batch op."""
     from googlecloudstorage_blueprints_spark.sources.catalog import load_table
     from googlecloudstorage_blueprints_spark.streaming import (
-        run_stream_to_memory,
         streaming_transition_matrix,
     )
 
     events = load_table(spark, SF, "events")
-    split = events.selectExpr(
-        "timestamp_micros(CAST(percentile_approx(unix_micros(ts), 0.5)"
-        " AS BIGINT)) AS m"
-    ).collect()[0]["m"]
-    out = f"file:{tmp_path}/events_split"
-    events.where(F.col("ts") < F.lit(split)).coalesce(1).write.mode(
-        "append"
-    ).parquet(out)
-    events.where(F.col("ts") >= F.lit(split)).coalesce(1).write.mode(
-        "append"
-    ).parquet(out)
-    got_df = run_stream_to_memory(
-        streaming_transition_matrix(
-            spark, out, glob="*.parquet", max_files_per_trigger=1
-        ),
-        "transition_batches",
+    got_df = (
+        Landing(spark, tmp_path)
+        .plant(*halves(events))
+        .replay(streaming_transition_matrix, "transition_batches")
     )
     got = {
         (r["src"], r["dst"]): r["total"]
@@ -589,8 +521,6 @@ def test_streaming_cooccurrence_matches_batch_and_redelivery(
     """Summed pair emissions must equal the batch events_cooccurrence
     counts; redelivering the backlog as a second micro-batch must add
     ZERO emissions (seen-type sets absorb repeats)."""
-    import shutil
-
     from googlecloudstorage_blueprints_spark.streaming import (
         run_stream_to_memory,
         streaming_cooccurrence,
@@ -612,17 +542,10 @@ def test_streaming_cooccurrence_matches_batch_and_redelivery(
     }
     assert got == batch and len(batch) > 0
 
-    (tmp_path / "replay").mkdir()
-    shutil.copy(f"{SF}/events.parquet", tmp_path / "replay" / "00.parquet")
-    shutil.copy(f"{SF}/events.parquet", tmp_path / "replay" / "01.parquet")
-    redelivered = run_stream_to_memory(
-        streaming_cooccurrence(
-            spark,
-            f"file:{tmp_path}/replay",
-            glob="*.parquet",
-            max_files_per_trigger=1,
-        ),
-        "cooc_redelivery",
+    redelivered = (
+        Landing(spark, tmp_path)
+        .plant(f"{SF}/events.parquet", f"{SF}/events.parquet")
+        .replay(streaming_cooccurrence, "cooc_redelivery")
     )
     got2 = {
         (r["type_a"], r["type_b"]): r["total"]
@@ -683,53 +606,33 @@ def test_streaming_scd2_across_microbatches(spark, tmp_path):
     the correct valid_to from the later batch."""
     from googlecloudstorage_blueprints_spark.sources.catalog import load_table
     from googlecloudstorage_blueprints_spark.streaming import (
-        run_stream_to_memory,
         streaming_scd2_intervals,
     )
 
     events = load_table(spark, SF, "events")
-    split = events.selectExpr(
-        "timestamp_micros(CAST(percentile_approx(unix_micros(ts), 0.5)"
-        " AS BIGINT)) AS m"
-    ).collect()[0]["m"]
-    out = f"file:{tmp_path}/events_split"
-    events.where(F.col("ts") < F.lit(split)).coalesce(1).write.mode(
-        "append"
-    ).parquet(out)
-    events.where(F.col("ts") >= F.lit(split)).coalesce(1).write.mode(
-        "append"
-    ).parquet(out)
-    got = run_stream_to_memory(
-        streaming_scd2_intervals(
-            spark, out, glob="*.parquet", max_files_per_trigger=1
-        ),
-        "scd2_batches",
-    ).collect()
+    got = (
+        Landing(spark, tmp_path)
+        .plant(*halves(events))
+        .replay(streaming_scd2_intervals, "scd2_batches")
+        .collect()
+    )
     assert _reduce_scd2_emissions(got) == _batch_scd2(spark)
 
 
 def test_streaming_scd2_idempotent_on_redelivery(spark, tmp_path):
     """Redelivering the whole backlog as a second micro-batch must emit
     ZERO rows (every row loses the (ts_us, event_id) race to state)."""
-    import shutil
-
     from googlecloudstorage_blueprints_spark.streaming import (
         run_stream_to_memory,
         streaming_scd2_intervals,
     )
 
-    (tmp_path / "replay").mkdir()
-    shutil.copy(f"{SF}/events.parquet", tmp_path / "replay" / "00.parquet")
-    shutil.copy(f"{SF}/events.parquet", tmp_path / "replay" / "01.parquet")
-    got = run_stream_to_memory(
-        streaming_scd2_intervals(
-            spark,
-            f"file:{tmp_path}/replay",
-            glob="*.parquet",
-            max_files_per_trigger=1,
-        ),
-        "scd2_redelivery",
-    ).collect()
+    got = (
+        Landing(spark, tmp_path)
+        .plant(f"{SF}/events.parquet", f"{SF}/events.parquet")
+        .replay(streaming_scd2_intervals, "scd2_redelivery")
+        .collect()
+    )
     # first batch emits closed+open rows; the redelivered copy adds none:
     # emission count equals the single-replay count, and the reduced
     # table still matches batch
@@ -747,8 +650,6 @@ def test_streaming_dau_wau_feed_matches_batch_and_redelivery(
     distinct (user, epoch-day) frame — the core the events_dau_wau
     decomposition rides on — and redelivering the backlog must add ZERO
     emissions (the seen-day set absorbs repeats)."""
-    import shutil
-
     from googlecloudstorage_blueprints_spark.sources.catalog import load_table
     from googlecloudstorage_blueprints_spark.streaming import (
         run_stream_to_memory,
@@ -771,18 +672,12 @@ def test_streaming_dau_wau_feed_matches_batch_and_redelivery(
     assert len(single) == len(batch), "duplicate or missing emissions"
     assert {(r["user_id"], r["epoch_day"]) for r in single} == batch
 
-    (tmp_path / "replay").mkdir()
-    shutil.copy(f"{SF}/events.parquet", tmp_path / "replay" / "00.parquet")
-    shutil.copy(f"{SF}/events.parquet", tmp_path / "replay" / "01.parquet")
-    redelivered = run_stream_to_memory(
-        streaming_dau_wau(
-            spark,
-            f"file:{tmp_path}/replay",
-            glob="*.parquet",
-            max_files_per_trigger=1,
-        ),
-        "dau_redelivery",
-    ).collect()
+    redelivered = (
+        Landing(spark, tmp_path)
+        .plant(f"{SF}/events.parquet", f"{SF}/events.parquet")
+        .replay(streaming_dau_wau, "dau_redelivery")
+        .collect()
+    )
     assert len(redelivered) == len(batch)
     assert {(r["user_id"], r["epoch_day"]) for r in redelivered} == batch
 
@@ -841,41 +736,18 @@ def test_streaming_checkpoint_restart_exactly_once(spark, tmp_path):
     checkpoint must skip the already-committed source file entirely and
     the state store must absorb the non-advancing rows — the restarted
     run may emit ONLY the one advancing update."""
-    import shutil
-
     from googlecloudstorage_blueprints_spark.streaming import (
         streaming_latest_snapshot,
     )
 
-    src = tmp_path / "src"
-    sink = f"file:{tmp_path}/sink"
-    ckpt = f"file:{tmp_path}/ckpt"
-    src.mkdir()
-    shutil.copy(f"{SF}/events.parquet", src / "00.parquet")
-
-    def run_once():
-        q = (
-            streaming_latest_snapshot(
-                spark, f"file:{src}", glob="*.parquet",
-            )
-            .writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    run_once()
-    first = spark.read.parquet(sink).count()
+    land = Landing(spark, tmp_path).plant(f"{SF}/events.parquet")
+    first = land.drain(streaming_latest_snapshot).count()
     assert first > 0
 
     # redeliver the identical backlog under a new name AND one advancing
     # row: newest ts_us + 1 for one user
     from googlecloudstorage_blueprints_spark.sources.catalog import load_table
 
-    shutil.copy(f"{SF}/events.parquet", src / "01.parquet")
     top = (
         load_table(spark, SF, "events")
         .selectExpr(
@@ -906,18 +778,9 @@ def test_streaming_checkpoint_restart_exactly_once(spark, tmp_path):
         "value",
         "'{}' AS props",
     )
-    # write.parquet makes a DIRECTORY; the file stream lists flat files —
-    # move the part file to a flat src/02.parquet
-    import glob as globmod
+    land.plant(f"{SF}/events.parquet", adv)
 
-    adv.coalesce(1).write.mode("overwrite").parquet(
-        f"file:{tmp_path}/adv_dir"
-    )
-    part = globmod.glob(f"{tmp_path}/adv_dir/part-*.parquet")[0]
-    shutil.move(part, src / "02.parquet")
-
-    run_once()
-    after = spark.read.parquet(sink)
+    after = land.drain(streaming_latest_snapshot)
     total = after.count()
     assert total == first + 1, (
         f"restart must add exactly the one advancing row "
@@ -972,27 +835,13 @@ def test_streaming_session_path_trigrams_across_microbatches(
     sessions spanning it) still count, totals equal the batch op."""
     from googlecloudstorage_blueprints_spark.sources.catalog import load_table
     from googlecloudstorage_blueprints_spark.streaming import (
-        run_stream_to_memory,
         streaming_session_path_trigrams,
     )
 
-    events = load_table(spark, SF, "events")
-    split = events.selectExpr(
-        "timestamp_micros(CAST(percentile_approx(unix_micros(ts), 0.5)"
-        " AS BIGINT)) AS m"
-    ).collect()[0]["m"]
-    out = f"file:{tmp_path}/events_split"
-    events.where(F.col("ts") < F.lit(split)).coalesce(1).write.mode(
-        "append"
-    ).parquet(out)
-    events.where(F.col("ts") >= F.lit(split)).coalesce(1).write.mode(
-        "append"
-    ).parquet(out)
-    got_df = run_stream_to_memory(
-        streaming_session_path_trigrams(
-            spark, out, glob="*.parquet", max_files_per_trigger=1
-        ),
-        "path_tri_batches",
+    got_df = (
+        Landing(spark, tmp_path)
+        .plant(*halves(load_table(spark, SF, "events")))
+        .replay(streaming_session_path_trigrams, "path_tri_batches")
     )
     got = {
         r["trigram"]: r["total"]
@@ -1015,56 +864,19 @@ def test_streaming_path_trigrams_checkpoint_restart(spark, tmp_path):
         streaming_session_path_trigrams,
     )
 
-    events = load_table(spark, SF, "events")
-    split = events.selectExpr(
-        "timestamp_micros(CAST(percentile_approx(unix_micros(ts), 0.5)"
-        " AS BIGINT)) AS m"
-    ).collect()[0]["m"]
-    src = tmp_path / "src"
-    src.mkdir()
-    sink = f"file:{tmp_path}/sink"
-    ckpt = f"file:{tmp_path}/ckpt"
+    before, after = halves(load_table(spark, SF, "events"))
+    land = Landing(spark, tmp_path).plant(before)
+    first = land.drain(streaming_session_path_trigrams).count()
 
-    def plant(df, name):
-        # write.parquet makes a DIRECTORY; the file stream lists flat
-        # files — move the part file into place (r7 trap)
-        import glob as globmod
-        import shutil
-
-        d = f"{tmp_path}/stage_{name}"
-        df.coalesce(1).write.mode("overwrite").parquet(f"file:{d}")
-        shutil.move(
-            globmod.glob(f"{d}/part-*.parquet")[0], src / f"{name}.parquet"
-        )
-
-    def run_once():
-        q = (
-            streaming_session_path_trigrams(
-                spark, f"file:{src}", glob="*.parquet"
-            )
-            .writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    plant(events.where(F.col("ts") < F.lit(split)), "00")
-    run_once()
-    first = spark.read.parquet(sink).count()
-
-    run_once()  # unchanged source: committed file must be skipped
-    assert spark.read.parquet(sink).count() == first, (
+    # unchanged source: committed file must be skipped
+    assert land.drain(streaming_session_path_trigrams).count() == first, (
         "restart on an unchanged source must emit nothing"
     )
 
-    plant(events.where(F.col("ts") >= F.lit(split)), "01")
-    run_once()
+    land.plant(after)
     got = {
         r["trigram"]: r["total"]
-        for r in spark.read.parquet(sink)
+        for r in land.drain(streaming_session_path_trigrams)
         .groupBy("trigram")
         .agg(F.sum("n").alias("total"))
         .collect()
@@ -1113,7 +925,6 @@ def test_streaming_funnel_delays_matches_batch_and_redelivery(
     batch op's per-user delay; redelivering the full backlog as a second
     micro-batch must add ZERO emissions (the converted latch absorbs
     it)."""
-    import shutil
     from collections import Counter
 
     from googlecloudstorage_blueprints_spark.streaming import (
@@ -1121,11 +932,9 @@ def test_streaming_funnel_delays_matches_batch_and_redelivery(
         streaming_funnel_delays,
     )
 
-    src = tmp_path / "src"
-    src.mkdir()
-    shutil.copy(f"{SF}/events.parquet", src / "00.parquet")
+    land = Landing(spark, tmp_path).plant(f"{SF}/events.parquet")
     got_df = run_stream_to_memory(
-        streaming_funnel_delays(spark, f"file:{src}", glob="*.parquet"),
+        streaming_funnel_delays(spark, land.uri, glob="*.parquet"),
         "funnel_single",
     )
     got = Counter(
@@ -1135,13 +944,8 @@ def test_streaming_funnel_delays_matches_batch_and_redelivery(
     assert got == batch and len(batch) > 0
 
     # full-backlog redelivery: converted latch must absorb every row
-    shutil.copy(f"{SF}/events.parquet", src / "01.parquet")
-    again_df = run_stream_to_memory(
-        streaming_funnel_delays(
-            spark, f"file:{src}", glob="*.parquet", max_files_per_trigger=1
-        ),
-        "funnel_redelivered",
-    )
+    land.plant(f"{SF}/events.parquet")
+    again_df = land.replay(streaming_funnel_delays, "funnel_redelivered")
     again = Counter(
         (r["user_id"], r["delay_s"]) for r in again_df.collect()
     )
@@ -1185,31 +989,66 @@ def test_streaming_first_ship_sla_idempotent_on_redelivery(
 ):
     """Re-delivering the whole shipments backlog must emit ZERO new
     rows — every line loses the (ship_us, linenumber) min race."""
-    import shutil
-
     from googlecloudstorage_blueprints_spark.streaming import (
-        run_stream_to_memory,
         streaming_first_ship_sla,
     )
 
     src = f"{SF}/lineitem.parquet"
-    (tmp_path / "replay").mkdir()
-    shutil.copy(src, tmp_path / "replay" / "00_lineitem.parquet")
-    shutil.copy(src, tmp_path / "replay" / "01_lineitem.parquet")
-    got = run_stream_to_memory(
-        streaming_first_ship_sla(
-            spark,
-            f"file:{tmp_path}/replay",
-            glob="*.parquet",
-            max_files_per_trigger=1,
-            orders_dir=SF,
-        ),
-        "firstship_redelivery",
+    got = (
+        Landing(spark, tmp_path)
+        .plant(src, src)
+        .replay(
+            streaming_first_ship_sla, "firstship_redelivery", orders_dir=SF
+        )
     )
     rows = got.collect()
     # one emission per order total: batch 2 adds nothing
     keys = [r["l_orderkey"] for r in rows]
     assert len(keys) == len(set(keys)) and len(keys) > 0
+
+
+def _events_frame(spark, rows):
+    """Planted events from (event_id, ts µs, user_id, event_type, value)
+    rows, props ``{}``."""
+    return spark.createDataFrame(
+        [(*r, "{}") for r in rows],
+        "event_id long, us long, user_id long, event_type string, "
+        "value double, props string",
+    ).select(
+        "event_id",
+        F.timestamp_micros(F.col("us")).alias("ts"),
+        "user_id",
+        "event_type",
+        "value",
+        "props",
+    )
+
+
+def _far_sentinels():
+    """Two one-row event tables 400 days past the fixture's last event
+    (user -1): their batches push the watermark past every open session
+    tail, so every event-time timeout fires."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    base = pq.read_table(f"{SF}/events.parquet")
+    far = pa.compute.max(base.column("ts")).as_py()
+    return [
+        pa.Table.from_pydict(
+            {
+                "event_id": [10_000_000 + i],
+                "ts": [far + datetime.timedelta(hours=delta_h)],
+                "user_id": [-1],
+                "event_type": ["sentinel"],
+                "value": [0.0],
+                "props": ["{}"],
+            },
+            schema=base.schema,
+        )
+        for i, delta_h in enumerate([24 * 400, 24 * 400 + 1])
+    ]
 
 
 def test_streaming_session_entries_matches_batch_bounce_core(
@@ -1221,50 +1060,17 @@ def test_streaming_session_entries_matches_batch_bounce_core(
     sentinel batches push the watermark past every open tail (the
     gapfill-eviction replay technique) — after which EVERY original
     session must have emitted."""
-    import shutil
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     from googlecloudstorage_blueprints_spark.operators import all_queries
     from googlecloudstorage_blueprints_spark.streaming import (
-        run_stream_to_memory,
         streaming_session_entries,
     )
 
-    (tmp_path / "replay").mkdir()
-    shutil.copy(
-        f"{SF}/events.parquet", tmp_path / "replay" / "00_events.parquet"
+    got = (
+        Landing(spark, tmp_path)
+        .plant(f"{SF}/events.parquet", *_far_sentinels())
+        .replay(streaming_session_entries, "session_entries")
+        .where("user_id >= 0")
     )
-    base = pq.read_table(f"{SF}/events.parquet")
-    far = pa.compute.max(base.column("ts")).as_py()
-    import datetime
-
-    for i, delta_h in enumerate([24 * 400, 24 * 400 + 1]):
-        sent = pa.Table.from_pydict(
-            {
-                "event_id": [10_000_000 + i],
-                "ts": [far + datetime.timedelta(hours=delta_h)],
-                "user_id": [-1],
-                "event_type": ["sentinel"],
-                "value": [0.0],
-                "props": ["{}"],
-            },
-            schema=base.schema,
-        )
-        pq.write_table(
-            sent, tmp_path / "replay" / f"0{i + 1}_sentinel.parquet"
-        )
-
-    got = run_stream_to_memory(
-        streaming_session_entries(
-            spark,
-            f"file:{tmp_path}/replay",
-            glob="*.parquet",
-            max_files_per_trigger=1,
-        ),
-        "session_entries",
-    ).where("user_id >= 0")
     agg = {}
     for r in got.collect():
         n, b = agg.get(r["entry_type"], (0, 0))
@@ -1286,50 +1092,17 @@ def test_streaming_session_depth_matches_batch_conversion_core(
     must reproduce the batch session_depth_conversion table exactly —
     same sentinel-drain technique as the entries twin (two far-future
     batches push the watermark past every open tail)."""
-    import shutil
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     from googlecloudstorage_blueprints_spark.operators import all_queries
     from googlecloudstorage_blueprints_spark.streaming import (
-        run_stream_to_memory,
         streaming_session_depth,
     )
 
-    (tmp_path / "replay").mkdir()
-    shutil.copy(
-        f"{SF}/events.parquet", tmp_path / "replay" / "00_events.parquet"
+    got = (
+        Landing(spark, tmp_path)
+        .plant(f"{SF}/events.parquet", *_far_sentinels())
+        .replay(streaming_session_depth, "session_depth")
+        .where("user_id >= 0")
     )
-    base = pq.read_table(f"{SF}/events.parquet")
-    far = pa.compute.max(base.column("ts")).as_py()
-    import datetime
-
-    for i, delta_h in enumerate([24 * 400, 24 * 400 + 1]):
-        sent = pa.Table.from_pydict(
-            {
-                "event_id": [10_000_000 + i],
-                "ts": [far + datetime.timedelta(hours=delta_h)],
-                "user_id": [-1],
-                "event_type": ["sentinel"],
-                "value": [0.0],
-                "props": ["{}"],
-            },
-            schema=base.schema,
-        )
-        pq.write_table(
-            sent, tmp_path / "replay" / f"0{i + 1}_sentinel.parquet"
-        )
-
-    got = run_stream_to_memory(
-        streaming_session_depth(
-            spark,
-            f"file:{tmp_path}/replay",
-            glob="*.parquet",
-            max_files_per_trigger=1,
-        ),
-        "session_depth",
-    ).where("user_id >= 0")
 
     def bucket(n):
         return "1" if n == 1 else "2-3" if n <= 3 else "4-7" if n <= 7 else "8+"
@@ -1389,25 +1162,15 @@ def test_streaming_first_touch_idempotent_on_redelivery(
 ):
     """Re-delivering the whole event backlog must emit ZERO new rows —
     every event loses the (ts_us, event_id) min race."""
-    import shutil
-
     from googlecloudstorage_blueprints_spark.streaming import (
-        run_stream_to_memory,
         streaming_first_touch,
     )
 
     src = f"{SF}/events.parquet"
-    (tmp_path / "replay_ft").mkdir()
-    shutil.copy(src, tmp_path / "replay_ft" / "00_events.parquet")
-    shutil.copy(src, tmp_path / "replay_ft" / "01_events.parquet")
-    got = run_stream_to_memory(
-        streaming_first_touch(
-            spark,
-            f"file:{tmp_path}/replay_ft",
-            glob="*.parquet",
-            max_files_per_trigger=1,
-        ),
-        "firsttouch_redelivery",
+    got = (
+        Landing(spark, tmp_path)
+        .plant(src, src)
+        .replay(streaming_first_touch, "firsttouch_redelivery")
     )
     rows = got.collect()
     keys = [r["user_id"] for r in rows]
@@ -1453,27 +1216,13 @@ def test_streaming_pair_latency_across_microbatches(spark, tmp_path):
     and totals equal the batch op."""
     from googlecloudstorage_blueprints_spark.sources.catalog import load_table
     from googlecloudstorage_blueprints_spark.streaming import (
-        run_stream_to_memory,
         streaming_pair_latency,
     )
 
-    events = load_table(spark, SF, "events")
-    split = events.selectExpr(
-        "timestamp_micros(CAST(percentile_approx(unix_micros(ts), 0.5)"
-        " AS BIGINT)) AS m"
-    ).collect()[0]["m"]
-    out = f"file:{tmp_path}/events_split_pl"
-    events.where(F.col("ts") < F.lit(split)).coalesce(1).write.mode(
-        "append"
-    ).parquet(out)
-    events.where(F.col("ts") >= F.lit(split)).coalesce(1).write.mode(
-        "append"
-    ).parquet(out)
-    got_df = run_stream_to_memory(
-        streaming_pair_latency(
-            spark, out, glob="*.parquet", max_files_per_trigger=1
-        ),
-        "pair_latency_batches",
+    got_df = (
+        Landing(spark, tmp_path)
+        .plant(*halves(load_table(spark, SF, "events")))
+        .replay(streaming_pair_latency, "pair_latency_batches")
     )
     got = {
         (r["prev_type"], r["next_type"]): (r["n"], r["g"])
@@ -1499,52 +1248,19 @@ def test_streaming_pair_latency_checkpoint_restart(spark, tmp_path):
         streaming_pair_latency,
     )
 
-    events = load_table(spark, SF, "events")
-    split = events.selectExpr(
-        "timestamp_micros(CAST(percentile_approx(unix_micros(ts), 0.5)"
-        " AS BIGINT)) AS m"
-    ).collect()[0]["m"]
-    src = tmp_path / "src"
-    src.mkdir()
-    sink = f"file:{tmp_path}/sink"
-    ckpt = f"file:{tmp_path}/ckpt"
+    before, after = halves(load_table(spark, SF, "events"))
+    land = Landing(spark, tmp_path).plant(before)
+    first = land.drain(streaming_pair_latency).count()
 
-    def plant(df, name):
-        import glob as globmod
-        import shutil
-
-        d = f"{tmp_path}/stage_{name}"
-        df.coalesce(1).write.mode("overwrite").parquet(f"file:{d}")
-        shutil.move(
-            globmod.glob(f"{d}/part-*.parquet")[0], src / f"{name}.parquet"
-        )
-
-    def run_once():
-        q = (
-            streaming_pair_latency(spark, f"file:{src}", glob="*.parquet")
-            .writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    plant(events.where(F.col("ts") < F.lit(split)), "00")
-    run_once()
-    first = spark.read.parquet(sink).count()
-
-    run_once()  # unchanged source: committed file must be skipped
-    assert spark.read.parquet(sink).count() == first, (
+    # unchanged source: committed file must be skipped
+    assert land.drain(streaming_pair_latency).count() == first, (
         "restart on an unchanged source must emit nothing"
     )
 
-    plant(events.where(F.col("ts") >= F.lit(split)), "01")
-    run_once()
+    land.plant(after)
     got = {
         (r["prev_type"], r["next_type"]): (r["n"], r["g"])
-        for r in spark.read.parquet(sink)
+        for r in land.drain(streaming_pair_latency)
         .groupBy("prev_type", "next_type")
         .agg(
             F.sum("n_pairs").alias("n"),
@@ -1566,8 +1282,6 @@ def test_streaming_weekly_conversion_matches_batch_and_redelivery(
     ZERO emissions (both week-sets absorb repeats).  Rolling the marks
     up per week must reproduce the batch weekly_conversion_trend
     distinct columns exactly, conversion_share included."""
-    import shutil
-
     from googlecloudstorage_blueprints_spark.sources.catalog import load_table
     from googlecloudstorage_blueprints_spark.streaming import (
         run_stream_to_memory,
@@ -1605,18 +1319,12 @@ def test_streaming_weekly_conversion_matches_batch_and_redelivery(
     assert got_active == batch_active
     assert got_buyer == batch_buyer
 
-    (tmp_path / "replay").mkdir()
-    shutil.copy(f"{SF}/events.parquet", tmp_path / "replay" / "00.parquet")
-    shutil.copy(f"{SF}/events.parquet", tmp_path / "replay" / "01.parquet")
-    redelivered = run_stream_to_memory(
-        streaming_weekly_conversion(
-            spark,
-            f"file:{tmp_path}/replay",
-            glob="*.parquet",
-            max_files_per_trigger=1,
-        ),
-        "wconv_redelivery",
-    ).collect()
+    redelivered = (
+        Landing(spark, tmp_path)
+        .plant(f"{SF}/events.parquet", f"{SF}/events.parquet")
+        .replay(streaming_weekly_conversion, "wconv_redelivery")
+        .collect()
+    )
     assert len(redelivered) == len(single)
 
     # rollup: per-week counts of each kind ≡ the batch op's distincts
@@ -1649,8 +1357,6 @@ def test_streaming_order_close_matches_batch_and_redelivery(
     equal the batch per-order MAX ship epoch-day (the span core the
     in-flight ledger consumes), and redelivering the backlog must add
     ZERO emissions (non-advancing rows lose the max race)."""
-    import shutil
-
     from googlecloudstorage_blueprints_spark.sources.catalog import load_table
     from googlecloudstorage_blueprints_spark.streaming import (
         run_stream_to_memory,
@@ -1678,22 +1384,12 @@ def test_streaming_order_close_matches_batch_and_redelivery(
             newest[k] = r["close_day"]
     assert newest == batch and len(batch) > 0
 
-    (tmp_path / "replay").mkdir()
-    shutil.copy(
-        f"{SF}/lineitem.parquet", tmp_path / "replay" / "00.parquet"
+    redelivered = (
+        Landing(spark, tmp_path)
+        .plant(f"{SF}/lineitem.parquet", f"{SF}/lineitem.parquet")
+        .replay(streaming_order_close, "orderclose_redelivery")
+        .collect()
     )
-    shutil.copy(
-        f"{SF}/lineitem.parquet", tmp_path / "replay" / "01.parquet"
-    )
-    redelivered = run_stream_to_memory(
-        streaming_order_close(
-            spark,
-            f"file:{tmp_path}/replay",
-            glob="*.parquet",
-            max_files_per_trigger=1,
-        ),
-        "orderclose_redelivery",
-    ).collect()
     # second copy advances nothing: emission count equals single-replay
     assert len(redelivered) == len(single)
 
@@ -1707,8 +1403,6 @@ def test_streaming_growth_accounting_matches_batch_and_reclassifies(
     which must actually exercise the reclassification path (a user's
     earliest second-half week flips new → retained/resurrected when
     the first half lands).  Redelivering the backlog emits nothing."""
-    import shutil
-
     from googlecloudstorage_blueprints_spark.sources.catalog import load_table
     from googlecloudstorage_blueprints_spark.streaming import (
         run_stream_to_memory,
@@ -1752,24 +1446,13 @@ def test_streaming_growth_accounting_matches_batch_and_reclassifies(
     } == batch
 
     # out-of-order split: the LATER half of the stream arrives first
-    events = load_table(spark, SF, "events")
-    split = events.selectExpr(
-        "timestamp_micros(CAST(percentile_approx(unix_micros(ts), 0.5)"
-        " AS BIGINT)) AS m"
-    ).collect()[0]["m"]
-    out = f"file:{tmp_path}/events_ooo_growth"
-    events.where(F.col("ts") >= F.lit(split)).coalesce(1).write.mode(
-        "append"
-    ).parquet(out)
-    events.where(F.col("ts") < F.lit(split)).coalesce(1).write.mode(
-        "append"
-    ).parquet(out)
-    ooo = run_stream_to_memory(
-        streaming_growth_accounting(
-            spark, out, glob="*.parquet", max_files_per_trigger=1
-        ),
-        "growth_ooo",
-    ).collect()
+    before, after = halves(load_table(spark, SF, "events"))
+    ooo = (
+        Landing(spark, tmp_path / "ooo")
+        .plant(after, before)
+        .replay(streaming_growth_accounting, "growth_ooo")
+        .collect()
+    )
     assert {
         w: (c["new"], c["retained"], c["resurrected"])
         for w, c in week_class_counts(newest_per_week(ooo)).items()
@@ -1780,18 +1463,12 @@ def test_streaming_growth_accounting_matches_batch_and_reclassifies(
     assert reclassed, "out-of-order split must exercise reclassification"
 
     # full-backlog redelivery: week sets absorb the replay
-    (tmp_path / "replay").mkdir()
-    shutil.copy(f"{SF}/events.parquet", tmp_path / "replay" / "00.parquet")
-    shutil.copy(f"{SF}/events.parquet", tmp_path / "replay" / "01.parquet")
-    redelivered = run_stream_to_memory(
-        streaming_growth_accounting(
-            spark,
-            f"file:{tmp_path}/replay",
-            glob="*.parquet",
-            max_files_per_trigger=1,
-        ),
-        "growth_redelivery",
-    ).collect()
+    redelivered = (
+        Landing(spark, tmp_path / "replay")
+        .plant(f"{SF}/events.parquet", f"{SF}/events.parquet")
+        .replay(streaming_growth_accounting, "growth_redelivery")
+        .collect()
+    )
     assert len(redelivered) == len(single)
 
 
@@ -1858,9 +1535,6 @@ def test_streaming_topk_words_checkpoint_restart(spark, tmp_path):
     second half and restart — recovered counters must continue, and
     since the fixture vocabulary fits capacity, the final newest
     counters equal the single-drain exact counts."""
-    import glob as globmod
-    import shutil
-
     from googlecloudstorage_blueprints_spark.sources.catalog import load_table
     from googlecloudstorage_blueprints_spark.streaming import (
         streaming_topk_words,
@@ -1870,43 +1544,18 @@ def test_streaming_topk_words_checkpoint_restart(spark, tmp_path):
     mid = docs.agg(
         F.expr("percentile_approx(doc_id, 0.5)").cast("long").alias("m")
     ).collect()[0]["m"]
-    src = tmp_path / "src"
-    src.mkdir()
-    sink = f"file:{tmp_path}/sink"
-    ckpt = f"file:{tmp_path}/ckpt"
-
-    def plant(df, name):
-        d = f"{tmp_path}/stage_{name}"
-        df.coalesce(1).write.mode("overwrite").parquet(f"file:{d}")
-        shutil.move(
-            globmod.glob(f"{d}/part-*.parquet")[0],
-            src / f"{name}.parquet",
-        )
-
-    def run_once():
-        q = (
-            streaming_topk_words(spark, f"file:{src}", glob="*.parquet")
-            .writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    plant(docs.where(F.col("doc_id") <= F.lit(mid)), "00")
-    run_once()
-    first = spark.read.parquet(sink).count()
-    run_once()  # unchanged source: committed file must be skipped
-    assert spark.read.parquet(sink).count() == first, (
+    land = Landing(spark, tmp_path).plant(
+        docs.where(F.col("doc_id") <= F.lit(mid))
+    )
+    first = land.drain(streaming_topk_words).count()
+    # unchanged source: committed file must be skipped
+    assert land.drain(streaming_topk_words).count() == first, (
         "restart on an unchanged source must emit nothing"
     )
-    plant(docs.where(F.col("doc_id") > F.lit(mid)), "01")
-    run_once()
+    land.plant(docs.where(F.col("doc_id") > F.lit(mid)))
 
     newest = {}
-    for r in spark.read.parquet(sink).collect():
+    for r in land.drain(streaming_topk_words).collect():
         k = (r["shard"], r["word"])
         if k not in newest or r["ver"] > newest[k][1]:
             newest[k] = (r["est"], r["ver"])
@@ -1966,27 +1615,13 @@ def test_streaming_intersession_gaps_across_microbatches(spark, tmp_path):
     through the one-tuple state: totals still equal the batch op."""
     from googlecloudstorage_blueprints_spark.sources.catalog import load_table
     from googlecloudstorage_blueprints_spark.streaming import (
-        run_stream_to_memory,
         streaming_intersession_gaps,
     )
 
-    events = load_table(spark, SF, "events")
-    split = events.selectExpr(
-        "timestamp_micros(CAST(percentile_approx(unix_micros(ts), 0.5)"
-        " AS BIGINT)) AS m"
-    ).collect()[0]["m"]
-    out = f"file:{tmp_path}/events_split_ig"
-    events.where(F.col("ts") < F.lit(split)).coalesce(1).write.mode(
-        "append"
-    ).parquet(out)
-    events.where(F.col("ts") >= F.lit(split)).coalesce(1).write.mode(
-        "append"
-    ).parquet(out)
-    got_df = run_stream_to_memory(
-        streaming_intersession_gaps(
-            spark, out, glob="*.parquet", max_files_per_trigger=1
-        ),
-        "intersession_batches",
+    got_df = (
+        Landing(spark, tmp_path)
+        .plant(*halves(load_table(spark, SF, "events")))
+        .replay(streaming_intersession_gaps, "intersession_batches")
     )
     agg = got_df.agg(
         F.countDistinct("user_id").alias("u"),
@@ -2036,27 +1671,13 @@ def test_streaming_session_starts_across_microbatches(spark, tmp_path):
     the boundary: totals still equal the batch histogram."""
     from googlecloudstorage_blueprints_spark.sources.catalog import load_table
     from googlecloudstorage_blueprints_spark.streaming import (
-        run_stream_to_memory,
         streaming_session_starts,
     )
 
-    events = load_table(spark, SF, "events")
-    split = events.selectExpr(
-        "timestamp_micros(CAST(percentile_approx(unix_micros(ts), 0.5)"
-        " AS BIGINT)) AS m"
-    ).collect()[0]["m"]
-    out = f"file:{tmp_path}/events_split_ss"
-    events.where(F.col("ts") < F.lit(split)).coalesce(1).write.mode(
-        "append"
-    ).parquet(out)
-    events.where(F.col("ts") >= F.lit(split)).coalesce(1).write.mode(
-        "append"
-    ).parquet(out)
-    got_df = run_stream_to_memory(
-        streaming_session_starts(
-            spark, out, glob="*.parquet", max_files_per_trigger=1
-        ),
-        "session_starts_batches",
+    got_df = (
+        Landing(spark, tmp_path)
+        .plant(*halves(load_table(spark, SF, "events")))
+        .replay(streaming_session_starts, "session_starts_batches")
     )
     hist = {
         r["k"]: r["n"]
@@ -2085,8 +1706,6 @@ def test_streaming_cohort_retention_matches_batch_and_reclassifies(
     the all-cells reclassification (a customer's first-half order
     lowers m0 and rewrites every month's cohort and offset).
     Redelivering the backlog emits nothing."""
-    import shutil
-
     from googlecloudstorage_blueprints_spark.sources.catalog import load_table
     from googlecloudstorage_blueprints_spark.streaming import (
         run_stream_to_memory,
@@ -2127,24 +1746,13 @@ def test_streaming_cohort_retention_matches_batch_and_reclassifies(
         )
 
     # out-of-order split: the LATER half of the order stream lands first
-    orders = load_table(spark, SF, "orders")
-    split = orders.selectExpr(
-        "timestamp_micros(CAST(percentile_approx("
-        "unix_micros(o_orderdate), 0.5) AS BIGINT)) AS m"
-    ).collect()[0]["m"]
-    out = f"file:{tmp_path}/orders_ooo_cohort"
-    orders.where(F.col("o_orderdate") >= F.lit(split)).coalesce(
-        1
-    ).write.mode("append").parquet(out)
-    orders.where(F.col("o_orderdate") < F.lit(split)).coalesce(
-        1
-    ).write.mode("append").parquet(out)
-    ooo = run_stream_to_memory(
-        streaming_cohort_retention(
-            spark, out, glob="*.parquet", max_files_per_trigger=1
-        ),
-        "cohort_ooo",
-    ).collect()
+    before, after = halves(load_table(spark, SF, "orders"), "o_orderdate")
+    ooo = (
+        Landing(spark, tmp_path / "ooo")
+        .plant(after, before)
+        .replay(streaming_cohort_retention, "cohort_ooo")
+        .collect()
+    )
     assert triangle(newest_cells(ooo)) == batch_tri
     # the reclass path must actually fire: some (customer, month) is
     # re-emitted with a DIFFERENT cohort after the earlier half lands
@@ -2158,22 +1766,12 @@ def test_streaming_cohort_retention_matches_batch_and_reclassifies(
     assert recohorted, "out-of-order split must rewrite some cohort"
 
     # full-backlog redelivery: month sets absorb the replay
-    (tmp_path / "replay_cohort").mkdir()
-    shutil.copy(
-        f"{SF}/orders.parquet", tmp_path / "replay_cohort" / "00.parquet"
+    redelivered = (
+        Landing(spark, tmp_path / "replay")
+        .plant(f"{SF}/orders.parquet", f"{SF}/orders.parquet")
+        .replay(streaming_cohort_retention, "cohort_redelivery")
+        .collect()
     )
-    shutil.copy(
-        f"{SF}/orders.parquet", tmp_path / "replay_cohort" / "01.parquet"
-    )
-    redelivered = run_stream_to_memory(
-        streaming_cohort_retention(
-            spark,
-            f"file:{tmp_path}/replay_cohort",
-            glob="*.parquet",
-            max_files_per_trigger=1,
-        ),
-        "cohort_redelivery",
-    ).collect()
     assert len(redelivered) == len(single)
 
 
@@ -2190,54 +1788,19 @@ def test_streaming_cohort_retention_checkpoint_restart(spark, tmp_path):
         streaming_cohort_retention,
     )
 
-    orders = load_table(spark, SF, "orders")
-    split = orders.selectExpr(
-        "timestamp_micros(CAST(percentile_approx("
-        "unix_micros(o_orderdate), 0.5) AS BIGINT)) AS m"
-    ).collect()[0]["m"]
-    src = tmp_path / "src"
-    src.mkdir()
-    sink = f"file:{tmp_path}/sink"
-    ckpt = f"file:{tmp_path}/ckpt"
-
-    def plant(df, name):
-        import glob as globmod
-        import shutil
-
-        d = f"{tmp_path}/stage_{name}"
-        df.coalesce(1).write.mode("overwrite").parquet(f"file:{d}")
-        shutil.move(
-            globmod.glob(f"{d}/part-*.parquet")[0], src / f"{name}.parquet"
-        )
-
-    def run_once():
-        q = (
-            streaming_cohort_retention(
-                spark, f"file:{src}", glob="*.parquet"
-            )
-            .writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
+    before, after = halves(load_table(spark, SF, "orders"), "o_orderdate")
     # LATER half first, so the restart-delivered earlier half must
     # lower first-months through checkpoint-recovered state
-    plant(orders.where(F.col("o_orderdate") >= F.lit(split)), "00")
-    run_once()
-    first = spark.read.parquet(sink).count()
+    land = Landing(spark, tmp_path).plant(after)
+    first = land.drain(streaming_cohort_retention).count()
 
-    run_once()  # unchanged source: committed file must be skipped
-    assert spark.read.parquet(sink).count() == first, (
+    # unchanged source: committed file must be skipped
+    assert land.drain(streaming_cohort_retention).count() == first, (
         "restart on an unchanged source must emit nothing"
     )
 
-    plant(orders.where(F.col("o_orderdate") < F.lit(split)), "01")
-    run_once()
-    rows = spark.read.parquet(sink).collect()
+    land.plant(before)
+    rows = land.drain(streaming_cohort_retention).collect()
     best = {}
     for r in rows:
         k = (r["o_custkey"], r["month"])
@@ -2269,8 +1832,6 @@ def test_streaming_funnel_attribution_matches_batch_and_reattributes(
     OUT-OF-ORDER two-file split (later events first), which must
     actually fire the re-attribution path.  Redelivering the backlog
     emits nothing."""
-    import shutil
-
     from googlecloudstorage_blueprints_spark.operators.behavior import (
         FUNNEL_WINDOW_SWEEP_DAYS,
     )
@@ -2317,24 +1878,13 @@ def test_streaming_funnel_attribution_matches_batch_and_reattributes(
     assert sweep(newest(single)) == batch
 
     # out-of-order split: the LATER half of the event stream lands first
-    events = load_table(spark, SF, "events")
-    split = events.selectExpr(
-        "timestamp_micros(CAST(percentile_approx("
-        "unix_micros(ts), 0.5) AS BIGINT)) AS m"
-    ).collect()[0]["m"]
-    out = f"file:{tmp_path}/events_ooo_funnel"
-    events.where(F.col("ts") >= F.lit(split)).coalesce(1).write.mode(
-        "append"
-    ).parquet(out)
-    events.where(F.col("ts") < F.lit(split)).coalesce(1).write.mode(
-        "append"
-    ).parquet(out)
-    ooo = run_stream_to_memory(
-        streaming_funnel_attribution(
-            spark, out, glob="*.parquet", max_files_per_trigger=1
-        ),
-        "funnel_attr_ooo",
-    ).collect()
+    before, after = halves(load_table(spark, SF, "events"))
+    ooo = (
+        Landing(spark, tmp_path / "ooo")
+        .plant(after, before)
+        .replay(streaming_funnel_attribution, "funnel_attr_ooo")
+        .collect()
+    )
     assert sweep(newest(ooo)) == batch
     # the re-attribution path must actually fire: some user re-emits a
     # DIFFERENT (signup, purchase) pair after the earlier half lands
@@ -2348,22 +1898,12 @@ def test_streaming_funnel_attribution_matches_batch_and_reattributes(
     assert reattributed, "out-of-order split must re-attribute someone"
 
     # full-backlog redelivery: state absorbs the replay
-    (tmp_path / "replay_funnel").mkdir()
-    shutil.copy(
-        f"{SF}/events.parquet", tmp_path / "replay_funnel" / "00.parquet"
+    redelivered = (
+        Landing(spark, tmp_path / "replay")
+        .plant(f"{SF}/events.parquet", f"{SF}/events.parquet")
+        .replay(streaming_funnel_attribution, "funnel_attr_redelivery")
+        .collect()
     )
-    shutil.copy(
-        f"{SF}/events.parquet", tmp_path / "replay_funnel" / "01.parquet"
-    )
-    redelivered = run_stream_to_memory(
-        streaming_funnel_attribution(
-            spark,
-            f"file:{tmp_path}/replay_funnel",
-            glob="*.parquet",
-            max_files_per_trigger=1,
-        ),
-        "funnel_attr_redelivery",
-    ).collect()
     assert len(redelivered) == len(single)
 
 
@@ -2374,77 +1914,36 @@ def test_streaming_funnel_attribution_checkpoint_restart(spark, tmp_path):
     purchase@20d (attributes to (10d, 20d)), then a LATE signup@2d that
     must swap the checkpoint-recovered buffered purchase@5d in as the
     first conversion.  An unchanged-source restart emits nothing."""
-    import glob as globmod
-    import shutil
-
     from googlecloudstorage_blueprints_spark.streaming import (
         streaming_funnel_attribution,
     )
 
-    src = tmp_path / "src"
-    src.mkdir()
-    sink = f"file:{tmp_path}/sink"
-    ckpt = f"file:{tmp_path}/ckpt"
+    land = Landing(spark, tmp_path)
     day_us = 86_400_000_000
 
-    def plant(rows, name):
-        df = spark.createDataFrame(
-            [
-                (i, r[0] * day_us, 1, r[1], 1.0, "{}")
-                for i, r in enumerate(rows)
-            ],
-            "event_id long, us long, user_id long, event_type string, "
-            "value double, props string",
-        ).select(
-            "event_id",
-            F.timestamp_micros(F.col("us")).alias("ts"),
-            "user_id",
-            "event_type",
-            "value",
-            "props",
-        )
-        d = f"{tmp_path}/stage_{name}"
-        df.coalesce(1).write.mode("overwrite").parquet(f"file:{d}")
-        shutil.move(
-            globmod.glob(f"{d}/part-*.parquet")[0], src / f"{name}.parquet"
-        )
+    def plant(rows):
+        land.plant(_events_frame(
+            spark,
+            [(i, d * day_us, 1, t, 1.0) for i, (d, t) in enumerate(rows)],
+        ))
 
-    def run_once():
-        q = (
-            streaming_funnel_attribution(
-                spark, f"file:{src}", glob="*.parquet"
-            )
-            .writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    plant([(5, "purchase")], "00")
-    run_once()
+    plant([(5, "purchase")])
     # parquet sink writes metadata even with zero rows; the buffered
     # purchase alone must emit none
-    import pyspark.sql.utils  # noqa: F401
-
-    n0 = spark.read.parquet(sink).count()
+    n0 = land.drain(streaming_funnel_attribution).count()
     assert n0 == 0, "pre-signup purchase alone must not emit"
 
-    plant([(10, "signup"), (20, "purchase")], "01")
-    run_once()
-    rows = spark.read.parquet(sink).collect()
+    plant([(10, "signup"), (20, "purchase")])
+    rows = land.drain(streaming_funnel_attribution).collect()
     assert {
         (r["signup_us"], r["purchase_us"]) for r in rows
     } == {(10 * day_us, 20 * day_us)}
 
-    run_once()  # unchanged source: committed files must be skipped
-    assert spark.read.parquet(sink).count() == len(rows)
+    # unchanged source: committed files must be skipped
+    assert land.drain(streaming_funnel_attribution).count() == len(rows)
 
-    plant([(2, "signup")], "02")
-    run_once()
-    final = spark.read.parquet(sink).collect()
+    plant([(2, "signup")])
+    final = land.drain(streaming_funnel_attribution).collect()
     best = max(final, key=lambda r: r["ver"])
     assert (best["signup_us"], best["purchase_us"]) == (
         2 * day_us,
@@ -2458,8 +1957,6 @@ def test_streaming_daily_uniques_hll_tracks_batch_dau(spark, tmp_path):
     batch per-day distinct-user count, and full-backlog redelivery
     must emit NOTHING extra (register max-merge is idempotent — a
     strictly stronger replay property than the partial-sum twins')."""
-    import shutil
-
     from googlecloudstorage_blueprints_spark.sources.catalog import load_table
     from googlecloudstorage_blueprints_spark.streaming import (
         streaming_daily_uniques_hll,
@@ -2491,22 +1988,12 @@ def test_streaming_daily_uniques_hll_tracks_batch_dau(spark, tmp_path):
         assert abs(est - true) <= max(2, 0.1 * true), (d, est, true)
 
     # idempotent redelivery: two copies of the backlog, same emissions
-    (tmp_path / "replay_hll").mkdir()
-    shutil.copy(
-        f"{SF}/events.parquet", tmp_path / "replay_hll" / "00.parquet"
+    redelivered = (
+        Landing(spark, tmp_path)
+        .plant(f"{SF}/events.parquet", f"{SF}/events.parquet")
+        .replay(streaming_daily_uniques_hll, "hll_redelivery")
+        .collect()
     )
-    shutil.copy(
-        f"{SF}/events.parquet", tmp_path / "replay_hll" / "01.parquet"
-    )
-    redelivered = run_stream_to_memory(
-        streaming_daily_uniques_hll(
-            spark,
-            f"file:{tmp_path}/replay_hll",
-            glob="*.parquet",
-            max_files_per_trigger=1,
-        ),
-        "hll_redelivery",
-    ).collect()
     assert len(redelivered) == len(single)
 
 
@@ -2515,68 +2002,31 @@ def test_streaming_daily_uniques_hll_checkpoint_restart(spark, tmp_path):
     the committed file emits nothing; planting NEW users on an
     existing day emits a GROWN estimate whose registers include the
     pre-restart users (est ≈ old + new, not just new)."""
-    import glob as globmod
-    import shutil
-
     from googlecloudstorage_blueprints_spark.streaming import (
         streaming_daily_uniques_hll,
     )
 
-    src = tmp_path / "src"
-    src.mkdir()
-    sink = f"file:{tmp_path}/sink"
-    ckpt = f"file:{tmp_path}/ckpt"
+    land = Landing(spark, tmp_path)
     day_us = 86_400_000_000
 
-    def plant(uids, name):
-        df = spark.createDataFrame(
-            [
-                (i, 500 * day_us + i, int(u), "view", 1.0, "{}")
-                for i, u in enumerate(uids)
-            ],
-            "event_id long, us long, user_id long, event_type string, "
-            "value double, props string",
-        ).select(
-            "event_id",
-            F.timestamp_micros(F.col("us")).alias("ts"),
-            "user_id",
-            "event_type",
-            "value",
-            "props",
-        )
-        d = f"{tmp_path}/stage_{name}"
-        df.coalesce(1).write.mode("overwrite").parquet(f"file:{d}")
-        shutil.move(
-            globmod.glob(f"{d}/part-*.parquet")[0], src / f"{name}.parquet"
-        )
+    def plant(uids):
+        land.plant(_events_frame(
+            spark,
+            [(i, 500 * day_us + i, int(u), "view", 1.0)
+             for i, u in enumerate(uids)],
+        ))
 
-    def run_once():
-        q = (
-            streaming_daily_uniques_hll(
-                spark, f"file:{src}", glob="*.parquet"
-            )
-            .writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    plant(range(1, 31), "00")
-    run_once()
-    first = spark.read.parquet(sink).collect()
+    plant(range(1, 31))
+    first = land.drain(streaming_daily_uniques_hll).collect()
     assert len(first) == 1
     est0 = first[0]["est_distinct"]
     assert abs(est0 - 30) <= 2
 
-    run_once()  # unchanged source: committed file skipped, no emission
-    assert spark.read.parquet(sink).count() == 1
+    # unchanged source: committed file skipped, no emission
+    assert land.drain(streaming_daily_uniques_hll).count() == 1
 
-    plant(range(31, 61), "01")  # 30 NEW users, same day
-    run_once()
-    rows = spark.read.parquet(sink).collect()
+    plant(range(31, 61))  # 30 NEW users, same day
+    rows = land.drain(streaming_daily_uniques_hll).collect()
     best = max(rows, key=lambda r: r["ver"])
     assert abs(best["est_distinct"] - 60) <= 4, (
         "restart must merge new users into the RECOVERED registers"
@@ -2591,8 +2041,6 @@ def test_streaming_active_streaks_matches_batch(spark, tmp_path):
     must exercise the re-emit path (some user's streak or week count
     moves when the first half lands).  Redelivering the backlog emits
     nothing (week-set absorption)."""
-    import shutil
-
     from googlecloudstorage_blueprints_spark.sources.catalog import load_table
     from googlecloudstorage_blueprints_spark.streaming import (
         streaming_active_streaks,
@@ -2648,46 +2096,25 @@ def test_streaming_active_streaks_matches_batch(spark, tmp_path):
     assert {u: nw for u, (_s, nw, _v) in newest.items()} == week_counts
 
     # out-of-order split: the LATER half of the stream arrives first
-    events = load_table(spark, SF, "events")
-    split = events.selectExpr(
-        "timestamp_micros(CAST(percentile_approx(unix_micros(ts), 0.5)"
-        " AS BIGINT)) AS m"
-    ).collect()[0]["m"]
-    out = f"file:{tmp_path}/events_ooo_streaks"
-    events.where(F.col("ts") >= F.lit(split)).coalesce(1).write.mode(
-        "append"
-    ).parquet(out)
-    events.where(F.col("ts") < F.lit(split)).coalesce(1).write.mode(
-        "append"
-    ).parquet(out)
-    ooo = run_stream_to_memory(
-        streaming_active_streaks(
-            spark, out, glob="*.parquet", max_files_per_trigger=1
-        ),
-        "streaks_ooo",
-    ).collect()
+    before, after = halves(load_table(spark, SF, "events"))
+    ooo = (
+        Landing(spark, tmp_path / "ooo")
+        .plant(after, before)
+        .replay(streaming_active_streaks, "streaks_ooo")
+        .collect()
+    )
     assert histogram(newest_per_user(ooo)) == batch
     assert any(r["ver"] > 1 for r in ooo), (
         "out-of-order split must exercise the re-emit path"
     )
 
     # full-backlog redelivery: week sets absorb the replay
-    (tmp_path / "replay_streaks").mkdir()
-    shutil.copy(
-        f"{SF}/events.parquet", tmp_path / "replay_streaks" / "00.parquet"
+    redelivered = (
+        Landing(spark, tmp_path / "replay")
+        .plant(f"{SF}/events.parquet", f"{SF}/events.parquet")
+        .replay(streaming_active_streaks, "streaks_redelivery")
+        .collect()
     )
-    shutil.copy(
-        f"{SF}/events.parquet", tmp_path / "replay_streaks" / "01.parquet"
-    )
-    redelivered = run_stream_to_memory(
-        streaming_active_streaks(
-            spark,
-            f"file:{tmp_path}/replay_streaks",
-            glob="*.parquet",
-            max_files_per_trigger=1,
-        ),
-        "streaks_redelivery",
-    ).collect()
     assert len(redelivered) == len(single)
 
 
@@ -2698,65 +2125,30 @@ def test_streaming_active_streaks_checkpoint_merge(spark, tmp_path):
     gap-filling w+1 then joins the two islands through the RECOVERED
     week set — the newest row must read streak 3 (a +2 jump one new
     week can only produce by merging, never by extending)."""
-    import glob as globmod
-    import shutil
-
     from googlecloudstorage_blueprints_spark.streaming import (
         streaming_active_streaks,
     )
 
-    src = tmp_path / "src"
-    src.mkdir()
-    sink = f"file:{tmp_path}/sink"
-    ckpt = f"file:{tmp_path}/ckpt"
+    land = Landing(spark, tmp_path)
     wk_us = 7 * 86_400 * 1_000_000
 
-    def plant(weeks, name):
-        df = spark.createDataFrame(
-            [
-                (i, w * wk_us + 5_000_000, 1, "view", 1.0, "{}")
-                for i, w in enumerate(weeks)
-            ],
-            "event_id long, us long, user_id long, event_type string, "
-            "value double, props string",
-        ).select(
-            "event_id",
-            F.timestamp_micros(F.col("us")).alias("ts"),
-            "user_id",
-            "event_type",
-            "value",
-            "props",
-        )
-        d = f"{tmp_path}/stage_{name}"
-        df.coalesce(1).write.mode("overwrite").parquet(f"file:{d}")
-        shutil.move(
-            globmod.glob(f"{d}/part-*.parquet")[0], src / f"{name}.parquet"
-        )
+    def plant(weeks):
+        land.plant(_events_frame(
+            spark,
+            [(i, w * wk_us + 5_000_000, 1, "view", 1.0)
+             for i, w in enumerate(weeks)],
+        ))
 
-    def run_once():
-        q = (
-            streaming_active_streaks(spark, f"file:{src}", glob="*.parquet")
-            .writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    plant([100, 102], "00")
-    run_once()
-    first = spark.read.parquet(sink).collect()
+    plant([100, 102])
+    first = land.drain(streaming_active_streaks).collect()
     assert len(first) == 1
     assert (first[0]["max_streak"], first[0]["n_weeks"]) == (1, 2)
 
-    run_once()  # unchanged source: committed file skipped, no emission
-    assert spark.read.parquet(sink).count() == 1
+    # unchanged source: committed file skipped, no emission
+    assert land.drain(streaming_active_streaks).count() == 1
 
-    plant([101], "01")  # the gap filler
-    run_once()
-    rows = spark.read.parquet(sink).collect()
+    plant([101])  # the gap filler
+    rows = land.drain(streaming_active_streaks).collect()
     best = max(rows, key=lambda r: r["ver"])
     assert (best["max_streak"], best["n_weeks"]) == (3, 3), (
         "restart must merge the islands through the recovered week set"
@@ -2812,24 +2204,13 @@ def test_streaming_hourly_load_percentiles_matches_batch(spark, tmp_path):
     assert newest_per_type(single) == batch
 
     # out-of-order split: the LATER half of the stream arrives first
-    events = load_table(spark, SF, "events")
-    split = events.selectExpr(
-        "timestamp_micros(CAST(percentile_approx(unix_micros(ts), 0.5)"
-        " AS BIGINT)) AS m"
-    ).collect()[0]["m"]
-    out = f"file:{tmp_path}/events_ooo_pctl"
-    events.where(F.col("ts") >= F.lit(split)).coalesce(1).write.mode(
-        "append"
-    ).parquet(out)
-    events.where(F.col("ts") < F.lit(split)).coalesce(1).write.mode(
-        "append"
-    ).parquet(out)
-    ooo = run_stream_to_memory(
-        streaming_hourly_load_percentiles(
-            spark, out, glob="*.parquet", max_files_per_trigger=1
-        ),
-        "hourly_pctl_ooo",
-    ).collect()
+    before, after = halves(load_table(spark, SF, "events"))
+    ooo = (
+        Landing(spark, tmp_path)
+        .plant(after, before)
+        .replay(streaming_hourly_load_percentiles, "hourly_pctl_ooo")
+        .collect()
+    )
     assert newest_per_type(ooo) == batch
     assert any(r["ver"] > 1 for r in ooo)
 
@@ -2844,58 +2225,22 @@ def test_streaming_hourly_load_percentiles_checkpoint_restart(
     the MERGED ledger — closed form: hour A gets 3 events, restart,
     hour B gets 1 and hour A one more ⇒ counts {4, 1}, p50 = 1 +
     (4−1)·0.5 = 2.5, max 4, n_hours 2."""
-    import glob as globmod
-    import shutil
-
     from googlecloudstorage_blueprints_spark.streaming import (
         streaming_hourly_load_percentiles,
     )
 
-    src = tmp_path / "src"
-    src.mkdir()
-    sink = f"file:{tmp_path}/sink"
-    ckpt = f"file:{tmp_path}/ckpt"
+    land = Landing(spark, tmp_path)
     hr_us = 3_600_000_000
 
-    def plant(hours, name):
-        df = spark.createDataFrame(
-            [
-                (i, h * hr_us + 5_000_000, 1, "view", 1.0, "{}")
-                for i, h in enumerate(hours)
-            ],
-            "event_id long, us long, user_id long, event_type string, "
-            "value double, props string",
-        ).select(
-            "event_id",
-            F.timestamp_micros(F.col("us")).alias("ts"),
-            "user_id",
-            "event_type",
-            "value",
-            "props",
-        )
-        d = f"{tmp_path}/stage_{name}"
-        df.coalesce(1).write.mode("overwrite").parquet(f"file:{d}")
-        shutil.move(
-            globmod.glob(f"{d}/part-*.parquet")[0], src / f"{name}.parquet"
-        )
+    def plant(hours):
+        land.plant(_events_frame(
+            spark,
+            [(i, h * hr_us + 5_000_000, 1, "view", 1.0)
+             for i, h in enumerate(hours)],
+        ))
 
-    def run_once():
-        q = (
-            streaming_hourly_load_percentiles(
-                spark, f"file:{src}", glob="*.parquet"
-            )
-            .writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    plant([500, 500, 500], "00")
-    run_once()
-    first = spark.read.parquet(sink).collect()
+    plant([500, 500, 500])
+    first = land.drain(streaming_hourly_load_percentiles).collect()
     assert len(first) == 1
     assert (
         first[0]["n_hours"],
@@ -2903,12 +2248,11 @@ def test_streaming_hourly_load_percentiles_checkpoint_restart(
         first[0]["p50_load"],
     ) == (1, 3, 3.0)
 
-    run_once()  # unchanged source: committed file skipped, no emission
-    assert spark.read.parquet(sink).count() == 1
+    # unchanged source: committed file skipped, no emission
+    assert land.drain(streaming_hourly_load_percentiles).count() == 1
 
-    plant([501, 500], "01")  # new hour + top-up through recovered state
-    run_once()
-    rows = spark.read.parquet(sink).collect()
+    plant([501, 500])  # new hour + top-up through recovered state
+    rows = land.drain(streaming_hourly_load_percentiles).collect()
     best = max(rows, key=lambda r: r["ver"])
     assert (
         best["n_hours"],
@@ -3003,26 +2347,20 @@ def test_streaming_ship_latency_join_matches_batch(spark, tmp_path):
         "timestamp_micros(CAST(percentile_approx("
         "unix_micros(o_orderdate), 0.5) AS BIGINT)) AS m"
     ).collect()[0]["m"]
-    odir = f"file:{tmp_path}/o_split"
-    ldir = f"file:{tmp_path}/l_split"
-    orders.where(F.col("o_orderdate") <= F.lit(split)).coalesce(
-        1
-    ).write.mode("append").parquet(odir)
-    orders.where(F.col("o_orderdate") > F.lit(split)).coalesce(
-        1
-    ).write.mode("append").parquet(odir)
-    lines.where(F.col("l_shipdate") <= F.lit(split)).coalesce(
-        1
-    ).write.mode("append").parquet(ldir)
-    lines.where(F.col("l_shipdate") > F.lit(split)).coalesce(
-        1
-    ).write.mode("append").parquet(ldir)
+    odir = Landing(spark, tmp_path / "o").plant(
+        orders.where(F.col("o_orderdate") <= F.lit(split)),
+        orders.where(F.col("o_orderdate") > F.lit(split)),
+    )
+    ldir = Landing(spark, tmp_path / "l").plant(
+        lines.where(F.col("l_shipdate") <= F.lit(split)),
+        lines.where(F.col("l_shipdate") > F.lit(split)),
+    )
     split_rows = run_stream_to_memory(
         streaming_ship_latency_join(
             spark,
             SF,
-            orders_dir=odir,
-            lineitem_dir=ldir,
+            orders_dir=odir.uri,
+            lineitem_dir=ldir.uri,
             orders_glob="*.parquet",
             lineitem_glob="*.parquet",
             max_files_per_trigger=1,
@@ -3042,21 +2380,16 @@ def test_streaming_ship_latency_join_drops_late_beyond_watermark(
     at any corpus size.  Sequence: order A + its first line match
     (1 row); far-future sentinels advance both watermarks ~8000 days;
     A's second line then arrives 7997 days late and must NOT emit."""
-    import glob as globmod
-    import shutil
-
     from googlecloudstorage_blueprints_spark.streaming import (
         streaming_ship_latency_join,
     )
 
-    odir = tmp_path / "o_src"
-    ldir = tmp_path / "l_src"
-    odir.mkdir()
-    ldir.mkdir()
+    odir = Landing(spark, tmp_path / "o")
+    ldir = Landing(spark, tmp_path / "l")
     day_us = 86_400_000_000
 
-    def plant_orders(rows, name):
-        df = spark.createDataFrame(
+    def plant_orders(rows):
+        odir.plant(spark.createDataFrame(
             [(k, d * day_us, "O", 1.0, "p", 0, "c") for k, d in rows],
             "o_orderkey long, us long, o_orderstatus string, "
             "o_totalprice double, o_orderpriority string, "
@@ -3069,15 +2402,10 @@ def test_streaming_ship_latency_join_drops_late_beyond_watermark(
             "o_orderpriority",
             "o_shippriority",
             "o_comment",
-        )
-        d = f"{tmp_path}/stage_o_{name}"
-        df.coalesce(1).write.mode("overwrite").parquet(f"file:{d}")
-        shutil.move(
-            globmod.glob(f"{d}/part-*.parquet")[0], odir / f"{name}.parquet"
-        )
+        ))
 
-    def plant_lines(rows, name):
-        df = spark.createDataFrame(
+    def plant_lines(rows):
+        ldir.plant(spark.createDataFrame(
             [(k, ln, d * day_us, 1.0, 1.0) for k, ln, d in rows],
             "l_orderkey long, l_linenumber long, us long, "
             "l_quantity double, l_extendedprice double",
@@ -3087,52 +2415,34 @@ def test_streaming_ship_latency_join_drops_late_beyond_watermark(
             F.timestamp_micros(F.col("us")).alias("l_shipdate"),
             "l_quantity",
             "l_extendedprice",
-        )
-        d = f"{tmp_path}/stage_l_{name}"
-        df.coalesce(1).write.mode("overwrite").parquet(f"file:{d}")
-        shutil.move(
-            globmod.glob(f"{d}/part-*.parquet")[0], ldir / f"{name}.parquet"
-        )
+        ))
 
-    sink = f"file:{tmp_path}/sink"
-    ckpt = f"file:{tmp_path}/ckpt"
-
-    def run_once():
-        q = (
+    def drain():
+        return odir.sink(
             streaming_ship_latency_join(
                 spark,
                 str(tmp_path),
-                orders_dir=f"file:{odir}",
-                lineitem_dir=f"file:{ldir}",
+                orders_dir=odir.uri,
+                lineitem_dir=ldir.uri,
                 orders_glob="*.parquet",
                 lineitem_glob="*.parquet",
                 max_files_per_trigger=1,
             )
-            .writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination(120)
 
-    plant_orders([(7, 1000)], "00")
-    plant_lines([(7, 1, 1001)], "00")
-    run_once()
-    assert spark.read.parquet(sink).count() == 1
+    plant_orders([(7, 1000)])
+    plant_lines([(7, 1, 1001)])
+    assert drain().count() == 1
 
     # sentinels on BOTH feeds: global watermark jumps past 1000 + 2500
-    plant_orders([(999, 9000)], "01")
-    plant_lines([(998, 1, 9000)], "01")
-    run_once()
-    assert spark.read.parquet(sink).count() == 1  # sentinels don't match
+    plant_orders([(999, 9000)])
+    plant_lines([(998, 1, 9000)])
+    assert drain().count() == 1  # sentinels don't match
 
     # A's second line, 7997 days late: state evicted, row dropped
-    plant_orders([(997, 9001)], "02")
-    plant_lines([(7, 2, 1002)], "02")
-    run_once()
-    got = spark.read.parquet(sink).collect()
+    plant_orders([(997, 9001)])
+    plant_lines([(7, 2, 1002)])
+    got = drain().collect()
     assert len(got) == 1 and got[0]["o_orderkey"] == 7
     assert got[0]["lat_days"] == 1
 
@@ -3144,9 +2454,6 @@ def test_streaming_ship_latency_windows_chained_stateful(spark, tmp_path):
     identical epoch-anchored window expression computed in batch —
     counts, integer sums and the float mean — and every window must
     emit exactly once."""
-    import glob as globmod
-    import shutil
-
     from googlecloudstorage_blueprints_spark.sources.catalog import load_table
     from googlecloudstorage_blueprints_spark.streaming import (
         streaming_ship_latency_windows,
@@ -3182,12 +2489,6 @@ def test_streaming_ship_latency_windows_chained_stateful(spark, tmp_path):
         )
     }
 
-    odir = tmp_path / "o_src"
-    ldir = tmp_path / "l_src"
-    odir.mkdir()
-    ldir.mkdir()
-    shutil.copy(f"{SF}/orders.parquet", odir / "00.parquet")
-    shutil.copy(f"{SF}/lineitem.parquet", ldir / "00.parquet")
     day_us = 86_400_000_000
 
     so = spark.createDataFrame(
@@ -3203,19 +2504,15 @@ def test_streaming_ship_latency_windows_chained_stateful(spark, tmp_path):
         "l_linenumber",
         F.timestamp_micros(F.col("us")).alias("l_shipdate"),
     )
-    for df, dest, name in ((so, odir, "o01"), (sl, ldir, "l01")):
-        d = f"{tmp_path}/stage_{name}"
-        df.coalesce(1).write.mode("overwrite").parquet(f"file:{d}")
-        shutil.move(
-            globmod.glob(f"{d}/part-*.parquet")[0], dest / f"{name}.parquet"
-        )
+    odir = Landing(spark, tmp_path / "o").plant(f"{SF}/orders.parquet", so)
+    ldir = Landing(spark, tmp_path / "l").plant(f"{SF}/lineitem.parquet", sl)
 
     rows = run_stream_to_memory(
         streaming_ship_latency_windows(
             spark,
             SF,
-            orders_dir=f"file:{odir}",
-            lineitem_dir=f"file:{ldir}",
+            orders_dir=odir.uri,
+            lineitem_dir=ldir.uri,
             orders_glob="*.parquet",
             lineitem_glob="*.parquet",
             max_files_per_trigger=1,
@@ -3238,68 +2535,31 @@ def test_streaming_growth_accounting_checkpoint_restart(spark, tmp_path):
     nothing; a late gap-filling 101 must then flip 102
     resurrected → retained THROUGH the recovered set — closed form:
     newest classes become {100: new, 101: retained, 102: retained}."""
-    import glob as globmod
-    import shutil
-
     from googlecloudstorage_blueprints_spark.streaming import (
         streaming_growth_accounting,
     )
 
-    src = tmp_path / "src"
-    src.mkdir()
-    sink = f"file:{tmp_path}/sink"
-    ckpt = f"file:{tmp_path}/ckpt"
+    land = Landing(spark, tmp_path)
     wk_us = 7 * 86_400 * 1_000_000
 
-    def plant(weeks, name):
-        df = spark.createDataFrame(
-            [
-                (i, w * wk_us + 5_000_000, 1, "view", 1.0, "{}")
-                for i, w in enumerate(weeks)
-            ],
-            "event_id long, us long, user_id long, event_type string, "
-            "value double, props string",
-        ).select(
-            "event_id",
-            F.timestamp_micros(F.col("us")).alias("ts"),
-            "user_id",
-            "event_type",
-            "value",
-            "props",
-        )
-        d = f"{tmp_path}/stage_{name}"
-        df.coalesce(1).write.mode("overwrite").parquet(f"file:{d}")
-        shutil.move(
-            globmod.glob(f"{d}/part-*.parquet")[0], src / f"{name}.parquet"
-        )
+    def plant(weeks):
+        land.plant(_events_frame(
+            spark,
+            [(i, w * wk_us + 5_000_000, 1, "view", 1.0)
+             for i, w in enumerate(weeks)],
+        ))
 
-    def run_once():
-        q = (
-            streaming_growth_accounting(
-                spark, f"file:{src}", glob="*.parquet"
-            )
-            .writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    plant([100, 102], "00")
-    run_once()
-    first = spark.read.parquet(sink).collect()
+    plant([100, 102])
+    first = land.drain(streaming_growth_accounting).collect()
     assert {
         (r["epoch_week"], r["cls"]) for r in first
     } == {(100, "new"), (102, "resurrected")}
 
-    run_once()  # unchanged source: committed file skipped, no emission
-    assert spark.read.parquet(sink).count() == 2
+    # unchanged source: committed file skipped, no emission
+    assert land.drain(streaming_growth_accounting).count() == 2
 
-    plant([101], "01")  # the gap filler
-    run_once()
-    rows = spark.read.parquet(sink).collect()
+    plant([101])  # the gap filler
+    rows = land.drain(streaming_growth_accounting).collect()
     newest = {}
     for r in rows:
         k = r["epoch_week"]
@@ -3320,57 +2580,33 @@ def test_streaming_lsh_candidates_checkpoint_restart(spark, tmp_path):
     PRE-restart resident through every recovered band bucket —
     candidate (1, 2) emitted, once per band, zero pairs lost at the
     restart boundary."""
-    import glob as globmod
-    import shutil
-
     from googlecloudstorage_blueprints_spark.streaming import (
         streaming_lsh_candidates,
     )
 
-    src = tmp_path / "src"
-    src.mkdir()
-    sink = f"file:{tmp_path}/sink"
-    ckpt = f"file:{tmp_path}/ckpt"
+    land = Landing(spark, tmp_path)
     text = (
         "the quick brown fox jumps over the lazy dog and then "
         "does it again for good measure with plenty of shingles "
         "to fill every band of the minhash signature completely"
     )
 
-    def plant(doc_id, name):
-        df = spark.createDataFrame(
+    def plant(doc_id):
+        land.plant(spark.createDataFrame(
             [(doc_id, text, "en", "web", len(text))],
             "doc_id long, text string, lang string, source string, "
             "n_chars long",
-        )
-        d = f"{tmp_path}/stage_{name}"
-        df.coalesce(1).write.mode("overwrite").parquet(f"file:{d}")
-        shutil.move(
-            globmod.glob(f"{d}/part-*.parquet")[0], src / f"{name}.parquet"
-        )
+        ))
 
-    def run_once():
-        q = (
-            streaming_lsh_candidates(spark, f"file:{src}", glob="*.parquet")
-            .writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
+    plant(1)
+    # lone resident, no pair
+    assert land.drain(streaming_lsh_candidates).count() == 0
 
-    plant(1, "00")
-    run_once()
-    assert spark.read.parquet(sink).count() == 0  # lone resident, no pair
+    # unchanged source: committed file skipped, no emission
+    assert land.drain(streaming_lsh_candidates).count() == 0
 
-    run_once()  # unchanged source: committed file skipped, no emission
-    assert spark.read.parquet(sink).count() == 0
-
-    plant(2, "01")  # identical text: collides in EVERY band
-    run_once()
-    rows = spark.read.parquet(sink).collect()
+    plant(2)  # identical text: collides in EVERY band
+    rows = land.drain(streaming_lsh_candidates).collect()
     assert rows, "restart lost the pre-restart bucket residents"
     assert {(r["doc_a"], r["doc_b"]) for r in rows} == {(1, 2)}
     bands = [r["band_id"] for r in rows]
@@ -3383,67 +2619,30 @@ def test_streaming_latest_snapshot_checkpoint_restart(spark, tmp_path):
     (ts_us, event_id) race against the recovered snapshot (no emission
     — the regression a naive restart would allow), and a post-restart
     NEWER record must advance it (one emission)."""
-    import glob as globmod
-    import shutil
-
     from googlecloudstorage_blueprints_spark.streaming import (
         streaming_latest_snapshot,
     )
 
-    src = tmp_path / "src"
-    src.mkdir()
-    sink = f"file:{tmp_path}/sink"
-    ckpt = f"file:{tmp_path}/ckpt"
+    land = Landing(spark, tmp_path)
     day_us = 86_400_000_000
 
-    def plant(rows, name):
-        df = spark.createDataFrame(
-            [
-                (eid, d * day_us, 1, et, val, "{}")
-                for eid, d, et, val in rows
-            ],
-            "event_id long, us long, user_id long, event_type string, "
-            "value double, props string",
-        ).select(
-            "event_id",
-            F.timestamp_micros(F.col("us")).alias("ts"),
-            "user_id",
-            "event_type",
-            "value",
-            "props",
-        )
-        d = f"{tmp_path}/stage_{name}"
-        df.coalesce(1).write.mode("overwrite").parquet(f"file:{d}")
-        shutil.move(
-            globmod.glob(f"{d}/part-*.parquet")[0], src / f"{name}.parquet"
-        )
+    def plant(rows):
+        land.plant(_events_frame(
+            spark,
+            [(eid, d * day_us, 1, et, val) for eid, d, et, val in rows],
+        ))
 
-    def run_once():
-        q = (
-            streaming_latest_snapshot(spark, f"file:{src}", glob="*.parquet")
-            .writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    plant([(10, 1000, "purchase", 5.0)], "00")
-    run_once()
-    first = spark.read.parquet(sink).collect()
+    plant([(10, 1000, "purchase", 5.0)])
+    first = land.drain(streaming_latest_snapshot).collect()
     assert len(first) == 1 and first[0]["event_id"] == 10
 
-    plant([(9, 999, "view", 1.0)], "01")  # OLDER: must lose the race
-    run_once()
-    assert spark.read.parquet(sink).count() == 1, (
+    plant([(9, 999, "view", 1.0)])  # OLDER: must lose the race
+    assert land.drain(streaming_latest_snapshot).count() == 1, (
         "restart regressed the snapshot to an older record"
     )
 
-    plant([(11, 1001, "view", 2.0)], "02")  # NEWER: must advance
-    run_once()
-    rows = spark.read.parquet(sink).collect()
+    plant([(11, 1001, "view", 2.0)])  # NEWER: must advance
+    rows = land.drain(streaming_latest_snapshot).collect()
     assert len(rows) == 2
     best = max(rows, key=lambda r: (r["ts_us"], r["event_id"]))
     assert best["event_id"] == 11
@@ -3456,56 +2655,37 @@ def test_streaming_sequence_pack_checkpoint_restart(spark, tmp_path):
     replaying the committed file emits nothing; a post-restart doc
     must start at the RECOVERED offset 2500 ⇒ bin 1 — a lost offset
     would restart it at bin 0."""
-    import glob as globmod
-    import shutil
-
     from googlecloudstorage_blueprints_spark.streaming import (
         streaming_sequence_pack,
     )
 
-    src = tmp_path / "src"
-    src.mkdir()
-    sink = f"file:{tmp_path}/sink"
-    ckpt = f"file:{tmp_path}/ckpt"
+    land = Landing(spark, tmp_path)
 
-    def plant(rows, name):
-        df = spark.createDataFrame(
+    def plant(rows):
+        land.plant(spark.createDataFrame(
             [
                 (doc_id, " ".join(["w"] * n), "en", "web", 2 * n - 1)
                 for doc_id, n in rows
             ],
             "doc_id long, text string, lang string, source string, "
             "n_chars long",
-        )
-        d = f"{tmp_path}/stage_{name}"
-        df.coalesce(1).write.mode("overwrite").parquet(f"file:{d}")
-        shutil.move(
-            globmod.glob(f"{d}/part-*.parquet")[0], src / f"{name}.parquet"
-        )
+        ))
 
-    def run_once():
-        q = (
-            streaming_sequence_pack(spark, f"file:{src}", glob="*.parquet")
-            .writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
+    def bins():
+        return {
+            r["doc_id"]: r["bin_id"]
+            for r in land.drain(streaming_sequence_pack).collect()
+        }
 
-    plant([(1, 1500), (2, 1000)], "00")
-    run_once()
-    first = {r["doc_id"]: r["bin_id"] for r in spark.read.parquet(sink).collect()}
+    plant([(1, 1500), (2, 1000)])
+    first = bins()
     assert first == {1: 0, 2: 0}  # doc 2 STARTS at 1500, inside bin 0
 
-    run_once()  # unchanged source: committed file skipped, no emission
-    assert spark.read.parquet(sink).count() == 2
+    # unchanged source: committed file skipped, no emission
+    assert land.drain(streaming_sequence_pack).count() == 2
 
-    plant([(3, 100)], "01")  # starts at recovered offset 2500 ⇒ bin 1
-    run_once()
-    rows = {r["doc_id"]: r["bin_id"] for r in spark.read.parquet(sink).collect()}
+    plant([(3, 100)])  # starts at recovered offset 2500 ⇒ bin 1
+    rows = bins()
     assert rows[3] == 1, (
         "restart lost the running token offset (doc restarted at bin 0)"
     )
@@ -3517,68 +2697,31 @@ def test_streaming_session_starts_checkpoint_restart(spark, tmp_path):
     WITHIN the 30-min gap does NOT open a session (a lost bridge would
     mark it first-ever), and a post-restart event BEYOND the gap
     does — exactly one new mark each way."""
-    import glob as globmod
-    import shutil
-
     from googlecloudstorage_blueprints_spark.streaming import (
         streaming_session_starts,
     )
 
-    src = tmp_path / "src"
-    src.mkdir()
-    sink = f"file:{tmp_path}/sink"
-    ckpt = f"file:{tmp_path}/ckpt"
+    land = Landing(spark, tmp_path)
     base_us = 1_000_000_000_000_000
     minute_us = 60_000_000
 
     def plant(minutes, name):
-        df = spark.createDataFrame(
-            [
-                (i + hash(name) % 1000, base_us + m * minute_us, 1,
-                 "view", 1.0, "{}")
-                for i, m in enumerate(minutes)
-            ],
-            "event_id long, us long, user_id long, event_type string, "
-            "value double, props string",
-        ).select(
-            "event_id",
-            F.timestamp_micros(F.col("us")).alias("ts"),
-            "user_id",
-            "event_type",
-            "value",
-            "props",
-        )
-        d = f"{tmp_path}/stage_{name}"
-        df.coalesce(1).write.mode("overwrite").parquet(f"file:{d}")
-        shutil.move(
-            globmod.glob(f"{d}/part-*.parquet")[0], src / f"{name}.parquet"
-        )
-
-    def run_once():
-        q = (
-            streaming_session_starts(spark, f"file:{src}", glob="*.parquet")
-            .writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
+        land.plant(_events_frame(
+            spark,
+            [(i + hash(name) % 1000, base_us + m * minute_us, 1, "view", 1.0)
+             for i, m in enumerate(minutes)],
+        ))
 
     plant([0], "00")  # first-ever event: one mark at t=0
-    run_once()
-    assert spark.read.parquet(sink).count() == 1
+    assert land.drain(streaming_session_starts).count() == 1
 
     plant([10], "01")  # 10 min later, inside the 30-min gap
-    run_once()
-    assert spark.read.parquet(sink).count() == 1, (
+    assert land.drain(streaming_session_starts).count() == 1, (
         "restart lost the bridge: an in-session event opened a session"
     )
 
     plant([50], "02")  # 40 min after the last event: beyond the gap
-    run_once()
-    rows = spark.read.parquet(sink).collect()
+    rows = land.drain(streaming_session_starts).collect()
     assert len(rows) == 2
     assert {r["start_ts_us"] for r in rows} == {
         base_us,
@@ -3610,9 +2753,6 @@ def test_streaming_table_digest_checkpoint_restart_exactly_once(
     the committed file is skipped, not re-merged), add the second half
     and restart — the recovered per-shard state must continue exactly,
     merging to the batch digest of the FULL corpus."""
-    import glob as globmod
-    import shutil
-
     from googlecloudstorage_blueprints_spark.operators.audit import (
         digest_frame,
     )
@@ -3625,49 +2765,27 @@ def test_streaming_table_digest_checkpoint_restart_exactly_once(
     mid = docs.agg(
         F.expr("percentile_approx(doc_id, 0.5)").cast("long").alias("m")
     ).collect()[0]["m"]
-    src = tmp_path / "src"
-    src.mkdir()
-    sink = f"file:{tmp_path}/sink"
-    ckpt = f"file:{tmp_path}/ckpt"
+    land = Landing(spark, tmp_path).plant(
+        docs.where(F.col("doc_id") <= F.lit(mid))
+    )
 
-    def plant(df, name):
-        d = f"{tmp_path}/stage_{name}"
-        df.coalesce(1).write.mode("overwrite").parquet(f"file:{d}")
-        shutil.move(
-            globmod.glob(f"{d}/part-*.parquet")[0],
-            src / f"{name}.parquet",
+    def drain():
+        return land.drain(
+            streaming_table_digest, table="documents", max_files_per_trigger=1
         )
 
-    def run_once():
-        q = (
-            streaming_table_digest(
-                spark, f"file:{src}", table="documents", glob="*.parquet",
-                max_files_per_trigger=1,
-            )
-            .writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    plant(docs.where(F.col("doc_id") <= F.lit(mid)), "00")
-    run_once()
-    first = spark.read.parquet(sink).count()
+    first = drain().count()
     assert first > 0
-    run_once()  # unchanged source: committed file must be skipped
-    assert spark.read.parquet(sink).count() == first, (
+    # unchanged source: committed file must be skipped
+    assert drain().count() == first, (
         "restart on an unchanged source must emit nothing — the digest "
         "partials are not idempotent, so a re-merge would corrupt them"
     )
-    plant(docs.where(F.col("doc_id") > F.lit(mid)), "01")
-    run_once()
+    land.plant(docs.where(F.col("doc_id") > F.lit(mid)))
 
-    rows = spark.read.parquet(sink).collect()
+    rows = drain().collect()
     batch = digest_frame(spark, SF, ["documents"]).collect()[0]
-    assert _merge_digest_rows(rows) == (
+    assert merge_digest_rows(rows) == (
         batch["n_rows"],
         batch["digest"],
         batch["digest_sum"],

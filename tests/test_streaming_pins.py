@@ -1,13 +1,16 @@
 """Fast-lane batch-equality pins, one per stateful-kernel class of
 ``streaming/stateful.py``: each replays the sf0.001 backlog through one
-streaming twin and checks it against the batch operator.
+``STATEFUL_TWINS`` row and reduces the drained changelog the way its
+class is consumed, then checks it against the batch operator.
 
-- event-time timeout (``streaming_gapfill``);
-- no-timeout changelog, newest emission wins (``streaming_latest_snapshot``);
-- per-batch partial counts, summed (``streaming_transition_matrix``);
-- bounded sketch, exact while the vocabulary fits (``streaming_topk_words``);
-- shard digest (``streaming_table_digest``);
-- band buckets (``streaming_lsh_candidates``).
+- row set: the event-time-timeout grid (``streaming_gapfill``) and the
+  band buckets (``streaming_lsh_candidates``);
+- newest emission per key: the no-timeout changelog
+  (``streaming_latest_snapshot``);
+- summed per-batch partials (``streaming_transition_matrix``);
+- newest-per-shard merge: the bounded sketch, exact while the
+  vocabulary fits (``streaming_topk_words``), and the shard digest
+  (``streaming_table_digest``, on two tables).
 
 The dau_wau mark feed is pinned in ``test_new_ops_r12c``.  The heavier
 replays (multi-batch, redelivery, checkpoint restart) stay in the
@@ -17,66 +20,70 @@ replays (multi-batch, redelivery, checkpoint restart) stay in the
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from googlecloudstorage_blueprints_spark.operators import all_queries
-from googlecloudstorage_blueprints_spark.streaming import run_stream_to_memory
+from googlecloudstorage_blueprints_spark.sources.catalog import load_table
+from googlecloudstorage_blueprints_spark.streaming import (
+    merge_digest_rows,
+    run_stream_to_memory,
+    stateful,
+)
 
 SF = "/root/testdata/sf0.001"
 
 
-def test_streaming_gapfill_matches_batch(spark, tmp_path):
-    """In-order replay of the events backlog must produce exactly the
-    batch events_gapfill rows: same grid, same observed flags, same
-    forward-filled values."""
-    from googlecloudstorage_blueprints_spark.operators import all_queries
-    from googlecloudstorage_blueprints_spark.streaming import (
-        run_stream_to_memory,
-        streaming_gapfill,
-    )
-
-    got = run_stream_to_memory(
-        streaming_gapfill(spark, SF), "gapfill_smoke"
-    )
-    got_rows = {
-        (r["user_id"], r["bucket"], r["observed"], r["filled_value"])
-        for r in got.collect()
-    }
-    batch_rows = {
-        (r["user_id"], r["bucket"], r["observed"], r["filled_value"])
-        for r in all_queries()["events_gapfill"](spark, SF).collect()
-    }
-    assert got_rows == batch_rows and len(batch_rows) > 0
+def _row_set(rows, cols):
+    return {tuple(r[c] for c in cols) for r in rows}
 
 
-def test_streaming_latest_snapshot_matches_batch(spark):
-    """The newest emission per key of the streaming CDC compaction must
-    equal the batch latest_snapshot rows exactly."""
-    from googlecloudstorage_blueprints_spark.operators import all_queries
-    from googlecloudstorage_blueprints_spark.streaming import (
-        run_stream_to_memory,
-        streaming_latest_snapshot,
-    )
-
-    got = run_stream_to_memory(
-        streaming_latest_snapshot(spark, SF), "snapshot_single"
-    )
+def _newest(rows, key, rank):
+    """The highest-``rank`` row for each ``key``."""
     newest = {}
-    for r in got.collect():
-        k = r["user_id"]
-        if k not in newest or (r["ts_us"], r["event_id"]) > (
-            newest[k]["ts_us"],
-            newest[k]["event_id"],
-        ):
+    for r in rows:
+        k = key(r)
+        if k not in newest or rank(r) > rank(newest[k]):
             newest[k] = r
-    got_rows = {
-        (r["user_id"], r["event_id"], r["ts_us"], r["event_type"], r["value"])
-        for r in newest.values()
+    return newest
+
+
+def _summed(rows, key, value):
+    totals = {}
+    for r in rows:
+        k = tuple(r[c] for c in key)
+        totals[k] = totals.get(k, 0) + r[value]
+    return totals
+
+
+def _top20(counts):
+    return sorted(((c, w) for w, (c, _err) in counts.items()),
+                  key=lambda t: (-t[0], t[1]))[:20]
+
+
+def _stream_word_counts(rows):
+    """Newest (max-ver) counter per (shard, word), summed over shards:
+    word -> (est, err), plus the top 20 by (est, word)."""
+    merged = {}
+    for r in _newest(rows, lambda r: (r["shard"], r["word"]),
+                     lambda r: r["ver"]).values():
+        est, err = merged.get(r["word"], (0, 0))
+        merged[r["word"]] = (est + r["est"], err + r["err"])
+    return merged, _top20(merged)
+
+
+def _batch_word_counts(spark):
+    """Exact batch word counts with zero error: word -> (count, 0)."""
+    counts = {
+        r["w"]: (r["c"], 0)
+        for r in load_table(spark, SF, "documents")
+        .where(F.col("text").isNotNull())
+        .select(F.explode(F.split("text", " ")).alias("w"))
+        .where(F.col("w") != "")
+        .groupBy("w")
+        .agg(F.count(F.lit(1)).alias("c"))
+        .collect()
     }
-    batch_rows = {
-        (r["user_id"], r["event_id"], r["ts_us"], r["event_type"], r["value"])
-        for r in all_queries()["latest_snapshot"](spark, SF).collect()
-    }
-    assert got_rows == batch_rows and len(batch_rows) > 0
+    return counts, _top20(counts)
 
 
 def _batch_transition_counts(spark):
@@ -88,158 +95,102 @@ def _batch_transition_counts(spark):
     }
 
 
-def test_streaming_transition_matrix_matches_batch(spark):
-    """Summed partial emissions over a single availableNow replay must
-    equal the batch lead-window transition counts exactly."""
-    from googlecloudstorage_blueprints_spark.streaming import (
-        run_stream_to_memory,
-        streaming_transition_matrix,
-    )
-
-    got_df = run_stream_to_memory(
-        streaming_transition_matrix(spark, SF), "transition_single"
-    )
-    got = {
-        (r["src"], r["dst"]): r["total"]
-        for r in got_df.groupBy("src", "dst")
-        .agg(F.sum("n").alias("total"))
-        .collect()
-    }
-    batch = _batch_transition_counts(spark)
-    assert got == batch and len(batch) > 0
-
-
-def test_streaming_topk_words_exact_when_vocab_fits(spark, tmp_path):
-    """The fixture vocabulary fits the per-shard capacity, so no
-    eviction ever fires: merging the newest (max-ver) counter rows per
-    shard must equal the batch word counts EXACTLY (err all 0), and
-    the global top-20 by (est, word) must match the batch top-20."""
-    from googlecloudstorage_blueprints_spark.sources.catalog import load_table
-    from googlecloudstorage_blueprints_spark.streaming import (
-        run_stream_to_memory,
-        streaming_topk_words,
-    )
-
-    rows = run_stream_to_memory(
-        streaming_topk_words(spark, SF), "topk_words"
-    ).collect()
-    newest = {}
-    for r in rows:
-        k = (r["shard"], r["word"])
-        if k not in newest or r["ver"] > newest[k][2]:
-            newest[k] = (r["est"], r["err"], r["ver"])
-    merged = {}
-    for (_s, w), (est, err, _v) in newest.items():
-        merged[w] = (merged.get(w, (0, 0))[0] + est,
-                     merged.get(w, (0, 0))[1] + err)
-    batch = {
-        r["w"]: r["c"]
-        for r in load_table(spark, SF, "documents")
-        .where(F.col("text").isNotNull())
-        .select(F.explode(F.split("text", " ")).alias("w"))
-        .where(F.col("w") != "")
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .collect()
-    }
-    assert {w: e for w, (e, _err) in merged.items()} == batch
-    assert all(err == 0 for _e, err in merged.values())
-    top_stream = sorted(
-        ((e, w) for w, (e, _err) in merged.items()),
-        key=lambda t: (-t[0], t[1]),
-    )[:20]
-    top_batch = sorted(
-        ((c, w) for w, c in batch.items()), key=lambda t: (-t[0], t[1])
-    )[:20]
-    assert top_stream == top_batch
-
-
-def _merge_digest_rows(rows):
-    """Newest (max-ver) partial per shard, merged the documented way:
-    Σn, XOR of digests, sum of digest_sums mod p."""
-    from googlecloudstorage_blueprints_spark.streaming.stateful import (
-        _DIGEST_SUM_MOD,
-    )
-
-    newest = {}
-    for r in rows:
-        k = r["shard"]
-        if k not in newest or r["ver"] > newest[k]["ver"]:
-            newest[k] = r
-    n = x = s = 0
-    for r in newest.values():
-        n += r["n_rows"]
-        x ^= r["digest"]
-        s = (s + r["digest_sum"]) % _DIGEST_SUM_MOD
-    return n, x, s
-
-
-def test_streaming_table_digest_matches_batch(spark):
-    """Single availableNow replay: the merged newest per-shard partials
-    equal the batch ``table_row_digest`` row exactly — for documents
-    (int/str canonical kinds) AND orders (the ts + money kinds, so the
-    shared ``row_hash_expr`` canonical string is exercised end-to-end
-    on the stream)."""
+def _batch_digest(spark, table):
     from googlecloudstorage_blueprints_spark.operators.audit import (
         digest_frame,
     )
-    from googlecloudstorage_blueprints_spark.streaming import (
-        streaming_table_digest,
-    )
 
-    for table in ("documents", "orders"):
-        rows = run_stream_to_memory(
-            streaming_table_digest(spark, SF, table=table),
-            f"tdigest_{table}",
-        ).collect()
-        assert rows, table
-        batch = digest_frame(spark, SF, [table]).collect()[0]
-        assert _merge_digest_rows(rows) == (
-            batch["n_rows"],
-            batch["digest"],
-            batch["digest_sum"],
-        ), table
+    row = digest_frame(spark, SF, [table]).collect()[0]
+    return row["n_rows"], row["digest"], row["digest_sum"]
 
 
-def test_streaming_lsh_candidates_match_batch_band_join(spark):
-    """The stateful bucket operator must emit EXACTLY the candidate pairs
-    the batch band self-join produces over the same backlog (same shingle
-    hashes, same Arrow kernel, same banding)."""
+def _batch_band_pairs(spark):
+    """Candidate pairs of the batch band self-join over the same
+    shingle hashes, Arrow kernel and banding."""
     from googlecloudstorage_blueprints_spark.operators.dedup import (
         hashed_shingle_docs,
         minhash_signatures_arrow,
     )
-    from googlecloudstorage_blueprints_spark.sources.catalog import load_table
-    from googlecloudstorage_blueprints_spark.streaming import (
-        streaming_lsh_candidates,
-    )
-
-    stream_df = streaming_lsh_candidates(spark, SF)
-    assert stream_df.isStreaming
-    got = run_stream_to_memory(stream_df, "lsh_cand_smoke")
-    got_pairs = {
-        (r["doc_a"], r["doc_b"])
-        for r in got.select("doc_a", "doc_b").distinct().collect()
-    }
 
     docs = hashed_shingle_docs(load_table(spark, SF, "documents"))
     bands = minhash_signatures_arrow(docs, emit_bands=True)
     ba, bb = bands.alias("ba"), bands.alias("bb")
-    batch_pairs = {
-        (r["doc_a"], r["doc_b"])
-        for r in (
-            ba.join(
-                bb,
-                (F.col("ba.band_id") == F.col("bb.band_id"))
-                & (F.col("ba.band_hash") == F.col("bb.band_hash"))
-                & (F.col("ba.doc_id") < F.col("bb.doc_id")),
-            )
-            .select(
-                F.col("ba.doc_id").alias("doc_a"),
-                F.col("bb.doc_id").alias("doc_b"),
-            )
-            .distinct()
-            .collect()
+    return _row_set(
+        ba.join(
+            bb,
+            (F.col("ba.band_id") == F.col("bb.band_id"))
+            & (F.col("ba.band_hash") == F.col("bb.band_hash"))
+            & (F.col("ba.doc_id") < F.col("bb.doc_id")),
         )
-    }
-    assert got_pairs == batch_pairs and len(batch_pairs) > 0
+        .select(
+            F.col("ba.doc_id").alias("doc_a"),
+            F.col("bb.doc_id").alias("doc_b"),
+        )
+        .collect(),
+        ("doc_a", "doc_b"),
+    )
+
+
+_GAPFILL = ("user_id", "bucket", "observed", "filled_value")
+_SNAPSHOT = ("user_id", "event_id", "ts_us", "event_type", "value")
+
+# twin -> (keyword arguments of each replay, reduce(drained rows),
+# batch(spark, **kwargs)); a reduced replay must equal its batch value
+PINS = {
+    "streaming_gapfill": (
+        [{}],
+        lambda rows: _row_set(rows, _GAPFILL),
+        lambda spark: _row_set(
+            all_queries()["events_gapfill"](spark, SF).collect(), _GAPFILL
+        ),
+    ),
+    "streaming_lsh_candidates": (
+        [{}],
+        lambda rows: _row_set(rows, ("doc_a", "doc_b")),
+        _batch_band_pairs,
+    ),
+    "streaming_latest_snapshot": (
+        [{}],
+        lambda rows: _row_set(
+            _newest(rows, lambda r: r["user_id"],
+                    lambda r: (r["ts_us"], r["event_id"])).values(),
+            _SNAPSHOT,
+        ),
+        lambda spark: _row_set(
+            all_queries()["latest_snapshot"](spark, SF).collect(), _SNAPSHOT
+        ),
+    ),
+    "streaming_transition_matrix": (
+        [{}],
+        lambda rows: _summed(rows, ("src", "dst"), "n"),
+        _batch_transition_counts,
+    ),
+    "streaming_topk_words": (
+        [{}],
+        _stream_word_counts,
+        _batch_word_counts,
+    ),
+    "streaming_table_digest": (
+        [{"table": "documents"}, {"table": "orders"}],
+        merge_digest_rows,
+        _batch_digest,
+    ),
+}
+
+
+@pytest.mark.parametrize(
+    "name", [n for n in stateful.STATEFUL_TWINS if n in PINS]
+)
+def test_stateful_twin_matches_batch(spark, name):
+    calls, reduce, batch = PINS[name]
+    for i, kwargs in enumerate(calls):
+        stream_df = getattr(stateful, name)(spark, SF, **kwargs)
+        assert stream_df.isStreaming
+        rows = run_stream_to_memory(stream_df, f"pin_{name}_{i}").collect()
+        want = batch(spark, **kwargs)
+        assert len(rows) > 0 and len(want) > 0, (name, kwargs)
+        assert reduce(rows) == want, (name, kwargs)
+
+
+def test_every_pin_is_a_table_row():
+    assert set(PINS) <= set(stateful.STATEFUL_TWINS)
