@@ -27,7 +27,7 @@ is fully value-checked, not rows-only.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
 from googlecloudstorage_blueprints_spark.functions.frames import (
     local_rows_frame,
@@ -65,6 +65,19 @@ def _release_rdds(sc, rdd_ids) -> None:
             rdd.get().unpersist(True)
 
 
+def _checkpoint_observed(
+    frame: DataFrame, metric: Column
+) -> tuple[DataFrame, object]:
+    """Eagerly ``localCheckpoint`` ``frame`` and return the stored frame
+    with ``metric`` (one aggregate) evaluated over the stored rows by an
+    ``Observation`` in that same job, so no second job re-reads them."""
+    seen = Observation()
+    stored = frame.observe(seen, metric.alias("v")).localCheckpoint(
+        eager=True
+    )
+    return stored, seen.get["v"]
+
+
 def min_label_components(nodes: DataFrame, pairs: DataFrame) -> DataFrame:
     """Min-label propagation to a fixpoint: ``(node, label)`` where label
     is the smallest node id reachable in the undirected graph ``pairs``
@@ -74,10 +87,11 @@ def min_label_components(nodes: DataFrame, pairs: DataFrame) -> DataFrame:
     Convergence signal: labels are monotonically non-increasing (the min
     aggregate always includes the node's own label), so the exact label
     sum strictly decreases on any change and is flat exactly at the
-    fixpoint — one scalar aggregate over the just-checkpointed round
-    instead of a per-round join-and-compare job.  DECIMAL(38,0) keeps
-    the sum exact for arbitrarily large id spaces (BIGINT sum of 1e9
-    ids would overflow, and Spark's ANSI mode throws on overflow).
+    fixpoint — one scalar aggregate, observed inside each round's
+    checkpoint job, instead of a per-round join-and-compare job.
+    DECIMAL(38,0) keeps the sum exact for arbitrarily large id spaces
+    (BIGINT sum of 1e9 ids would overflow, and Spark's ANSI mode throws
+    on overflow).
     ``localCheckpoint`` per round keeps the plan constant-size (the
     classic iterative-Spark failure is plan growth, not data).
 
@@ -110,23 +124,21 @@ def min_label_components(nodes: DataFrame, pairs: DataFrame) -> DataFrame:
         )
         .cache()
     )
-    labels = nodes.select(
-        F.col("node"), F.col("node").alias("label")
-    ).localCheckpoint(eager=True)
-    _sum = F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
-    prev_sum = labels.agg(_sum).collect()[0]["s"]
+    label_sum = F.sum(F.col("label").cast("decimal(38,0)"))
+    labels, prev_sum = _checkpoint_observed(
+        nodes.select(F.col("node"), F.col("node").alias("label")), label_sum
+    )
     for _ in range(MAX_ROUNDS):
         msgs = sym.join(labels, sym.dst == labels.node).select(
             F.col("src").alias("node"), "label"
         )
-        new_labels = (
+        # constant-size plan per round
+        labels, new_sum = _checkpoint_observed(
             labels.union(msgs)
             .groupBy("node")
-            .agg(F.min("label").alias("label"))
-            .localCheckpoint(eager=True)  # constant-size plan per round
+            .agg(F.min("label").alias("label")),
+            label_sum,
         )
-        new_sum = new_labels.agg(_sum).collect()[0]["s"]
-        labels = new_labels
         if new_sum == prev_sum:
             break
         prev_sum = new_sum

@@ -3,9 +3,24 @@ removal → eval-set decontamination → split → partitioned write.
 
 The composed form of the training-data operator family
 (``operators/pipeline.py``, ``operators/dedup.py``, ``sinks/writers.py``)
-— what an LLM-data team actually runs nightly.  One logical plan from
-scan to partitioned write; Catalyst sees the whole pipeline, so filters
-push into the scan and the dedup/split shuffles are the only exchanges.
+— what an LLM-data team actually runs nightly.
+
+Stage boundaries.  The quality, exact-dedup, near-dup and semantic-dedup
+survivors each feed several later steps, so each of those four stages
+ends in one eager ``localCheckpoint`` job that also counts the stage's
+survivors through ``DataFrame.observe`` (the input count rides on the
+first one).  The checkpoint cuts the lineage: every later plan starts at
+the stored rows, so Spark analyses, optimises and renders a plan one
+stage long per job.  A persisted frame keeps its whole upstream plan
+instead, and re-planning that pipeline for every later job cost more
+driver time than the jobs ran (a warm call over 150 documents ran 69
+jobs and 194 stages that way; now 48 and 90).  Within a stage Catalyst
+still sees the whole stage.  Decontamination, redaction and split
+assignment run inside the write job, and the split counts and the
+redaction total are observed on the rows it writes, so nothing is read
+back.  Every checkpoint is released when the call returns or raises;
+the lineage caveat of released checkpoints is in
+``operators.graph.min_label_components``.
 
 Stage order is deliberate and matters at 100 TB:
 
@@ -49,15 +64,36 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
+from googlecloudstorage_blueprints_spark.functions.columns import (
+    shingle_structs,
+)
+from googlecloudstorage_blueprints_spark.operators.dedup import minhash_pairs
+from googlecloudstorage_blueprints_spark.operators.graph import (
+    _checkpoint_observed,
+    _persisted_rdd_ids,
+    _release_rdds,
+    min_label_components,
+)
 from googlecloudstorage_blueprints_spark.operators.semdedup import SEM_TAU
+from googlecloudstorage_blueprints_spark.operators.similarity import (
+    dedup_embedding_cosine,
+)
+from googlecloudstorage_blueprints_spark.operators.text import (
+    _SCAN_DIGITS,
+    _SCAN_EMAIL,
+)
+from googlecloudstorage_blueprints_spark.operators.training import (
+    CONTAM_EVAL_MOD,
+)
 from googlecloudstorage_blueprints_spark.sinks import write_partitioned
 from googlecloudstorage_blueprints_spark.sources.catalog import load_table
 
 MIN_CHARS = 150
 MIN_TOKENS = 30
 MAX_TOP_SHARE = 0.15
+SPLITS = ("train", "val", "test")
 
 
 @dataclass(frozen=True)
@@ -72,17 +108,23 @@ class CurationReport:
     split_counts: dict  # split -> rows written
 
 
-def _with_quality_metrics(docs: DataFrame) -> DataFrame:
+def _rows() -> Column:
+    return F.count(F.lit(1))
+
+
+def _with_quality_metrics(docs: DataFrame, min_chars: int) -> DataFrame:
     """Attach n_tokens and top_token_share without leaving the JVM.
 
     Same metrics as ``quality_filter_funnel`` but computed via the
     explode/groupBy/join shape ONCE and joined back, so the curated rows
-    keep their full payload.  NULL-text documents are dropped here (the
-    inner join back to metrics removes them), matching the operator's
-    explicit ``text IS NOT NULL`` semantics."""
-    words = docs.where(F.col("text").isNotNull()).select(
-        "doc_id", F.explode_outer(F.split("text", " ")).alias("w")
-    )
+    keep their full payload.  Every document keeps its row (a left
+    join), so a count above the join sees the whole input.  Only
+    documents that can pass the length gate are tokenised; the rest,
+    NULL-text documents included (the operator's explicit ``text IS NOT
+    NULL`` semantics), get NULL metrics and fail the token gates."""
+    words = docs.where(
+        F.col("text").isNotNull() & (F.col("n_chars") >= min_chars)
+    ).select("doc_id", F.explode_outer(F.split("text", " ")).alias("w"))
     per = words.groupBy("doc_id", "w").agg(F.count(F.lit(1)).alias("cnt"))
     metrics = per.groupBy("doc_id").agg(
         F.sum("cnt").alias("n_tokens"),
@@ -90,7 +132,7 @@ def _with_quality_metrics(docs: DataFrame) -> DataFrame:
             "top_token_share"
         ),
     )
-    return docs.join(metrics, "doc_id")
+    return docs.join(metrics, "doc_id", "left")
 
 
 def curate_corpus(
@@ -116,17 +158,46 @@ def curate_corpus(
     (default 3, the production scan; 8/13 are the Brown et al./GPT-3
     conventions — pick one from ``contamination_ngram_sensitivity``'s
     sweep before an eval release)."""
-    docs = load_table(spark, sf_dir, "documents")
-    n_input = docs.count()
+    sc = spark.sparkContext
+    ids_before = _persisted_rdd_ids(sc)
+    try:
+        return _curate(
+            spark, sf_dir, out_path, min_chars, min_tokens, max_top_share,
+            sem_tau, contam_ngram_len,
+        )
+    finally:
+        # every stage checkpoint (invisible to DataFrame.unpersist), and
+        # anything a stage left persisted, whether the call returns or raises
+        _release_rdds(sc, _persisted_rdd_ids(sc) - ids_before)
 
-    scored = _with_quality_metrics(docs)
-    # quality survivors feed dedup, decontamination AND the report count:
-    # persist so the metrics join runs once (freed before returning)
-    quality = scored.where(
-        (F.col("n_chars") >= min_chars)
-        & (F.col("n_tokens") >= min_tokens)
-        & (F.col("top_token_share") <= max_top_share)
-    ).persist()
+
+def _curate(
+    spark: SparkSession,
+    sf_dir: str,
+    out_path: str,
+    min_chars: int,
+    min_tokens: int,
+    max_top_share: float,
+    sem_tau: float | None,
+    contam_ngram_len: int,
+) -> CurationReport:
+    docs = load_table(spark, sf_dir, "documents")
+    # the input count is observed above the join, not on its docs side:
+    # adaptive execution replaces a join that meets an empty side by an
+    # empty relation, and an observation inside it would never report
+    input_seen = Observation()
+    scored = _with_quality_metrics(docs, min_chars).observe(
+        input_seen, _rows().alias("n")
+    )
+    # quality survivors feed dedup's keeper and its join: store them
+    quality, n_quality = _checkpoint_observed(
+        scored.where(
+            (F.col("n_chars") >= min_chars)
+            & (F.col("n_tokens") >= min_tokens)
+            & (F.col("top_token_share") <= max_top_share)
+        ),
+        _rows(),
+    )
 
     # exact dedup: one hash-agg on the digest, deterministic min keeper
     keeper = (
@@ -134,20 +205,14 @@ def curate_corpus(
         .agg(F.min("doc_id").alias("doc_id"))
         .select("doc_id")
     )
-    # deduped feeds the near-dup stage, the contamination probe, the
-    # clean anti-join and the report count — persist (freed on return)
-    deduped = quality.join(keeper, "doc_id").persist()
+    # deduped feeds the MinHash pairs, the label nodes and the keeper join
+    deduped, n_deduped = _checkpoint_observed(
+        quality.join(keeper, "doc_id"), _rows()
+    )
 
     # near-dup removal: verified MinHash pairs over the exact survivors,
     # connected components, keep the min doc_id per cluster.  Docs with
     # no near-dup edge are their own component and survive untouched.
-    from googlecloudstorage_blueprints_spark.operators.dedup import (
-        minhash_pairs,
-    )
-    from googlecloudstorage_blueprints_spark.operators.graph import (
-        min_label_components,
-    )
-
     pairs = minhash_pairs(deduped.select("doc_id", "text"))
     labels = min_label_components(
         deduped.select(F.col("doc_id").alias("node")), pairs
@@ -155,8 +220,9 @@ def curate_corpus(
     near_keepers = labels.where(
         F.col("node") == F.col("label")
     ).select(F.col("node").alias("doc_id"))
-    near_deduped = deduped.join(near_keepers, "doc_id").persist()
-    near_deduped.count()  # materialize before freeing the label cache
+    near_deduped, n_near_deduped = _checkpoint_observed(
+        deduped.join(near_keepers, "doc_id"), _rows()
+    )
     labels.unpersist()
     pairs.unpersist()
 
@@ -167,10 +233,6 @@ def curate_corpus(
     # restricted to survivors.  doc_id ↔ vec_id (FIXTURES.md: the
     # embeddings table is per-document).
     if sem_tau is not None:
-        from googlecloudstorage_blueprints_spark.operators.similarity import (
-            dedup_embedding_cosine,
-        )
-
         epairs = dedup_embedding_cosine(spark, sf_dir).where(
             F.col("cosine") >= sem_tau
         )
@@ -180,24 +242,16 @@ def curate_corpus(
             .select(F.col("vec_b").alias("doc_id"))
             .distinct()
         )
-        sem_deduped = near_deduped.join(
-            sem_dropped, "doc_id", "left_anti"
-        ).persist()
-        sem_deduped.count()
+        sem_deduped, n_sem_deduped = _checkpoint_observed(
+            near_deduped.join(sem_dropped, "doc_id", "left_anti"), _rows()
+        )
     else:
-        sem_deduped = near_deduped
+        sem_deduped, n_sem_deduped = near_deduped, n_near_deduped
 
     # decontamination: anti-join deduped survivors against the held-out
     # eval slice's distinct 3-gram index (same shingles and eval rule as
     # the benchmark_contamination operator); a doc sharing ANY eval
     # shingle is dropped before split assignment
-    from googlecloudstorage_blueprints_spark.functions.columns import (
-        shingle_structs,
-    )
-    from googlecloudstorage_blueprints_spark.operators.training import (
-        CONTAM_EVAL_MOD,
-    )
-
     def shingles_of(frame: DataFrame) -> DataFrame:
         k = contam_ngram_len
         return frame.select(
@@ -230,11 +284,6 @@ def curate_corpus(
     # PII redaction on the final survivors (same patterns and
     # email-before-digits order as the pii_redact operator — emails
     # contain digits, so the opposite order changes counts)
-    from googlecloudstorage_blueprints_spark.operators.text import (
-        _SCAN_DIGITS,
-        _SCAN_EMAIL,
-    )
-
     email_red = F.regexp_replace("text", _SCAN_EMAIL, "[EMAIL]")
     n_red = F.regexp_count("text", F.lit(_SCAN_EMAIL)) + F.regexp_count(
         email_red, F.lit(_SCAN_DIGITS)
@@ -245,11 +294,12 @@ def curate_corpus(
         "text", F.regexp_replace(email_red, _SCAN_DIGITS, "[NUM]")
     )
 
+    train, val, test = SPLITS
     bucket = F.expr("((doc_id % 1000003) * 2654435761) % 100")
     split = (
-        F.when(bucket < 80, F.lit("train"))
-        .when(bucket < 90, F.lit("val"))
-        .otherwise(F.lit("test"))
+        F.when(bucket < 80, F.lit(train))
+        .when(bucket < 90, F.lit(val))
+        .otherwise(F.lit(test))
     )
     # the written stats must describe the written text: n_chars/n_tokens
     # are recomputed map-side post-redaction (redaction shortens rows —
@@ -269,30 +319,31 @@ def curate_corpus(
         "split",
     )
 
-    write_partitioned(curated, out_path, ["split"])
-
-    written = spark.read.parquet(out_path)
-    stats = written.groupBy("split").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("n_redactions").alias("red"),
-    ).collect()
-    split_counts = {r["split"]: r["n"] for r in stats}
+    # the written rows are counted per split while the write runs
+    written_seen = Observation()
+    write_partitioned(
+        curated.observe(
+            written_seen,
+            *[F.count_if(F.col("split") == s).alias(s) for s in SPLITS],
+            F.sum("n_redactions").alias("n_redactions"),
+        ),
+        out_path,
+        ["split"],
+    )
+    # the observation sits below the writer's repartition: adaptive
+    # execution replaces that shuffle by an empty relation when it finds
+    # no rows, and the observation then reports no row at all
+    written = written_seen.get if written_seen._jo.getRow().length() else {}
+    split_counts = {s: written[s] for s in SPLITS if written.get(s)}
     # eval-slice docs themselves are held out of the written corpus along
     # with anything sharing a 3-gram with them, so rows written == n_clean
-    n_clean = sum(split_counts.values())
-    report = CurationReport(
-        n_input=n_input,
-        n_quality=quality.count(),
-        n_deduped=deduped.count(),
-        n_near_deduped=near_deduped.count(),
-        n_sem_deduped=sem_deduped.count(),
-        n_clean=n_clean,
-        n_redactions=int(sum(r["red"] or 0 for r in stats)),
+    return CurationReport(
+        n_input=input_seen.get["n"],
+        n_quality=n_quality,
+        n_deduped=n_deduped,
+        n_near_deduped=n_near_deduped,
+        n_sem_deduped=n_sem_deduped,
+        n_clean=sum(split_counts.values()),
+        n_redactions=int(written.get("n_redactions") or 0),
         split_counts=split_counts,
     )
-    if sem_deduped is not near_deduped:
-        sem_deduped.unpersist()
-    near_deduped.unpersist()
-    deduped.unpersist()
-    quality.unpersist()
-    return report

@@ -426,8 +426,6 @@ def test_length_curriculum_stages_partitions_and_cumulates(spark):
 
 
 def _embeddings_table(vecs, labels=None):
-    import numpy as np
-
     n = len(vecs)
     return pa.table(
         {

@@ -202,8 +202,6 @@ def _events_table(rows):
 
 def _orders_table(rows):
     """rows: (o_orderkey, o_custkey, status, price, orderdate, priority)"""
-    import datetime
-
     return pa.table(
         {
             "o_orderkey": pa.array([r[0] for r in rows], pa.int64()),
@@ -222,8 +220,6 @@ def _orders_table(rows):
 
 def _lineitem_rows(pairs):
     """pairs: (l_orderkey, l_linenumber, shipdate) minimal lineitem."""
-    import datetime
-
     n = len(pairs)
     return pa.table(
         {

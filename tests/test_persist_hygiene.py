@@ -58,3 +58,30 @@ def test_op_leaves_only_its_result_persisted(spark, name):
         f"{name}: leaked persisted RDD ids {sorted(leaked)} after "
         "result unpersist"
     )
+
+
+def test_curate_corpus_leaves_nothing_persisted(spark, tmp_path):
+    from googlecloudstorage_blueprints_spark.pipelines import curate_corpus
+
+    before = _persisted_ids(spark)
+    curate_corpus(spark, SF, f"file:{tmp_path}/curated")
+    leaked = _persisted_ids(spark) - before
+    assert not leaked, f"curate_corpus leaked RDD ids {sorted(leaked)}"
+
+
+def test_curate_corpus_failure_leaves_nothing_persisted(
+    spark, tmp_path, monkeypatch
+):
+    """A stage that raises (here the write) must not leave the earlier
+    stages' survivor frames persisted for the rest of the session."""
+    from googlecloudstorage_blueprints_spark.pipelines import curate
+
+    def failing_write(*args, **kwargs):
+        raise OSError("write failed")
+
+    monkeypatch.setattr(curate, "write_partitioned", failing_write)
+    before = _persisted_ids(spark)
+    with pytest.raises(OSError, match="write failed"):
+        curate.curate_corpus(spark, SF, f"file:{tmp_path}/curated")
+    leaked = _persisted_ids(spark) - before
+    assert not leaked, f"failed curate_corpus leaked RDD ids {sorted(leaked)}"

@@ -282,7 +282,6 @@ def test_streaming_lsh_candidates_across_microbatches(spark, tmp_path):
     arrivals only via the bucket state."""
     from googlecloudstorage_blueprints_spark.sources.catalog import load_table
     from googlecloudstorage_blueprints_spark.streaming import (
-        run_stream_to_memory,
         streaming_lsh_candidates,
     )
 
@@ -380,7 +379,6 @@ def test_streaming_sequence_pack_matches_batch_bins(spark):
 def test_streaming_gapfill_across_microbatches(spark, tmp_path):
     """A time-ordered two-batch replay (split on an hour boundary) fills
     the cross-batch gap from keyed state and still equals the batch op."""
-    from googlecloudstorage_blueprints_spark.operators import all_queries
     from googlecloudstorage_blueprints_spark.sources.catalog import load_table
     from googlecloudstorage_blueprints_spark.streaming import (
         streaming_gapfill,
@@ -462,7 +460,6 @@ def test_streaming_latest_snapshot_idempotent_on_redelivery(spark, tmp_path):
     """Redelivering the whole backlog as a second micro-batch must emit
     ZERO new rows (every row loses the (ts_us, event_id) race to state)
     and the snapshot must still equal the batch operator."""
-    from googlecloudstorage_blueprints_spark.operators import all_queries
     from googlecloudstorage_blueprints_spark.streaming import (
         streaming_latest_snapshot,
     )
@@ -522,7 +519,6 @@ def test_streaming_cooccurrence_matches_batch_and_redelivery(
     counts; redelivering the backlog as a second micro-batch must add
     ZERO emissions (seen-type sets absorb repeats)."""
     from googlecloudstorage_blueprints_spark.streaming import (
-        run_stream_to_memory,
         streaming_cooccurrence,
     )
 
@@ -585,7 +581,6 @@ def test_streaming_scd2_matches_batch(spark):
     batch SCD2 interval reconstruction exactly, and every closed
     interval must have been emitted exactly once."""
     from googlecloudstorage_blueprints_spark.streaming import (
-        run_stream_to_memory,
         streaming_scd2_intervals,
     )
 
@@ -623,7 +618,6 @@ def test_streaming_scd2_idempotent_on_redelivery(spark, tmp_path):
     """Redelivering the whole backlog as a second micro-batch must emit
     ZERO rows (every row loses the (ts_us, event_id) race to state)."""
     from googlecloudstorage_blueprints_spark.streaming import (
-        run_stream_to_memory,
         streaming_scd2_intervals,
     )
 
@@ -652,7 +646,6 @@ def test_streaming_dau_wau_feed_matches_batch_and_redelivery(
     emissions (the seen-day set absorbs repeats)."""
     from googlecloudstorage_blueprints_spark.sources.catalog import load_table
     from googlecloudstorage_blueprints_spark.streaming import (
-        run_stream_to_memory,
         streaming_dau_wau,
     )
 
@@ -688,7 +681,6 @@ def test_streaming_dau_wau_rollup_equals_batch_operator(spark):
     the end-to-end proof that the incremental feed carries everything
     the dashboard needs."""
     from googlecloudstorage_blueprints_spark.streaming import (
-        run_stream_to_memory,
         streaming_dau_wau,
     )
 
@@ -810,7 +802,6 @@ def test_streaming_session_path_trigrams_matches_batch(spark):
     equal the batch session_trigram_counts table exactly (the top-k op's
     count core)."""
     from googlecloudstorage_blueprints_spark.streaming import (
-        run_stream_to_memory,
         streaming_session_path_trigrams,
     )
 
@@ -928,7 +919,6 @@ def test_streaming_funnel_delays_matches_batch_and_redelivery(
     from collections import Counter
 
     from googlecloudstorage_blueprints_spark.streaming import (
-        run_stream_to_memory,
         streaming_funnel_delays,
     )
 
@@ -956,9 +946,7 @@ def test_streaming_first_ship_sla_matches_batch(spark):
     """The smallest emission per order of the running-min changelog,
     decorated with priority + SLA flag, must reproduce the batch
     order_priority_sla aggregate exactly."""
-    from googlecloudstorage_blueprints_spark.operators import all_queries
     from googlecloudstorage_blueprints_spark.streaming import (
-        run_stream_to_memory,
         streaming_first_ship_sla,
     )
 
@@ -1060,7 +1048,6 @@ def test_streaming_session_entries_matches_batch_bounce_core(
     sentinel batches push the watermark past every open tail (the
     gapfill-eviction replay technique) — after which EVERY original
     session must have emitted."""
-    from googlecloudstorage_blueprints_spark.operators import all_queries
     from googlecloudstorage_blueprints_spark.streaming import (
         streaming_session_entries,
     )
@@ -1092,7 +1079,6 @@ def test_streaming_session_depth_matches_batch_conversion_core(
     must reproduce the batch session_depth_conversion table exactly —
     same sentinel-drain technique as the entries twin (two far-future
     batches push the watermark past every open tail)."""
-    from googlecloudstorage_blueprints_spark.operators import all_queries
     from googlecloudstorage_blueprints_spark.streaming import (
         streaming_session_depth,
     )
@@ -1125,9 +1111,7 @@ def test_streaming_first_touch_matches_batch_first_pick(spark):
     batch user_first_touch_attribution rank-window pick: aggregating the
     changelog's final state per channel reproduces the batch op's
     (first_type, n_users) exactly."""
-    from googlecloudstorage_blueprints_spark.operators import all_queries
     from googlecloudstorage_blueprints_spark.streaming import (
-        run_stream_to_memory,
         streaming_first_touch,
     )
 
@@ -1190,7 +1174,6 @@ def test_streaming_pair_latency_matches_batch(spark):
     columns exactly (the percentile columns are deliberately not
     streamed — non-mergeable)."""
     from googlecloudstorage_blueprints_spark.streaming import (
-        run_stream_to_memory,
         streaming_pair_latency,
     )
 
@@ -1284,7 +1267,6 @@ def test_streaming_weekly_conversion_matches_batch_and_redelivery(
     distinct columns exactly, conversion_share included."""
     from googlecloudstorage_blueprints_spark.sources.catalog import load_table
     from googlecloudstorage_blueprints_spark.streaming import (
-        run_stream_to_memory,
         streaming_weekly_conversion,
     )
 
@@ -1359,7 +1341,6 @@ def test_streaming_order_close_matches_batch_and_redelivery(
     ZERO emissions (non-advancing rows lose the max race)."""
     from googlecloudstorage_blueprints_spark.sources.catalog import load_table
     from googlecloudstorage_blueprints_spark.streaming import (
-        run_stream_to_memory,
         streaming_order_close,
     )
 
@@ -1405,7 +1386,6 @@ def test_streaming_growth_accounting_matches_batch_and_reclassifies(
     the first half lands).  Redelivering the backlog emits nothing."""
     from googlecloudstorage_blueprints_spark.sources.catalog import load_table
     from googlecloudstorage_blueprints_spark.streaming import (
-        run_stream_to_memory,
         streaming_growth_accounting,
     )
 
@@ -1483,7 +1463,6 @@ def test_streaming_topk_words_bounds_over_capacity(spark, tmp_path):
     import pyarrow.parquet as pq
 
     from googlecloudstorage_blueprints_spark.streaming import (
-        run_stream_to_memory,
         streaming_topk_words,
     )
     from googlecloudstorage_blueprints_spark.streaming.stateful import (
@@ -1591,7 +1570,6 @@ def test_streaming_intersession_gaps_matches_batch(spark):
     deliberately not streamed — non-mergeable, the pair-latency
     precedent)."""
     from googlecloudstorage_blueprints_spark.streaming import (
-        run_stream_to_memory,
         streaming_intersession_gaps,
     )
 
@@ -1642,7 +1620,6 @@ def test_streaming_session_starts_matches_batch_histogram(spark):
     regrouped histogram must equal user_session_count_histogram
     row-for-row."""
     from googlecloudstorage_blueprints_spark.streaming import (
-        run_stream_to_memory,
         streaming_session_starts,
     )
 
@@ -1708,7 +1685,6 @@ def test_streaming_cohort_retention_matches_batch_and_reclassifies(
     Redelivering the backlog emits nothing."""
     from googlecloudstorage_blueprints_spark.sources.catalog import load_table
     from googlecloudstorage_blueprints_spark.streaming import (
-        run_stream_to_memory,
         streaming_cohort_retention,
     )
 
