@@ -57,12 +57,13 @@ def _persisted_rdd_ids(sc) -> set[int]:
 
 
 def _release_rdds(sc, rdd_ids) -> None:
-    """Blocking-unpersist the given RDD ids (checkpoint hygiene)."""
-    jmap = sc._jsc.sc().getPersistentRDDs()
+    """Blocking-release the storage of the given RDD ids (checkpoint
+    hygiene).  ``RDD.unpersist`` logs a WARN for each locally
+    checkpointed RDD before it makes this same call; its released
+    checkpoints are never read again, so the warning says nothing."""
+    jsc = sc._jsc.sc()
     for rid in sorted(rdd_ids):
-        rdd = jmap.get(rid)
-        if rdd.isDefined():
-            rdd.get().unpersist(True)
+        jsc.unpersistRDD(rid, True)
 
 
 def _checkpoint_observed(

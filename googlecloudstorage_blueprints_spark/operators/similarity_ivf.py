@@ -29,6 +29,7 @@ check; recall vs. the exact bruteforce is pinned in tests).
 from __future__ import annotations
 
 from collections.abc import Iterator
+from operator import itemgetter
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -55,6 +56,27 @@ TRAIN_ITERS = 5
 TRAIN_SAMPLE = 100_000  # hard cap on rows collected for k-means training —
 # a coarse quantizer needs a sketch of the density, not the corpus; the
 # driver never materializes more than this regardless of corpus size
+
+
+def _sample_training_rows(emb: DataFrame, n_corpus: int) -> list:
+    """The bounded, deterministic trainer sample of ``(vec_id, embedding)``
+    rows, sorted by vec_id, shared by every quantizer build.
+
+    The driver materializes at most TRAIN_SAMPLE rows.  Under the cap the
+    sample IS the corpus (fixture SFs all fit); above it a seeded
+    Bernoulli sample + limit keeps training O(TRAIN_SAMPLE) while the
+    corpus stays distributed.  Sorting by vec_id makes the k-means init
+    deterministic either way.  The sort runs on the driver: one job,
+    where ``orderBy`` adds a sampling and a shuffle job, and the limit
+    keeps the same rows under either (the first in partition order)."""
+    sample_src = emb.select("vec_id", "embedding")
+    if n_corpus > TRAIN_SAMPLE:
+        fraction = min(1.0, (TRAIN_SAMPLE * 1.2) / n_corpus)
+        sample_src = sample_src.sample(fraction=fraction, seed=42).limit(
+            TRAIN_SAMPLE
+        )
+    # bounded: TRAIN_SAMPLE rows
+    return sorted(sample_src.collect(), key=itemgetter("vec_id"))
 
 
 def _train_centroids(sample: list[list[float]]):
@@ -115,20 +137,7 @@ def similarity_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _valid_vectors(load_table(spark, sf_dir, "embeddings"))
 
-    # -- train on a BOUNDED sample: the driver materializes at most
-    #    TRAIN_SAMPLE rows.  Under the cap the sample IS the corpus
-    #    (fixture SFs all fit, so test behavior is unchanged); above it a
-    #    seeded Bernoulli sample + limit keeps training O(TRAIN_SAMPLE)
-    #    while the corpus stays distributed.  orderBy(vec_id) makes the
-    #    k-means init deterministic either way.
-    n_corpus = emb.count()
-    sample_src = emb.select("vec_id", "embedding")
-    if n_corpus > TRAIN_SAMPLE:
-        fraction = min(1.0, (TRAIN_SAMPLE * 1.2) / n_corpus)
-        sample_src = sample_src.sample(
-            fraction=fraction, seed=42
-        ).limit(TRAIN_SAMPLE)
-    train_rows = sample_src.orderBy("vec_id").collect()
+    train_rows = _sample_training_rows(emb, emb.count())
     if not train_rows:
         # zero-row input (empty-catalog audit, r17): nothing to train on,
         # nothing to search — an empty typed frame, not a numpy error
@@ -153,11 +162,11 @@ def similarity_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # -- probe list per query: NPROBE nearest centroids (driver-side; the
     #    query block is N_QUERIES rows, collected separately so it never
     #    depends on the training sample containing them)
-    q_rows = (
+    q_rows = sorted(
         emb.select("vec_id", "embedding")
         .where(F.col("vec_id") < N_QUERIES)
-        .orderBy("vec_id")
-        .collect()
+        .collect(),
+        key=itemgetter("vec_id"),
     )
     q_mat = np.asarray([r["embedding"] for r in q_rows], dtype=np.float64)
     q_mat = q_mat / np.linalg.norm(q_mat, axis=1, keepdims=True)

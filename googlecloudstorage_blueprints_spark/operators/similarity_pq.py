@@ -36,6 +36,7 @@ bruteforce and determinism are pinned in tests/test_similarity_pq.py).
 from __future__ import annotations
 
 from collections.abc import Iterator
+from operator import itemgetter
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -52,7 +53,7 @@ from googlecloudstorage_blueprints_spark.operators.similarity import (
 )
 from googlecloudstorage_blueprints_spark.sources.catalog import load_table
 from googlecloudstorage_blueprints_spark.operators.similarity_ivf import (
-    TRAIN_SAMPLE,
+    _sample_training_rows,
 )
 
 N_QUERIES = 5
@@ -173,14 +174,7 @@ def similarity_knn_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _valid_vectors(load_table(spark, sf_dir, "embeddings"))
 
-    n_corpus = emb.count()
-    sample_src = emb.select("vec_id", "embedding")
-    if n_corpus > TRAIN_SAMPLE:
-        fraction = min(1.0, (TRAIN_SAMPLE * 1.2) / n_corpus)
-        sample_src = sample_src.sample(fraction=fraction, seed=42).limit(
-            TRAIN_SAMPLE
-        )
-    train_rows = sample_src.orderBy("vec_id").collect()
+    train_rows = _sample_training_rows(emb, emb.count())
     if not train_rows:
         # zero-row input (empty-catalog audit, r17): nothing to train on,
         # nothing to search — an empty typed frame, not a numpy error
@@ -200,11 +194,11 @@ def similarity_knn_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    q_rows = (
+    q_rows = sorted(
         emb.select("vec_id", "embedding")
         .where(F.col("vec_id") < N_QUERIES)
-        .orderBy("vec_id")
-        .collect()
+        .collect(),
+        key=itemgetter("vec_id"),
     )
     q_mat = np.asarray([r["embedding"] for r in q_rows], dtype=np.float64)
     q_mat = q_mat / np.linalg.norm(q_mat, axis=1, keepdims=True)
@@ -299,14 +293,7 @@ def ivfpq_topk(
     nprobe = NPROBE if nprobe is None else nprobe
     emb = _valid_vectors(load_table(spark, sf_dir, "embeddings"))
 
-    n_corpus = emb.count()
-    sample_src = emb.select("vec_id", "embedding")
-    if n_corpus > TRAIN_SAMPLE:
-        fraction = min(1.0, (TRAIN_SAMPLE * 1.2) / n_corpus)
-        sample_src = sample_src.sample(fraction=fraction, seed=42).limit(
-            TRAIN_SAMPLE
-        )
-    train_rows = sample_src.orderBy("vec_id").collect()
+    train_rows = _sample_training_rows(emb, emb.count())
     if not train_rows:
         # zero-row input (empty-catalog audit, r17): nothing to train on,
         # nothing to search — an empty typed frame, not a numpy error
@@ -334,11 +321,11 @@ def ivfpq_topk(
         schema="vec_id long, cell int, codes array<int>",
     )
 
-    q_rows = (
+    q_rows = sorted(
         emb.select("vec_id", "embedding")
         .where(F.col("vec_id") < N_QUERIES)
-        .orderBy("vec_id")
-        .collect()
+        .collect(),
+        key=itemgetter("vec_id"),
     )
     q_mat = np.asarray([r["embedding"] for r in q_rows], dtype=np.float64)
     q_mat = q_mat / np.linalg.norm(q_mat, axis=1, keepdims=True)

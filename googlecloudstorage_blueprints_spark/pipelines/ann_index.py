@@ -34,6 +34,8 @@ tie order), so the persisted path inherits its pinned recall.
 
 from __future__ import annotations
 
+from operator import itemgetter
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
@@ -47,22 +49,11 @@ from googlecloudstorage_blueprints_spark.operators.similarity_ivf import (
     N_CELLS,
     NPROBE,
     TOP_K,
-    TRAIN_SAMPLE,
     _assign_kernel,
+    _sample_training_rows,
     _train_centroids,
 )
 from googlecloudstorage_blueprints_spark.sources.catalog import load_table
-
-
-def _sample_training_rows(emb: DataFrame, n_corpus: int) -> list:
-    """Bounded, deterministic trainer sample (the operator's rule)."""
-    sample_src = emb.select("vec_id", "embedding")
-    if n_corpus > TRAIN_SAMPLE:
-        fraction = min(1.0, (TRAIN_SAMPLE * 1.2) / n_corpus)
-        sample_src = sample_src.sample(fraction=fraction, seed=42).limit(
-            TRAIN_SAMPLE
-        )
-    return sample_src.orderBy("vec_id").collect()
 
 
 # Search plans the probe list driver-side (one row per query), so the
@@ -114,10 +105,10 @@ def _assign_cells(spark: SparkSession, emb: DataFrame, centroids):
 def _load_centroids(spark: SparkSession, index_path: str):
     import numpy as np
 
-    cent_rows = (
+    cent_rows = sorted(
         spark.read.parquet(f"{index_path}/centroids")
-        .orderBy("cell")
-        .collect()  # bounded: the sidecar is ≤ N_CELLS rows by build
+        .collect(),  # bounded: the sidecar is ≤ N_CELLS rows by build
+        key=itemgetter("cell"),
     )
     return np.asarray(
         [r["centroid"] for r in cent_rows], dtype=np.float64
@@ -362,10 +353,10 @@ def build_ivfpq_index(
 def _load_codebooks(spark: SparkSession, index_path: str):
     import numpy as np
 
-    book_rows = (
+    book_rows = sorted(
         spark.read.parquet(f"{index_path}/codebooks")
-        .orderBy("m", "k")
-        .collect()  # bounded: sidecar is M_SUBSPACES × 256 rows by build
+        .collect(),  # bounded: sidecar is M_SUBSPACES × 256 rows by build
+        key=itemgetter("m", "k"),
     )
     m_dim = max(r["m"] for r in book_rows) + 1
     k_dim = max(r["k"] for r in book_rows) + 1

@@ -11,11 +11,16 @@ returned result, which the caller can free with ``df.unpersist()``.
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+
 import pytest
 
 from googlecloudstorage_blueprints_spark.operators import all_queries
 
 SF = "/root/testdata/sf0.001"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # every operator that persists an intermediate frame
 PERSISTING_OPS = [
@@ -85,3 +90,31 @@ def test_curate_corpus_failure_leaves_nothing_persisted(
         curate.curate_corpus(spark, SF, f"file:{tmp_path}/curated")
     leaked = _persisted_ids(spark) - before
     assert not leaked, f"failed curate_corpus leaked RDD ids {sorted(leaked)}"
+
+
+_CURATE_DRIVER = """
+import sys
+sys.path.insert(0, {repo!r})
+from googlecloudstorage_blueprints_spark.pipelines import curate_corpus
+from googlecloudstorage_blueprints_spark.session import get_spark
+
+spark = get_spark(master="local[2]")
+curate_corpus(spark, {sf!r}, {out!r})
+spark.stop()
+"""
+
+
+def test_curate_corpus_prints_no_checkpoint_release_warning(
+    tmp_path, capfd
+):
+    """Released checkpoint storage logs nothing: ``RDD.unpersist`` WARNs
+    for every locally checkpointed RDD (7 lines per call).  The driver
+    runs in a subprocess so that its JVM writes to the captured stderr."""
+    env = {**os.environ, "SPARK_GRAFT_DRIVER_MEM": "1g"}
+    script = _CURATE_DRIVER.format(
+        repo=REPO, sf=SF, out=f"file:{tmp_path}/curated")
+    subprocess.run([sys.executable, "-c", script], cwd=tmp_path, env=env,
+                   timeout=600, check=True)
+    err = capfd.readouterr().err
+    assert "log4j" in err, "the JVM's stderr was not captured"
+    assert err.count("was locally checkpointed") == 0
