@@ -460,6 +460,36 @@ def _hadoop_count_files(spark, feed_dir: str, pattern: str) -> int | None:
     return 0 if matched is None else len(matched)
 
 
+def _ledger(frame, key, count: str = "n_rows") -> dict:
+    """One side of a ``validate`` comparison: ``key`` (a column, or a
+    tuple of columns) → ``(count, digest, digest_sum)`` from a digest
+    frame."""
+    return {
+        (r[key] if isinstance(key, str) else tuple(r[k] for k in key)):
+            (r[count], r["digest"], r["digest_sum"])
+        for r in frame.collect()  # bounded: one row per table, column or day
+    }
+
+
+def _print_compare(src: dict, dst: dict, keys, name, count: str = "n"):
+    """Print one ``OK  ``/``FAIL`` line per key with both sides'
+    triples (``-`` for a side that lacks the key); return the keys whose
+    triples differ."""
+    bad = []
+    for k in keys:
+        match = src.get(k) == dst.get(k)
+        if not match:
+            bad.append(k)
+        sn, sd, ss = src.get(k, ("-", "-", "-"))
+        dn, dd, ds = dst.get(k, ("-", "-", "-"))
+        print(
+            f"{'OK  ' if match else 'FAIL'} {name(k)}: "
+            f"src({count}={sn}, digest={sd}, sum={ss}) "
+            f"dst({count}={dn}, digest={dd}, sum={ds})"
+        )
+    return bad
+
+
 def _run_validate_continuous(args) -> int:
     """Continuous migration validation (``validate --continuous``):
     treat --source-dir and --dest-dir as LIVE feed directories of flat
@@ -586,15 +616,10 @@ def _run_validate_continuous(args) -> int:
         merged[side] = merge_digest_rows(
             [r for r in rows if r["table_name"] == args.table]
         )
-    sn, sd, ss = merged["source"]
-    dn, dd, ds = merged["dest"]
-    match = merged["source"] == merged["dest"]
-    print(
-        f"{'OK  ' if match else 'FAIL'} {args.table}: "
-        f"src(n={sn}, digest={sd}, sum={ss}) "
-        f"dst(n={dn}, digest={dd}, sum={ds})"
-    )
-    if not match:
+    if _print_compare(
+        {args.table: merged["source"]}, {args.table: merged["dest"]},
+        [args.table], str,
+    ):
         detail = ""
         if args.table == "events":
             # localize WHICH days diverge (the --by-day comparison,
@@ -605,23 +630,14 @@ def _run_validate_continuous(args) -> int:
                 partition_digest_frame,
             )
 
-            per_day = {}
-            for side, feed_dir in (
-                ("source", args.source_dir),
-                ("dest", args.dest_dir),
-            ):
-                per_day[side] = {
-                    r["epoch_day"]: (
-                        r["n_rows"], r["digest"], r["digest_sum"],
-                    )
-                    for r in partition_digest_frame(
-                        spark, feed_dir, glob="*.parquet"
-                    ).collect()
-                }  # bounded: calendar-bounded day ledger per side
+            src, dst = (
+                _ledger(partition_digest_frame(
+                    spark, feed_dir, glob="*.parquet"), "epoch_day")
+                for feed_dir in (args.source_dir, args.dest_dir)
+            )
             bad_days = [
-                d
-                for d in sorted(set(per_day["source"]) | set(per_day["dest"]))
-                if per_day["source"].get(d) != per_day["dest"].get(d)
+                d for d in sorted(set(src) | set(dst))
+                if src.get(d) != dst.get(d)
             ]
             detail = " on day(s) " + ", ".join(str(d) for d in bad_days)
         print(f"validate: content mismatch{detail}", file=sys.stderr)
@@ -689,30 +705,14 @@ def _run_validate(args) -> int:
             partition_digest_frame,
         )
 
-        src = {
-            r["epoch_day"]: (r["n_rows"], r["digest"], r["digest_sum"])
-            for r in partition_digest_frame(
-                spark, args.source_dir
-            ).collect()
-        }  # bounded: calendar-bounded day ledger per side
-        dst = {
-            r["epoch_day"]: (r["n_rows"], r["digest"], r["digest_sum"])
-            for r in partition_digest_frame(
-                spark, args.dest_dir
-            ).collect()
-        }  # bounded: calendar-bounded day ledger per side
-        bad_days = []
-        for d in sorted(set(src) | set(dst)):
-            match = src.get(d) == dst.get(d)
-            if not match:
-                bad_days.append(d)
-            sn, sd, ss = src.get(d, ("-", "-", "-"))
-            dn, dd, ds = dst.get(d, ("-", "-", "-"))
-            print(
-                f"{'OK  ' if match else 'FAIL'} events day {d}: "
-                f"src(n={sn}, digest={sd}, sum={ss}) "
-                f"dst(n={dn}, digest={dd}, sum={ds})"
-            )
+        src, dst = (
+            _ledger(partition_digest_frame(spark, d), "epoch_day")
+            for d in (args.source_dir, args.dest_dir)
+        )
+        bad_days = _print_compare(
+            src, dst, sorted(set(src) | set(dst)),
+            lambda d: f"events day {d}",
+        )
         if bad_days:
             print(
                 "validate: content mismatch on day(s) "
@@ -727,61 +727,22 @@ def _run_validate(args) -> int:
             column_digest_frame,
         )
 
-        src = {
-            (r["table_name"], r["column_name"]): (
-                r["n_nulls"], r["digest"], r["digest_sum"],
-            )
-            for r in column_digest_frame(
-                spark, args.source_dir, tables
-            ).collect()
-        }  # bounded: ≤|catalog columns| rows per side
-        dst = {
-            (r["table_name"], r["column_name"]): (
-                r["n_nulls"], r["digest"], r["digest_sum"],
-            )
-            for r in column_digest_frame(
-                spark, args.dest_dir, tables
-            ).collect()
-        }  # bounded: ≤|catalog columns| rows per side
-        ok = True
-        for t, c in sorted(src):
-            match = src[(t, c)] == dst.get((t, c))
-            ok = ok and match
-            sn, sd, ss = src[(t, c)]
-            dn, dd, ds = dst.get((t, c), ("-", "-", "-"))
-            print(
-                f"{'OK  ' if match else 'FAIL'} {t}.{c}: "
-                f"src(nulls={sn}, digest={sd}, sum={ss}) "
-                f"dst(nulls={dn}, digest={dd}, sum={ds})"
-            )
-        if not ok:
-            print("validate: content mismatch", file=sys.stderr)
-            return EXIT_CODE_FILE_NOT_FOUND
-        print(f"validate: {len(src)} column(s) match")
-        return 0
-    src = {
-        r["table_name"]: (r["n_rows"], r["digest"], r["digest_sum"])
-        for r in digest_frame(spark, args.source_dir, tables).collect()
-    }  # bounded: ≤|catalog| rows per side
-    dst = {
-        r["table_name"]: (r["n_rows"], r["digest"], r["digest_sum"])
-        for r in digest_frame(spark, args.dest_dir, tables).collect()
-    }  # bounded: ≤|catalog| rows per side
-    ok = True
-    for t in sorted(src):
-        match = src[t] == dst.get(t)
-        ok = ok and match
-        sn, sd, ss = src[t]
-        dn, dd, ds = dst.get(t, ("-", "-", "-"))
-        print(
-            f"{'OK  ' if match else 'FAIL'} {t}: "
-            f"src(n={sn}, digest={sd}, sum={ss}) "
-            f"dst(n={dn}, digest={dd}, sum={ds})"
+        frame, key, count, unit, name, label = (
+            column_digest_frame, ("table_name", "column_name"), "n_nulls",
+            "column", ".".join, "nulls",
         )
-    if not ok:
+    else:
+        frame, key, count, unit, name, label = (
+            digest_frame, "table_name", "n_rows", "table", str, "n",
+        )
+    src, dst = (
+        _ledger(frame(spark, d, tables), key, count)
+        for d in (args.source_dir, args.dest_dir)
+    )
+    if _print_compare(src, dst, sorted(src), name, label):
         print("validate: content mismatch", file=sys.stderr)
         return EXIT_CODE_FILE_NOT_FOUND
-    print(f"validate: {len(src)} table(s) match")
+    print(f"validate: {len(src)} {unit}(s) match")
     return 0
 
 

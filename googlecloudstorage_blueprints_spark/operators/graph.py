@@ -79,6 +79,12 @@ def _checkpoint_observed(
     return stored, seen.get["v"]
 
 
+def _stored_rdd_id(stored: DataFrame) -> int:
+    """Id of the RDD that holds a ``localCheckpoint`` frame's rows (the
+    checkpoint's ``LogicalRDD``)."""
+    return stored._jdf.queryExecution().analyzed().rdd().id()
+
+
 def min_label_components(nodes: DataFrame, pairs: DataFrame) -> DataFrame:
     """Min-label propagation to a fixpoint: ``(node, label)`` where label
     is the smallest node id reachable in the undirected graph ``pairs``
@@ -96,14 +102,15 @@ def min_label_components(nodes: DataFrame, pairs: DataFrame) -> DataFrame:
     ``localCheckpoint`` per round keeps the plan constant-size (the
     classic iterative-Spark failure is plan growth, not data).
 
-    Returns a PLAIN-persisted frame: the fixpoint labels are copied into
-    an ordinary cache and every round's checkpoint RDD is explicitly
-    released before returning (checkpoint storage is invisible to
-    ``DataFrame.unpersist`` and otherwise accumulates across a long
-    driver session — persist-hygiene test pins this).  Callers free the
-    result with ``labels.unpersist()``."""
+    Returns the final round's ``localCheckpoint`` frame.  Each earlier
+    round's checkpoint storage is released in the loop once the next
+    round's eager job has stored its rows.  The returned frame's storage
+    is the caller's to free: checkpoint storage is invisible to
+    ``DataFrame.unpersist``, so snapshot ``_persisted_rdd_ids`` before
+    the call and ``_release_rdds`` the ids new since then (as
+    ``dedup_clusters`` and ``curate_corpus`` do; the persist-hygiene
+    tests pin both)."""
     sc = nodes.sparkSession.sparkContext
-    ids_before = _persisted_rdd_ids(sc)
     sym = (
         pairs.select("doc_a", "doc_b")
         .union(
@@ -134,29 +141,20 @@ def min_label_components(nodes: DataFrame, pairs: DataFrame) -> DataFrame:
             F.col("src").alias("node"), "label"
         )
         # constant-size plan per round
-        labels, new_sum = _checkpoint_observed(
+        stored, new_sum = _checkpoint_observed(
             labels.union(msgs)
             .groupBy("node")
             .agg(F.min("label").alias("label")),
             label_sum,
         )
+        # the new round's rows are stored, so the previous round's are dead
+        _release_rdds(sc, [_stored_rdd_id(labels)])
+        labels = stored
         if new_sum == prev_sum:
             break
         prev_sum = new_sum
     sym.unpersist(blocking=True)
-    # everything still persisted beyond the entry snapshot is checkpoint
-    # storage from the loop — snapshot it BEFORE caching the result so
-    # the two are distinguishable by id
-    checkpoint_ids = _persisted_rdd_ids(sc) - ids_before
-    result = labels.persist()
-    result.count()  # materialize the plain cache off the checkpoints
-    # caveat: result's lineage is truncated at the freed checkpoints, so
-    # a partition evicted AFTER this point cannot recompute — the same
-    # trade localCheckpoint itself makes vs reliable checkpointing; for
-    # a long-lived production job, point spark.checkpoint.dir at durable
-    # storage and swap localCheckpoint → checkpoint in the loop
-    _release_rdds(sc, checkpoint_ids)
-    return result
+    return labels
 
 _PAIR_SQL = f"""
     WITH RECURSIVE sh_all AS (
@@ -221,13 +219,14 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     every document labeled with its cluster id (= min doc_id in the
     component), keeper flag, and cluster size.  WITH RECURSIVE twin makes
     the iterative fixpoint oracle-checkable value-for-value."""
+    sc = spark.sparkContext
+    ids_before = _persisted_rdd_ids(sc)
     jac = ngram_jaccard_dedup(spark, sf_dir)  # returns a persisted frame
     pairs = jac.select("doc_a", "doc_b")
     nodes = load_table(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("node")
     )
-    # labels are eagerly materialized inside (localCheckpoint per round),
-    # so the pair frame's cache can be freed before returning
+    # labels are stored (localCheckpoint per round): free the pair cache
     labels = min_label_components(nodes, pairs)
     jac.unpersist()
     comp = labels.select(
@@ -246,9 +245,11 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .persist()
     )
-    out.count()  # materialize, then free both upstream caches
-    labels.unpersist()
-    jac.unpersist()
+    # the labels' checkpoint, and anything else persisted since entry:
+    # snapshotted before ``out`` stores its own rows
+    held = _persisted_rdd_ids(sc) - ids_before
+    out.count()
+    _release_rdds(sc, held)
     return out
 
 

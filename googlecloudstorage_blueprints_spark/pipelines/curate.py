@@ -223,7 +223,6 @@ def _curate(
     near_deduped, n_near_deduped = _checkpoint_observed(
         deduped.join(near_keepers, "doc_id"), _rows()
     )
-    labels.unpersist()
     pairs.unpersist()
 
     # semantic near-dedup (SemDeDup): a doc is dropped iff a LOWER-id

@@ -1,1349 +1,172 @@
 #!/usr/bin/env python
-"""Scaling probe: replicate lineitem/orders N× into tmp, measure headline
-shapes at 1×/10×/30×, print per-scale wall seconds and the observed
-scaling exponent.  Evidence for SCALE.md — near-linear growth means the
-plan shape survives scale-up; super-linear growth flags a shape that
-won't.
+"""Scale probe: time registered operators over an N×-replicated catalog.
 
-Replication multiplies keys by a replica offset so join fan-out stays
-realistic (each replica is a disjoint key space — row counts scale N×,
-join matches scale N×, group counts stay fixed for the agg shapes).
+Usage:  python scripts/scale_probe.py [--sf DIR] [--runs N]
+                                      [--scales 1,4,16] [op ...]
+
+Every registered operator takes ``(spark, sf_dir)`` and reads its tables
+through ``sources.catalog.load_table`` (``{sf_dir}/{name}.parquet``, where
+a directory works), so a catalog replicated N× into a temp directory turns
+each operator into a scale probe with no copy of its logic.
+
+Replica ``r`` shifts every key domain by ``r × STRIDE`` in every table
+that holds it (``SHIFTED``), so keys join only inside their own replica:
+row counts and join fan-out grow N×, never N².  Tables without a shifted
+key (``region``, ``nation``) are copied unchanged, and no ``*_nationkey``
+moves.  Text, vectors, labels and timestamps are copied verbatim, so the
+dedup, similarity and document-pair operators see a corpus in which every
+replica is an exact duplicate.
+
+At each scale every operator gets one untimed warm-up call, then
+``--runs`` timed calls, each materialised by a ``noop`` write.  One line
+per operator prints the median at each scale and the scaling exponent
+``log(t_max / t_min) / log(N_max / N_min)`` (1.0 = linear).  An operator
+that raises ``ExactTierCorpusTooLarge`` reads ``guarded`` at that scale.
+``--scales 1`` is a plain warm timer of the named operators.
 """
 
 from __future__ import annotations
 
+import argparse
 import math
+import os
 import shutil
+import statistics
 import sys
 import tempfile
 import time
 
 import pyspark.sql.functions as F
 
-sys.path.insert(0, __file__.rsplit("/", 2)[0])
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
+from googlecloudstorage_blueprints_spark.operators import all_queries  # noqa: E402
+from googlecloudstorage_blueprints_spark.operators.similarity import (  # noqa: E402
+    ExactTierCorpusTooLarge,
+)
 from googlecloudstorage_blueprints_spark.session import get_spark  # noqa: E402
+from googlecloudstorage_blueprints_spark.sources.catalog import TABLES  # noqa: E402
 
-BASE = "/root/testdata/sf0.1"
-SCALES = [1, 10, 30]
-KEY_STRIDE = 10_000_000
+STRIDE = 10_000_000
+# every column of each key domain, in every table that holds it
+SHIFTED = (
+    "o_orderkey", "l_orderkey",
+    "c_custkey", "o_custkey",
+    "p_partkey", "l_partkey",
+    "s_suppkey", "l_suppkey",
+    "user_id", "event_id", "doc_id", "vec_id",
+)
+# The packed co-purchase key (segments.PAIR_PACK_MAX_KEY) and the 31-bit
+# hash mask in dedup.py branch on keys below 2**31: stay on that side.
+KEY_LIMIT = 2**31
+# SCALE.md's measured-scaling table cites these beside the query-mix set
+SCALE_MD_OPS = (
+    "copurchase_association_rules", "customer_cohort_retention",
+    "doc_logprob_bigram", "doc_logprob_mad_outliers",
+    "doc_query_likelihood_topk", "doc_unigram_entropy_topk",
+    "events_type_value_mi", "events_volume_ewma_backtest",
+    "funnel_window_sensitivity", "latest_snapshot",
+    "pair_containment_histogram", "scd2_intervals", "sequence_pack",
+    "source_length_gini", "table_row_digest",
+)
 
 
-def replicate(spark, src: str, out: str, n: int, key_cols: list[str]) -> None:
-    df = spark.read.parquet(src)
+def default_ops() -> list[str]:
+    sys.path.insert(0, os.path.join(ROOT, "perfbench"))
+    from workloads import QUERY_OPS
+
+    return [*QUERY_OPS, *SCALE_MD_OPS]
+
+
+def replicate(spark, src: str, out: str, n: int) -> None:
+    """Write every catalog table of ``src`` into ``out``, ``n``× over."""
     reps = spark.range(n).select(F.col("id").alias("__rep"))
-    rep = df.crossJoin(reps)
-    for k in key_cols:
-        rep = rep.withColumn(
-            k, F.col(k) + F.col("__rep") * F.lit(KEY_STRIDE)
-        )
-    rep.drop("__rep").repartition(32).write.mode("overwrite").parquet(out)
+    for name in TABLES:
+        df = spark.read.parquet(f"{src}/{name}.parquet")
+        keys = [c for c in df.columns if c in SHIFTED]
+        if keys:
+            top = df.agg(*(F.max(c) for c in keys)).first()
+            for k, hi in zip(keys, top):
+                if hi >= STRIDE or (n - 1) * STRIDE + hi >= KEY_LIMIT:
+                    raise ValueError(
+                        f"{name}.{k} max {hi}: replicas at {n}x would "
+                        f"overlap (>= STRIDE) or pass 2**31")
+            dtypes = dict(df.dtypes)
+            df = df.crossJoin(reps)
+            for k in keys:
+                df = df.withColumn(
+                    k, (F.col(k) + F.col("__rep") * STRIDE).cast(dtypes[k]))
+            df = df.drop("__rep").repartition(n)
+        df.write.parquet(f"{out}/{name}.parquet")
 
 
-def bench_shapes(
-    spark, li_path: str, o_path: str, doc_path: str, ev_path: str,
-    emb_path: str, cust_path: str
-) -> dict[str, float]:
-    li = spark.read.parquet(li_path)
-    o = spark.read.parquet(o_path)
-    docs = spark.read.parquet(doc_path)
-    ev = spark.read.parquet(ev_path)
-    emb = spark.read.parquet(emb_path)
-    cust = spark.read.parquet(cust_path)
-    if "ts" in ev.columns:  # fixture stores timestamp_ntz (catalog rule)
-        ev = ev.withColumn("ts", F.col("ts").cast("timestamp"))
-
-    def ngram_topk():
-        # round-5 form: in-row arrays_zip bigrams (no token shuffle)
-        a = F.split("text", " ")
-        pairs = F.arrays_zip(
-            F.slice(a, 1, F.size(a) - 1), F.slice(a, 2, F.size(a) - 1)
-        )
-        big = docs.select(F.explode_outer(pairs).alias("p")).where(
-            F.col("p.1").isNotNull()
-        )
-        return (
-            big.groupBy(F.concat_ws(" ", "p.0", "p.1").alias("bigram"))
-            .agg(F.count(F.lit(1)).alias("n"))
-            .orderBy(F.col("n").desc(), "bigram")
-            .limit(20)
-        )
-
-    def sequence_pack():
-        # round-5 sub-sharded pack window (training._packed_bins)
-        from googlecloudstorage_blueprints_spark.operators.training import (
-            _packed_bins,
-        )
-
-        toks = docs.where(F.col("text").isNotNull()).select(
-            "source",
-            "doc_id",
-            F.size(F.split("text", " ")).cast("long").alias("n_tokens"),
-        )
-        return (
-            _packed_bins(toks)
-            .groupBy("source", "bin_id")
-            .agg(F.count(F.lit(1)), F.sum("n_tokens"))
-        )
-
-    def bm25():
-        # round-6 IR shape: token explode → dl agg; tf keeps query terms
-        # only, so the scoring joins stay |query|-bounded per doc
-        tok = (
-            docs.where(F.col("text").isNotNull())
-            .select(
-                "doc_id", F.explode_outer(F.split("text", " ")).alias("w")
-            )
-            .where(F.col("w").isNotNull() & (F.col("w") != ""))
-        )
-        dl = tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
-        corpus = dl.agg(
-            F.count(F.lit(1)).cast("double").alias("n_docs"),
-            (F.sum("dl") / F.count(F.lit(1))).alias("avgdl"),
-        )
-        tf = (
-            tok.where(F.col("w").isin("spark", "query", "table"))
-            .groupBy("doc_id", "w")
-            .agg(F.count(F.lit(1)).cast("double").alias("tf"))
-        )
-        dfq = tf.groupBy("w").agg(
-            F.count(F.lit(1)).cast("double").alias("df")
-        )
-        score = (
-            F.log(1 + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5))
-            * F.col("tf") * 2.2
-            / (F.col("tf") + 1.2 * (0.25 + 0.75 * F.col("dl") / F.col("avgdl")))
-        )
-        return (
-            tf.join(F.broadcast(dfq), "w")
-            .join(dl, "doc_id")
-            .crossJoin(F.broadcast(corpus))
-            .groupBy("doc_id")
-            .agg(F.sum(score).alias("score"))
-            .orderBy(F.col("score").desc(), "doc_id")
-            .limit(10)
-        )
-
-    def latest_snapshot():
-        # round-6 warehouse shape: rank-1 per key → WindowGroupLimit cuts
-        # map-side; replicated customers add partitions, not depth
-        from pyspark.sql.window import Window
-
-        w = Window.partitionBy("o_custkey").orderBy(
-            F.col("o_orderdate").desc(), F.col("o_orderkey").desc()
-        )
-        return (
-            o.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") == 1)
-            .drop("rn")
-        )
-
-    def scd2_intervals():
-        # round-6 warehouse claim: two windows over ONE (user_id)-keyed
-        # exchange; replicated users add partitions, not depth
-        from pyspark.sql.window import Window
-
-        w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-        seq = ev.select(
-            "user_id",
-            "event_type",
-            "event_id",
-            "ts",
-            F.lag("event_type").over(w).alias("prev"),
-        )
-        ch = seq.where(
-            F.col("prev").isNull()
-            | (F.col("event_type") != F.col("prev"))
-        )
-        w2 = Window.partitionBy("user_id").orderBy("ts", "event_id")
-        return ch.select(
-            "user_id",
-            "event_type",
-            F.col("ts").alias("valid_from"),
-            F.lead("ts").over(w2).alias("valid_to"),
-        )
-
-    def dau_wau():
-        # round-6 engagement claim: constant 7× explode of the distinct
-        # (user, day) frame instead of a rolling-distinct window — the
-        # fan-out scales with activity rows, the day-keyed shuffle with
-        # |days| (fixed under user replication)
-        # r9 form: integer epoch-day keys end to end
-        ud = ev.select(
-            "user_id",
-            F.expr("unix_micros(ts) div 86400000000").alias("d"),
-        ).distinct()
-        dau = ud.groupBy("d").agg(F.count(F.lit(1)).alias("dau"))
-        cover = ud.select(
-            "user_id",
-            F.explode_outer(
-                F.sequence(F.col("d"), F.col("d") + 6)
-            ).alias("b"),
-        )
-        wau = cover.groupBy(F.col("b").alias("d")).agg(
-            F.countDistinct("user_id").alias("wau")
-        )
-        return dau.join(wau, "d")
-
-    def bigram_lm():
-        # round-10 form: score table = keyed windows over cb + scalar
-        # subquery total (no join inside the score subtree; SMJ is the
-        # CORRECT plan when the probe grows the aggregate estimate).
-        # See SCALE.md "Bigram-LM probe caveat": fixed vocab under
-        # replication makes the score side degenerate-small.
-        a = F.split("text", " ")
-        pairs = F.arrays_zip(
-            F.slice(a, 1, F.size(a) - 1), F.slice(a, 2, F.size(a) - 1)
-        )
-        bg = (
-            docs.where(F.size(a) >= 2)
-            .select("doc_id", F.explode_outer(pairs).alias("p"))
-            .select(
-                "doc_id",
-                F.col("p.0").alias("w1"),
-                F.col("p.1").alias("w2"),
-            )
-        )
-        bg.createOrReplaceTempView("bg_probe_bigram")
-        return spark.sql(
-            """
-            WITH cb AS (SELECT w1, w2, COUNT(*) AS cnt
-                        FROM bg_probe_bigram GROUP BY w1, w2),
-            sc AS (
-                SELECT w1, w2,
-                       CAST(ROUND(-LN(
-                           0.8 * (CAST(cnt AS DOUBLE)
-                               / CAST(SUM(cnt) OVER (PARTITION BY w1)
-                                      AS DOUBLE))
-                         + 0.2 * (CAST(SUM(cnt) OVER (PARTITION BY w2)
-                                       AS DOUBLE)
-                                  / CAST((SELECT SUM(cnt) FROM cb)
-                                         AS DOUBLE))
-                       ) * 1000000, 0) AS BIGINT) AS nll6
-                FROM cb
-            )
-            SELECT doc_id, COUNT(*) AS n_bigrams, SUM(nll6) AS nll
-            FROM bg_probe_bigram JOIN sc USING (w1, w2)
-            GROUP BY doc_id
-            """
-        )
-
-    def anomaly_seasonal():
-        # round-8 claim: (type, hour-of-day) moment cells are enum-bounded
-        # (≤ |types|×24 regardless of data size), broadcast back onto the
-        # scan — replication grows only the map side, never the stats frame
-        c = F.round(F.col("value") * 100, 0).cast("long")
-        stats = ev.groupBy(
-            "event_type", F.hour("ts").alias("hour_of_day")
-        ).agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum(c).alias("s"),
-            F.sum(c * c).alias("q"),
-        )
-        mean = F.col("s").cast("double") / F.col("n") / F.lit(100.0)
-        var = (
-            F.col("q").cast("double") / F.col("n") / F.lit(10000.0)
-            - mean * mean
-        )
-        z = F.round((F.col("value") - mean) / F.sqrt(var), 6)
-        return (
-            ev.withColumn("hour_of_day", F.hour("ts"))
-            .join(F.broadcast(stats), ["event_type", "hour_of_day"])
-            .where((var > 0) & (F.abs(z) > 3.0))
-            .select("event_id", "event_type", "value", z.alias("z"))
-        )
-
-    def session_hist():
-        # round-8 claim: the lag window and the cumsum window share ONE
-        # (user_id)-keyed exchange (replicated users add partitions, not
-        # window depth), and the histogram reduces to ≤|bins| rows
-        from pyspark.sql.window import Window
-
-        ts_us = F.unix_micros(F.col("ts"))
-        w = Window.partitionBy("user_id").orderBy(ts_us, F.col("event_id"))
-        seq = ev.select(
-            "user_id",
-            ts_us.alias("ts_us"),
-            "event_id",
-            F.when(
-                F.lag(ts_us).over(w).isNull()
-                | (ts_us - F.lag(ts_us).over(w) > 1800 * 1_000_000),
-                1,
-            ).otherwise(0).alias("is_start"),
-        )
-        w2 = (
-            Window.partitionBy("user_id")
-            .orderBy("ts_us", "event_id")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        sess = seq.select(
-            "user_id", F.sum("is_start").over(w2).alias("sid"), "ts_us"
-        )
-        bounds = sess.groupBy("user_id", "sid").agg(
-            F.expr("(max(ts_us) - min(ts_us)) div 1000000").alias("dur_s"),
-            F.count(F.lit(1)).alias("n_events"),
-        )
-        return bounds.groupBy(F.expr("dur_s div 300").alias("bin")).agg(
-            F.count(F.lit(1)), F.sum("n_events"), F.max("dur_s")
-        )
-
-    def copurchase():
-        # r14 live form: ONE basket pass — UNSORTED collect_set per
-        # order (map-side partial dedup; nothing downstream is
-        # position-dependent), in-row pair Generates, the pair
-        # aggregate keyed on the packed single BIGINT (a<<32)|b,
-        # top-K cut BEFORE the marginal joins
-        baskets = li.groupBy("l_orderkey").agg(
-            F.collect_set("l_partkey").alias("parts")
-        )
-        n = baskets.agg(F.count(F.lit(1)).cast("long").alias("n_orders"))
-        pc = (
-            baskets.select(F.explode_outer("parts").alias("l_partkey"))
-            .groupBy("l_partkey")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_part"))
-        )
-        pairs = (
-            baskets.select("parts", F.explode_outer("parts").alias("pa"))
-            .select("pa", F.explode_outer("parts").alias("pb"))
-            .where(F.col("pa") < F.col("pb"))
-            .select(
-                F.shiftleft(F.col("pa").cast("long"), 32)
-                .bitwiseOR(F.col("pb").cast("long"))
-                .alias("pk")
-            )
-            .groupBy("pk")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_both"))
-        )
-        lift = (
-            F.col("n_both").cast("double") * F.col("n_orders")
-            / (F.col("ca.n_part").cast("double") * F.col("cb.n_part"))
-        )
-        topk = (
-            pairs.orderBy(F.col("n_both").desc(), "pk")
-            .limit(20)
-            .select(
-                F.shiftright(F.col("pk"), 32).alias("pa"),
-                F.col("pk").bitwiseAND(F.lit((1 << 32) - 1)).alias("pb"),
-                "n_both",
-            )
-        )
-        return (
-            F.broadcast(topk)
-            .join(pc.alias("ca"), F.col("pa") == F.col("ca.l_partkey"))
-            .join(pc.alias("cb"), F.col("pb") == F.col("cb.l_partkey"))
-            .crossJoin(F.broadcast(n))
-            .select("pa", "pb", "n_both", lift.alias("lift"))
-            .orderBy(F.col("n_both").desc(), "pa", "pb")
-        )
-
-    def ship_latency():
-        # round-8 claim: the exact-percentile tier sorts each supplier's
-        # latency set — per-group sets grow linearly under replication
-        # (suppliers fixed), so growth should stay ~n log n, not bend
-        o2 = o.select("o_orderkey", "o_orderdate")
-        lat = li.join(o2, li.l_orderkey == o2.o_orderkey).select(
-            "l_suppkey",
-            F.datediff(F.col("l_shipdate"), F.col("o_orderdate")).alias(
-                "days"
-            ),
-        )
-        return lat.groupBy("l_suppkey").agg(
-            F.count(F.lit(1)),
-            F.percentile("days", 0.5),
-            F.percentile("days", 0.9),
-            F.max("days"),
-        )
-
-    def pq_scan():
-        # round-8 claim: PQ's per-scale cost is the encode pass + the
-        # LUT take-and-sum over ~5-byte codes — both linear in corpus
-        # rows; training stays bounded by TRAIN_SAMPLE at any scale
-        import numpy as np
-
-        from googlecloudstorage_blueprints_spark.operators.similarity_pq import (
-            M_SUBSPACES,
-            _adc_kernel,
-            _encode_kernel,
-            _train_codebooks,
-        )
-
-        train = [
-            r["embedding"]
-            for r in emb.select("vec_id", "embedding")
-            .orderBy("vec_id")
-            .limit(5000)
-            .collect()
-        ]
-        books = _train_codebooks(train)
-        encoded = (
-            emb.select("vec_id", "embedding")
-            .repartition(
-                max(8, spark.sparkContext.defaultParallelism // 4),
-                "vec_id",
-            )
-            .mapInPandas(
-                _encode_kernel(books),
-                schema="vec_id long, codes array<int>",
-            )
-        )
-        q = np.asarray(train[:5], dtype=np.float64)
-        q = q / np.linalg.norm(q, axis=1, keepdims=True)
-        dsub = books.shape[2]
-        luts = np.stack(
-            [
-                np.stack(
-                    [
-                        books[m] @ qq[m * dsub : (m + 1) * dsub]
-                        for m in range(M_SUBSPACES)
-                    ]
-                )
-                for qq in q
-            ]
-        )
-        from pyspark.sql.window import Window
-
-        adc = encoded.mapInPandas(
-            _adc_kernel(luts, list(range(5))),
-            schema="query_id long, vec_id long, adc double",
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("adc").desc(), F.col("vec_id")
-        )
-        return (
-            adc.withColumn("rk", F.row_number().over(w))
-            .where(F.col("rk") <= 50)
-        )
-
-    def markov_entropy():
-        # round-9 claim: one user-keyed lead window (partitions multiply
-        # under user replication, depth does not), then |types|-bounded
-        # reductions — must track the window exponents, not data size
-        from pyspark.sql.window import Window
-
-        ts_us = F.unix_micros(F.col("ts"))
-        w = Window.partitionBy("user_id").orderBy(ts_us, F.col("event_id"))
-        seq = ev.select(
-            F.col("event_type").alias("src"),
-            F.lead("event_type").over(w).alias("dst"),
-        )
-        tr = (
-            seq.where(F.col("dst").isNotNull())
-            .groupBy("src", "dst")
-            .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        )
-        tot = tr.groupBy("src").agg(F.sum("cnt").alias("n"))
-        lnp6 = F.round(
-            F.log(F.col("cnt").cast("double") / F.col("n")) * 1e6, 0
-        ).cast("long")
-        return (
-            tr.join(tot, "src")
-            .groupBy("src")
-            .agg(F.sum(F.col("cnt") * lnp6).alias("wsum6"))
-        )
-
-    def gini():
-        # round-9 claim: the rank window is PARTITIONED by nation — per-
-        # partition rows grow linearly under customer replication, so
-        # wall time must track the partitioned-window exponents (a global
-        # Window.orderBy here would serialize on one task)
-        from pyspark.sql.window import Window
-
-        cents = F.round(F.col("o_totalprice") * 100, 0).cast("long")
-        cu = cust.join(o, o.o_custkey == cust.c_custkey, "left").groupBy(
-            "c_nationkey", "c_custkey"
-        ).agg(F.coalesce(F.sum(cents), F.lit(0)).alias("cents"))
-        wr = Window.partitionBy("c_nationkey").orderBy("cents", "c_custkey")
-        wn = Window.partitionBy("c_nationkey")
-        ranked = cu.select(
-            "c_nationkey", "cents",
-            F.row_number().over(wr).cast("long").alias("r"),
-            F.count(F.lit(1)).over(wn).cast("long").alias("n"),
-        )
-        return ranked.groupBy("c_nationkey").agg(
-            F.sum((2 * F.col("r") - F.col("n") - 1) * F.col("cents"))
-        )
-
-    def vocab_coverage():
-        # round-12 claim: top-k coverage needs NO per-word rank — the
-        # counts-of-counts ledger is bounded by distinct frequencies,
-        # so only the word-count aggregate grows with the corpus
-        words = (
-            docs.where(F.col("text").isNotNull())
-            .select(F.explode_outer(F.split("text", " ")).alias("w"))
-            .where(F.col("w") != "")
-        )
-        counts = words.groupBy("w").agg(F.count(F.lit(1)).alias("v"))
-        ledger = counts.groupBy("v").agg(F.count(F.lit(1)).alias("m"))
-        w_cum = (
-            __import__("pyspark.sql.window", fromlist=["Window"])
-            .Window.orderBy(F.col("v").desc())
-            .rowsBetween(-(1 << 31), 0)
-        )
-        cum = ledger.select(
-            "v", "m", F.sum("m").over(w_cum).alias("cumw_after")
-        )
-        ks = spark.range(1).select(
-            F.explode(
-                F.array(F.lit(100), F.lit(1000), F.lit(10000))
-            ).alias("k")
-        )
-        contrib = (
-            F.when(
-                F.col("cumw_after") <= F.col("k"),
-                F.col("m") * F.col("v"),
-            )
-            .when(F.col("cumw_after") - F.col("m") >= F.col("k"), F.lit(0))
-            .otherwise(
-                (F.col("k").cast("long")
-                 - (F.col("cumw_after") - F.col("m"))) * F.col("v")
-            )
-        )
-        return (
-            cum.crossJoin(F.broadcast(ks))
-            .groupBy("k")
-            .agg(F.sum(contrib).alias("covered"))
-        )
-
-    def inflight():
-        # round-12 claim: the open-order sweep line rides a |days|
-        # ledger — replication grows the per-order MAX aggregate and
-        # the delta build, never the cumulative window's input size
-        o2 = o.select(
-            "o_orderkey",
-            F.expr("unix_micros(CAST(o_orderdate AS TIMESTAMP)) "
-                   "div 86400000000").alias("s"),
-        )
-        li2 = li.select(
-            "l_orderkey",
-            F.expr("unix_micros(CAST(l_shipdate AS TIMESTAMP)) "
-                   "div 86400000000").alias("d"),
-        )
-        spans = (
-            o2.join(li2, o2.o_orderkey == li2.l_orderkey)
-            .groupBy("o_orderkey", "s")
-            .agg(F.max("d").alias("e"))
-        )
-        deltas = spans.select(
-            F.col("s").alias("day"), F.lit(1).alias("net")
-        ).unionByName(
-            spans.select(
-                (F.col("e") + 1).alias("day"),
-                F.lit(-1).alias("net"),
-            )
-        )
-        ledger = deltas.groupBy("day").agg(F.sum("net").alias("net"))
-        w_cum = (
-            __import__("pyspark.sql.window", fromlist=["Window"])
-            .Window.orderBy("day")
-            .rowsBetween(-(1 << 31), 0)
-        )
-        return ledger.select(
-            "day", F.sum("net").over(w_cum).alias("open_cnt")
-        )
-
-    def vocab_growth():
-        # round-9 claim: vocab-at-checkpoint needs NO running-distinct —
-        # min(first_doc) per word + a 10× conditional rollup of the two
-        # SMALL aggregates (doc counts, first-seen words), so the 10×
-        # checkpoint cross-join multiplies aggregates, never the corpus
-        words = (
-            docs.where(F.col("text").isNotNull())
-            .select(
-                "doc_id", F.explode_outer(F.split("text", " ")).alias("w")
-            )
-            .where(F.col("w") != "")
-        )
-        mx = docs.agg((F.max("doc_id") + 1).alias("m"))
-        first_seen = words.groupBy("w").agg(
-            F.min("doc_id").alias("first_doc")
-        )
-        ks = spark.range(1, 11).select(F.col("id").alias("k"))
-        return (
-            first_seen.crossJoin(F.broadcast(mx))
-            .crossJoin(F.broadcast(ks))
-            .where(F.col("first_doc") * 10 < F.col("m") * F.col("k"))
-            .groupBy("k")
-            .agg(F.count(F.lit(1)).alias("vocab"))
-        )
-
-    def label_separation():
-        # round-10 claim: intra/inter label cosine needs ONLY per-(label,
-        # dim) integer sums — the data-sized pass is one explode+agg;
-        # everything after is |labels|x|dims| bounded
-        vals = emb.select(
-            "vec_id",
-            "label",
-            F.posexplode(F.col("embedding").cast("array<double>")).alias(
-                "pos", "val"
-            ),
-        ).select(
-            "vec_id", "label",
-            (F.col("pos") + 1).cast("long").alias("dim"), "val",
-        )
-        norms = vals.groupBy("vec_id").agg(
-            F.sqrt(F.sum(F.col("val") * F.col("val"))).alias("nrm")
-        )
-        qv = vals.join(norms, "vec_id").select(
-            "vec_id", "label", "dim",
-            F.round(F.col("val") / F.col("nrm") * 10000, 0)
-            .cast("long").alias("q"),
-        )
-        sld = qv.groupBy("label", "dim").agg(
-            F.sum("q").cast("long").alias("s")
-        )
-        lab = qv.groupBy("label").agg(
-            F.countDistinct("vec_id").cast("long").alias("n"),
-            F.sum(F.col("q") * F.col("q")).cast("long").alias("qq"),
-        )
-        gd = sld.groupBy("dim").agg(F.sum("s").cast("long").alias("g"))
-        dots = (
-            sld.join(gd, "dim")
-            .groupBy("label")
-            .agg(
-                F.sum(F.col("s") * F.col("s")).cast("long").alias("ss"),
-                F.sum(F.col("s") * F.col("g")).cast("long").alias("sg"),
-            )
-        )
-        return lab.join(dots, "label")
-
-    def seasonality_strength():
-        # round-10 claim: the hourly ledger is time-bounded, the moment
-        # pass 168-group bounded — replication grows only the first agg
-        hourly = ev.groupBy(
-            "event_type",
-            F.expr("unix_micros(ts) div 3600000000").alias("h"),
-        ).agg(F.count(F.lit(1)).cast("long").alias("y"))
-        g = hourly.groupBy(
-            "event_type", F.expr("h % 168").alias("how")
-        ).agg(
-            F.sum("y").cast("long").alias("sg"),
-            F.count(F.lit(1)).cast("long").alias("ng"),
-        )
-        t2 = g.groupBy("event_type").agg(
-            F.sum(F.expr("(sg * sg * 1000000) div ng"))
-            .cast("long").alias("tt")
-        )
-        m = hourly.groupBy("event_type").agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum("y").cast("long").alias("s"),
-            F.sum(F.col("y") * F.col("y")).cast("long").alias("q"),
-        )
-        return m.join(t2, "event_type")
-
-    def user_jaccard():
-        # round-10 claim: distinct (user, type) self-join fans out
-        # |types|^2 per user — linear in users under replication
-        ut = ev.select("user_id", "event_type").distinct()
-        a3, b3 = ut.alias("a"), ut.alias("b")
-        return (
-            a3.join(
-                b3,
-                (F.col("b.user_id") == F.col("a.user_id"))
-                & (F.col("a.event_type") < F.col("b.event_type")),
-            )
-            .groupBy(
-                F.col("a.event_type").alias("ta"),
-                F.col("b.event_type").alias("tb"),
-            )
-            .agg(F.count(F.lit(1)).cast("long").alias("n_both"))
-        )
-
-    def pair_latency():
-        # round-11 claim: ONE user-keyed lag window, then a
-        # |types|²-bounded rollup whose exact-percentile buffers hold
-        # N/|types|² values per group — linear time; the documented
-        # swap-to-approx_percentile point at 100 TB is memory, not time
-        from pyspark.sql.window import Window
-
-        ts_us = F.unix_micros(F.col("ts"))
-        w = Window.partitionBy("user_id").orderBy(ts_us, F.col("event_id"))
-        seq = ev.select(
-            F.col("event_type").alias("next_type"),
-            F.lag("event_type").over(w).alias("prev_type"),
-            (ts_us - F.lag(ts_us).over(w)).cast("long").alias("gap_us"),
-        ).where(F.col("prev_type").isNotNull())
-        return seq.groupBy("prev_type", "next_type").agg(
-            F.count(F.lit(1)).cast("long").alias("n_pairs"),
-            F.sum("gap_us").cast("long").alias("total_gap_us"),
-            F.percentile("gap_us", 0.5).alias("p50"),
-            F.percentile("gap_us", 0.9).alias("p90"),
-        )
-
-    def fulfillment():
-        # round-11 claim: orderkey-keyed MAX over the join rides the
-        # fact's natural key (map-side partial), months stay bounded
-        per_order = (
-            li.select(
-                F.col("l_orderkey").alias("k"),
-                F.col("l_shipdate").cast("timestamp").alias("l_shipdate"),
-            )
-            .join(
-                o.select(
-                    F.col("o_orderkey").alias("k"),
-                    F.col("o_orderdate").cast("timestamp").alias(
-                        "o_orderdate"
-                    ),
-                ),
-                "k",
-            )
-            .groupBy(
-                "k",
-                F.date_format(
-                    F.date_trunc("month", "o_orderdate"), "yyyy-MM"
-                ).alias("month"),
-            )
-            .agg(
-                F.max(
-                    F.expr(
-                        "(unix_micros(l_shipdate)"
-                        " - unix_micros(o_orderdate)) div 86400000000"
-                    )
-                ).alias("max_lat_days")
-            )
-        )
-        return per_order.groupBy("month").agg(
-            F.count(F.lit(1)).cast("long").alias("n_orders"),
-            F.percentile("max_lat_days", 0.9).alias("p90"),
-        )
-
-    def growth_accounting():
-        # r12c claim: ONE user-keyed exchange builds calendar-bounded
-        # week arrays; everything downstream is week-keyed and bounded.
-        # Replication grows users; weeks stay fixed.
-        wk = F.expr("unix_micros(ts) div 604800000000")
-        per_user = (
-            ev.select("user_id", wk.alias("wk"))
-            .groupBy("user_id")
-            .agg(F.sort_array(F.collect_set("wk")).alias("wks"))
-        )
-        seq = per_user.select(
-            F.posexplode("wks").alias("i", "wk"), "wks"
-        ).select(
-            "wk",
-            F.when(
-                F.col("i") > 0, F.try_element_at("wks", F.col("i"))
-            ).alias("prev_wk"),
-        )
-        return seq.groupBy("wk").agg(
-            F.count(F.lit(1)).alias("n_active"),
-            F.sum(
-                F.when(F.col("prev_wk").isNull(), 1).otherwise(0)
-            ).alias("n_new"),
-        )
-
-    def position_novelty():
-        # r12c claim: token-volume shuffle keyed (doc, token), 10-row
-        # close — the row_number marking is the linear-scaling part
-        from pyspark.sql.window import Window
-
-        toks = docs.where(F.col("text").isNotNull()).select(
-            "doc_id",
-            F.size(F.split("text", " ")).alias("n"),
-            F.posexplode(F.split("text", " ")).alias("pos0", "tok"),
-        )
-        w = Window.partitionBy("doc_id", "tok").orderBy("pos0")
-        return (
-            toks.select(
-                F.expr("pos0 * 10 div n").alias("decile"),
-                F.when(F.row_number().over(w) == 1, 1)
-                .otherwise(0)
-                .alias("is_first"),
-            )
-            .groupBy("decile")
-            .agg(F.count(F.lit(1)).alias("n"), F.sum("is_first").alias("f"))
-        )
-
-    def rank_shift():
-        # r12c claim: word-agg scan dominates; global head is a
-        # TakeOrdered cut, per-source ranks sort vocab only.  CAVEAT:
-        # replication keeps vocab fixed (the bigram-LM probe caveat) —
-        # the scan/agg is the scaling part.
-        from pyspark.sql.window import Window
-
-        words = docs.where(F.col("text").isNotNull()).select(
-            "source", F.explode(F.split("text", " ")).alias("w")
-        ).where(F.col("w") != "")
-        v = words.groupBy("source", "w").agg(
-            F.count(F.lit(1)).alias("c")
-        )
-        g_top = (
-            v.groupBy("w")
-            .agg(F.sum("c").alias("c"))
-            .orderBy(F.col("c").desc(), "w")
-            .limit(20)
-        )
-        w_src = Window.partitionBy("source").orderBy(
-            F.col("c").desc(), "w"
-        )
-        sr = v.select(
-            "source", "w", F.row_number().over(w_src).alias("r")
-        ).where(F.col("r") <= 20)
-        return sr.join(
-            F.broadcast(g_top.select("w")), "w", "left_semi"
-        ).groupBy("source").agg(F.count(F.lit(1)).alias("n_overlap"))
-
-    def tail_index():
-        # r12c claim: |types|-keyed rank window (per-type sort is the
-        # linear-time part), bounded close
-        from pyspark.sql.window import Window
-
-        w = Window.partitionBy("event_type").orderBy(
-            F.col("value").desc(), F.col("event_id")
-        )
-        ranked = ev.where(F.col("value") > 0).select(
-            "event_type",
-            F.row_number().over(w).alias("rn"),
-            F.round(F.log("value") * 1e6).cast("long").alias("lnv"),
-        )
-        return ranked.groupBy("event_type").agg(
-            F.sum(F.when(F.col("rn") <= 50, F.col("lnv")).otherwise(0))
-            .alias("top"),
-            F.sum(F.when(F.col("rn") == 51, F.col("lnv")).otherwise(0))
-            .alias("th"),
-        )
-
-    def cohort_retention():
-        # r13 claim (customer_cohort_retention): one orders scan feeds
-        # the per-customer first-month aggregate and the activity
-        # frame; (customer, offset) DISTINCT shares the custkey keying;
-        # output |months|²-bounded.  Replication grows customers
-        # (disjoint key spaces); the month space stays fixed.
-        m = (
-            F.year("o_orderdate").cast("long") * 12
-            + F.month("o_orderdate").cast("long")
-        )
-        om = o.select("o_custkey", m.alias("m"))
-        fc = om.groupBy("o_custkey").agg(F.min("m").alias("m0"))
-        act = (
-            om.join(fc, "o_custkey")
-            .select(
-                "o_custkey", "m0", (F.col("m") - F.col("m0")).alias("off")
-            )
-            .distinct()
-        )
-        cs = fc.groupBy("m0").agg(F.count(F.lit(1)).alias("cohort_size"))
-        return (
-            act.groupBy("m0", "off")
-            .agg(F.count(F.lit(1)).alias("n_active"))
-            .join(F.broadcast(cs), "m0")
-        )
-
-    def funnel_window():
-        # r13 claim (funnel_window_sensitivity): the per-user
-        # (first signup, first at-or-after purchase) frame computes
-        # ONCE (two filtered per-user aggregates + one equi-join), the
-        # 4-row sweep literal meets it via broadcast crossJoin, the
-        # window test is pure BIGINT µs.  Replication grows users.
-        s = (
-            ev.where(F.col("event_type") == "signup")
-            .groupBy("user_id")
-            .agg(F.unix_micros(F.min("ts")).alias("signup_us"))
-        )
-        fp = (
-            ev.where(F.col("event_type") == "purchase")
-            .join(s, "user_id")
-            .where(F.unix_micros(F.col("ts")) >= F.col("signup_us"))
-            .groupBy("user_id")
-            .agg(F.min(F.unix_micros(F.col("ts"))).alias("purchase_us"))
-        )
-        u = s.join(fp, "user_id", "left")
-        t = spark.range(1).select(
-            F.explode(
-                F.array(*[F.lit(d) for d in (1, 7, 30, 90)])
-            ).alias("window_days")
-        )
-        converted = F.when(
-            F.col("purchase_us").isNotNull()
-            & (
-                F.col("purchase_us") - F.col("signup_us")
-                <= F.col("window_days").cast("long")
-                * F.lit(86_400_000_000)
-            ),
-            1,
-        ).otherwise(0)
-        return (
-            u.crossJoin(F.broadcast(t))
-            .groupBy("window_days")
-            .agg(
-                F.count(F.lit(1)).alias("n_signed_up"),
-                F.sum(converted).alias("n_converted"),
-            )
-        )
-
-    def unigram_entropy():
-        # r14 claim (doc_unigram_entropy_topk): token explode →
-        # (doc, token)-keyed count → doc-keyed reduction → TakeOrdered
-        # head; nothing doc-sized sorts globally.  Replication grows
-        # docs (disjoint doc_ids), so both keyed exchanges grow N×.
-        tok = (
-            docs.where(F.col("text").isNotNull())
-            .select("doc_id", F.explode(F.split("text", " ")).alias("w"))
-            .where(F.col("w") != "")
-        )
-        tc = tok.groupBy("doc_id", "w").agg(
-            F.count(F.lit(1)).cast("long").alias("c")
-        )
-        ln6 = lambda col: F.round(  # noqa: E731
-            F.log(col) * 1_000_000, 0
-        ).cast("long")
-        doc = tc.groupBy("doc_id").agg(
-            F.sum("c").cast("long").alias("n_tokens"),
-            F.count(F.lit(1)).cast("long").alias("n_distinct"),
-            F.sum(F.col("c") * ln6(F.col("c"))).cast("long").alias("s6"),
-        )
-        entropy = (
-            ln6(F.col("n_tokens")) * F.col("n_tokens") - F.col("s6")
-        ).cast("double") / (F.col("n_tokens").cast("double") * 1e6)
-        return (
-            doc.select("doc_id", "n_tokens", entropy.alias("entropy"))
-            .orderBy(F.col("entropy").desc(), "doc_id")
-            .limit(25)
-        )
-
-    def length_gini():
-        # r14 claim (source_length_gini): rank window PARTITIONED BY
-        # SOURCE (keyed sort, never global) + one per-source reduction.
-        # Source space stays FIXED under replication, so each window
-        # partition grows N× — exactly the keyed-sort growth the claim
-        # is about.
-        from pyspark.sql.window import Window
-
-        w = Window.partitionBy("source").orderBy("n_chars", "doc_id")
-        ranked = docs.select(
-            "source",
-            "n_chars",
-            F.row_number().over(w).cast("long").alias("r"),
-            F.count(F.lit(1))
-            .over(Window.partitionBy("source"))
-            .cast("long")
-            .alias("n"),
-        )
-        return ranked.groupBy("source").agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            (
-                F.sum(
-                    (2 * F.col("r") - F.col("n") - 1) * F.col("n_chars")
-                ).cast("double")
-                / (
-                    F.count(F.lit(1)).cast("double")
-                    * F.nullif(F.sum("n_chars"), F.lit(0))
-                )
-            ).alias("gini"),
-        )
-
-    def containment_hist():
-        # r14 claim (pair_containment_histogram): the df-capped
-        # inverted-index pair frame (shingle explode → hot-shingle
-        # anti-join → s-keyed self-join → pair aggregate), closed to a
-        # bounded bucket histogram.  Replicated docs share TEXT, which
-        # would (a) multiply every shingle's df by N so the df cap
-        # collapses the frame and (b) add N² cross-replica verbatim-dup
-        # pairs — both degenerate vs real corpus growth; the shingle is
-        # SALTED with the replica id (doc_id div KEY_STRIDE) so each
-        # replica is a disjoint corpus: shingle space and pair volume
-        # grow N×, the realistic 100 TB shape.
-        from googlecloudstorage_blueprints_spark.operators.dedup import (
-            SHINGLE_DF_CAP,
-            _shingles,
-        )
-
-        dr = docs.repartition(
-            spark.sparkContext.defaultParallelism, "doc_id"
-        )
-        sh_all = dr.select(
-            "doc_id", F.explode_outer(_shingles()).alias("s0")
-        ).select(
-            "doc_id",
-            F.concat_ws(
-                "|",
-                F.expr(f"doc_id div {KEY_STRIDE}").cast("string"),
-                "s0",
-            ).alias("s"),
-        ).persist()
-        hot = (
-            sh_all.groupBy("s")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .where(F.col("df") > SHINGLE_DF_CAP)
-            .select("s")
-        )
-        sh = sh_all.join(hot, "s", "left_anti")
-        sizes = sh.groupBy("doc_id").agg(
-            F.count(F.lit(1)).alias("sz")
-        )
-        a, b = sh.alias("a"), sh.alias("b")
-        inter = (
-            a.join(
-                b,
-                (F.col("a.s") == F.col("b.s"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            )
-            .groupBy(
-                F.col("a.doc_id").alias("doc_a"),
-                F.col("b.doc_id").alias("doc_b"),
-            )
-            .agg(F.count(F.lit(1)).cast("long").alias("n_common"))
-        )
-        sa, sb = sizes.alias("sa"), sizes.alias("sb")
-        pairs = (
-            inter.join(sa, F.col("doc_a") == F.col("sa.doc_id"))
-            .join(sb, F.col("doc_b") == F.col("sb.doc_id"))
-            .select(
-                "n_common",
-                F.least(F.col("sa.sz"), F.col("sb.sz"))
-                .cast("long")
-                .alias("n_min"),
-            )
-        )
-        bucket = F.least(
-            F.lit(9), F.expr("(n_common * 10) div n_min")
-        )
-        return pairs.groupBy(bucket.alias("bucket")).agg(
-            F.count(F.lit(1)).cast("long").alias("n_pairs")
-        )
-
-    def mad_screen():
-        # r15 claim (doc_logprob_mad_outliers): corpus unigram model →
-        # per-doc exact-integer NLL → two |sources|-row percentile
-        # aggregates broadcast back onto the doc frame.  Replication
-        # grows docs and the token⋈freq join; the source space stays
-        # fixed, so the med/mad broadcasts are scale-constant.
-        words = (
-            docs.where(F.col("text").isNotNull())
-            .select(
-                "doc_id",
-                "source",
-                F.explode_outer(F.split("text", " ")).alias("w"),
-            )
-            .where(F.col("w") != "")
-        )
-        freq = words.groupBy("w").agg(F.count(F.lit(1)).alias("cnt"))
-        tot = freq.agg(F.sum("cnt").alias("n"))
-        nll6 = F.round(
-            -F.log(F.col("cnt").cast("double") / F.col("n")) * 1e6, 0
-        ).cast("long")
-        per_doc = (
-            words.join(freq, "w")
-            .crossJoin(F.broadcast(tot))
-            .select("doc_id", "source", nll6.alias("nll6"))
-            .groupBy("source", "doc_id")
-            .agg(
-                F.expr(
-                    "CAST(SUM(nll6) AS BIGINT) * 1000 div COUNT(*)"
-                ).alias("avg9")
-            )
-        )
-        m = per_doc.groupBy("source").agg(
-            F.percentile("avg9", 0.5).alias("med")
-        )
-        dev = per_doc.join(F.broadcast(m), "source").select(
-            "source", F.abs(F.col("avg9") - F.col("med")).alias("dev")
-        )
-        md = dev.groupBy("source").agg(
-            F.percentile("dev", 0.5).alias("mad")
-        )
-        return (
-            dev.join(F.broadcast(md), "source")
-            .groupBy("source")
-            .agg(
-                F.sum(
-                    F.when(F.col("dev") > 3 * F.col("mad"), 1).otherwise(0)
-                ).alias("n_outliers")
-            )
-        )
-
-    def ewma_backtest():
-        # r16 claim (events_volume_ewma_backtest): daily-volume keyed
-        # agg (map side grows N×, |days| groups stay calendar-fixed) →
-        # six lag windows over the |days| day spine (bounded frame) →
-        # 1-row MAE/WAPE close.  Expected floor-bound (≤0).
-        from pyspark.sql.window import Window
-
-        daily = ev.groupBy(
-            F.expr("unix_micros(ts) div 86400000000").alias("day")
-        ).agg(F.count(F.lit(1)).cast("long").alias("c"))
-        w = Window.orderBy("day")
-        lags = [F.lag("c", i).over(w) for i in range(1, 7)]
-        num = (
-            F.lit(32) * lags[0] + F.lit(16) * lags[1] + F.lit(8) * lags[2]
-            + F.lit(4) * lags[3] + F.lit(2) * lags[4] + F.lit(1) * lags[5]
-        )
-        scored = daily.select(
-            "c", num.alias("num63")
-        ).where(F.col("num63").isNotNull())
-        return scored.agg(
-            F.count(F.lit(1)).cast("long").alias("n_scored"),
-            F.sum(F.abs(63 * F.col("c") - F.col("num63")))
-            .cast("long")
-            .alias("err63"),
-        )
-
-    def type_value_mi():
-        # r16 claim (events_type_value_mi): one keyed agg to the
-        # |types|×|buckets| cell frame (fixed group count — only the
-        # map side grows), marginals derived FROM the cells, 1-row
-        # close.  Expected floor-bound (≤0).
-        from pyspark.sql.window import Window
-
-        cents = F.round(F.col("value") * 100, 0).cast("long")
-        bucket = F.length(cents.cast("string"))
-        cells = ev.where(F.col("value").isNotNull()).groupBy(
-            "event_type", bucket.alias("b")
-        ).agg(F.count(F.lit(1)).cast("long").alias("n_tb"))
-        ln6 = lambda c: F.round(F.log(c) * 1e6, 0).cast("long")  # noqa: E731
-        wt = Window.partitionBy("event_type")
-        wb = Window.partitionBy("b")
-        wall = Window.partitionBy()
-        term = F.col("n_tb") * (
-            ln6(F.col("n_tb"))
-            + ln6(F.sum("n_tb").over(wall))
-            - ln6(F.sum("n_tb").over(wt))
-            - ln6(F.sum("n_tb").over(wb))
-        )
-        return cells.select(term.alias("t")).agg(
-            F.sum("t").cast("long").alias("mi_num")
-        )
-
-    def pagerank_round():
-        # r19 (r18 verdict item 6): the ABOVE-GATE pagerank loop unit on
-        # the §2.13 layout — src-keyed repartition + CACHE (the layout
-        # only became real in r18; localCheckpoint never preserved it).
-        # The copurchase graph's node space must GROW with the data or
-        # the probe collapses (the r9 fixed-vocab caveat): partkeys are
-        # salted with the replica id recovered from the strided
-        # orderkey, so each replica is a disjoint component — nodes and
-        # edges both scale N×.  Self-timed: the edge build + cache
-        # materialization is the ONE-TIME cost; the returned number is
-        # the median wall of 3 shuffle-join ROUNDS (the repeated unit
-        # whose exponent predicts the 100 TB loop).
-        rep = F.expr(f"l_orderkey div {KEY_STRIDE}")
-        li2 = li.select(
-            "l_orderkey",
-            (F.col("l_partkey") + rep * F.lit(KEY_STRIDE)).alias(
-                "l_partkey"
-            ),
-        )
-        baskets = li2.groupBy("l_orderkey").agg(
-            F.collect_set("l_partkey").alias("parts")
-        )
-        half = (
-            baskets.select("parts", F.explode_outer("parts").alias("src"))
-            .select("src", F.explode_outer("parts").alias("dst"))
-            .where(F.col("src") < F.col("dst"))
-            .distinct()
-        )
-        edges = half.union(
-            half.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-        edges_deg = (
-            edges.join(deg, "src")
-            .repartition(spark.sparkContext.defaultParallelism, "src")
-            .cache()
-        )
-        edges_deg.count()  # one-time layout build, untimed
-        ranks = deg.select(
-            F.col("src").alias("node"), F.lit(10**12).alias("rank_e12")
-        ).localCheckpoint(eager=True)
-        walls = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            nxt = (
-                edges_deg.join(
-                    ranks.withColumnRenamed("node", "src"), "src"
-                )
-                .select(
-                    F.col("dst").alias("node"),
-                    F.expr("rank_e12 div deg").alias("contrib"),
-                )
-                .groupBy("node")
-                .agg(
-                    (
-                        F.lit(15 * 10**10)
-                        # div-first keeps the damped sum overflow-free
-                        # even on a pathological hub (probe times the
-                        # shape; ANSI overflow would kill the run)
-                        + F.expr("sum(contrib) div 100 * 85")
-                    ).alias("rank_e12")
-                )
-            )
-            ranks = nxt.localCheckpoint(eager=True)
-            walls.append(time.perf_counter() - t0)
-        edges_deg.unpersist(blocking=True)
-        return round(sorted(walls)[1], 2)
-
-    def row_digest():
-        # r16 claim (table_row_digest / streaming twin): stateless
-        # per-row md5 → map-side-combined XOR/SUM/count partials, no
-        # shuffle wider than 1 row/partition.  Expected ≈ the pure-agg
-        # floor (the `agg` baseline) — scan-bound, embarrassingly
-        # parallel.
-        s = F.concat_ws(
-            "|",
-            F.coalesce(F.col("l_orderkey").cast("string"), F.lit("<NULL>")),
-            F.coalesce(
-                F.round(F.col("l_extendedprice") * 10000, 0)
-                .cast("long")
-                .cast("string"),
-                F.lit("<NULL>"),
-            ),
-            F.coalesce(F.col("l_returnflag"), F.lit("<NULL>")),
-            F.coalesce(
-                F.unix_micros(F.col("l_shipdate").cast("timestamp"))
-                .cast("string"),
-                F.lit("<NULL>"),
-            ),
-        )
-        h = F.expr(
-            "CAST(conv(substring(md5(__row_str), 1, 15), 16, 10) AS BIGINT)"
-        )
-        return (
-            li.select(s.alias("__row_str"))
-            .select(h.alias("h"))
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_rows"),
-                F.expr("bit_xor(h)").alias("digest"),
-                F.expr(
-                    "CAST(pmod(SUM(CAST(h AS DECIMAL(38,0))), "
-                    "2305843009213693951) AS BIGINT)"
-                ).alias("digest_sum"),
-            )
-        )
-
-    shapes = {
-        # round-2 text-pipeline shape: explode + window + partial-agg topk.
-        # Distinct-bigram count stays fixed under replication, so the count
-        # shuffle is constant and only the map side grows — the shape that
-        # must stay ~linear for the corpus ops to hold at 100 TB.
-        "ngram_topk": ngram_topk,
-        # round-5 assembly shape: doc-count-sized windows stay bounded by
-        # the sub-shard size; must scale like the agg shapes, not a sort
-        "sequence_pack": sequence_pack,
-        # round-6 shapes (see SCALE.md "Retrieval, corpus statistics,
-        # warehouse"): both must track the agg/join exponents
-        "bm25": bm25,
-        "latest_snapshot": latest_snapshot,
-        # round-7 additions: measure the newest SCALE.md claims
-        "scd2_intervals": scd2_intervals,
-        "dau_wau": dau_wau,
-        "bigram_lm": bigram_lm,
-        # round-8 additions: broadcast-moments anomaly + shared-exchange
-        # sessionize histogram
-        "anomaly_seasonal": anomaly_seasonal,
-        "session_hist": session_hist,
-        "copurchase": copurchase,
-        "ship_latency": ship_latency,
-        "pq_scan": pq_scan,
-        # round-9 additions: user-keyed lead window + bounded reductions,
-        # nation-partitioned rank window, min-first-doc checkpoint rollup
-        "markov_entropy": markov_entropy,
-        # round-10 additions: centroid-algebra separation, ANOVA ledger,
-        # audience-overlap self-join
-        "label_separation": label_separation,
-        "seasonality_strength": seasonality_strength,
-        "user_jaccard": user_jaccard,
-        # round-11 additions: lag-window percentile rollup, orderkey-MAX
-        # fulfilment join
-        "pair_latency": pair_latency,
-        "fulfillment": fulfillment,
-        # round-12 additions: counts-of-counts coverage ledger,
-        # open-order sweep-line ledger
-        "vocab_coverage": vocab_coverage,
-        "inflight": inflight,
-        "growth_accounting": growth_accounting,
-        "position_novelty": position_novelty,
-        "rank_shift": rank_shift,
-        "tail_index": tail_index,
-        "gini": gini,
-        "vocab_growth": vocab_growth,
-        # round-14 additions: month-cohort triangle, attribution sweep
-        "cohort_retention": cohort_retention,
-        "funnel_window": funnel_window,
-        # round-15 additions: the three r14-new op shapes (r14 VERDICT
-        # item 6) — doc entropy head, per-source gini rank window,
-        # replica-salted containment pair frame
-        "unigram_entropy": unigram_entropy,
-        "length_gini": length_gini,
-        "containment_hist": containment_hist,
-        "mad_screen": mad_screen,
-        # round-16 additions: day-spine EWMA ledger, |types|×|buckets|
-        # MI cells, shuffle-free digest partials (r15 VERDICT item 6)
-        "ewma_backtest": ewma_backtest,
-        "type_value_mi": type_value_mi,
-        "row_digest": row_digest,
-        # round-19 addition: the above-gate pagerank loop unit on the
-        # r18 §2.13 keyed-cache layout (self-timed per-round median)
-        "pagerank_round": pagerank_round,
-        "agg": lambda: li.groupBy("l_returnflag", "l_linestatus").agg(
-            F.sum("l_quantity"), F.avg("l_extendedprice"), F.count(F.lit(1))
-        ),
-        "join_agg": lambda: li.join(o, li.l_orderkey == o.o_orderkey)
-        .groupBy("o_orderpriority")
-        .agg(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount")))),
-        "window_topk": lambda: li.withColumn(
-            "rk",
-            F.row_number().over(
-                __import__("pyspark.sql.window", fromlist=["Window"])
-                .Window.partitionBy("l_returnflag")
-                .orderBy(F.col("l_extendedprice").desc(), "l_orderkey",
-                         "l_linenumber")
-            ),
-        ).where(F.col("rk") <= 100),
-    }
-    only = set(sys.argv[1:])  # optional shape-name filter
-    out = {}
-    for name, build in shapes.items():
-        if only and name not in only:
-            continue
-        t0 = time.perf_counter()
-        built = build()
-        if isinstance(built, float):  # self-timed shape (pagerank_round)
-            out[name] = built
-            continue
-        built.write.format("noop").mode("overwrite").save()
-        out[name] = round(time.perf_counter() - t0, 2)
-    return out
+def _timed(fn, spark, sf_dir: str) -> float:
+    t0 = time.perf_counter()
+    df = fn(spark, sf_dir)
+    df.write.format("noop").mode("overwrite").save()
+    wall = time.perf_counter() - t0
+    # an operator may return a cached result; the next call must not hit it
+    df.unpersist(blocking=True)
+    return wall
 
 
-def main() -> None:
-    spark = get_spark(app_name="scale-probe", master="local[32]")
+def measure(spark, sf: str, ops: list[str], scales: list[int],
+            runs: int) -> dict[str, dict[int, float | None]]:
+    """Median wall per operator per scale; ``None`` where it is guarded."""
+    queries = all_queries()
+    unknown = [op for op in ops if op not in queries]
+    if unknown:
+        raise SystemExit(f"unknown operators: {', '.join(unknown)}")
+    walls: dict[str, dict[int, float | None]] = {op: {} for op in ops}
     tmp = tempfile.mkdtemp(prefix="scale_probe_")
-    results: dict[int, dict[str, float]] = {}
     try:
-        for n in SCALES:
-            li_p = f"file:{tmp}/li_{n}"
-            o_p = f"file:{tmp}/o_{n}"
-            doc_p = f"file:{tmp}/doc_{n}"
-            ev_p = f"file:{tmp}/ev_{n}"
-            replicate(spark, f"{BASE}/lineitem.parquet", li_p, n,
-                      ["l_orderkey"])
-            replicate(spark, f"{BASE}/orders.parquet", o_p, n,
-                      ["o_orderkey"])
-            replicate(spark, f"{BASE}/documents.parquet", doc_p, n,
-                      ["doc_id"])
-            replicate(spark, f"{BASE}/events.parquet", ev_p, n,
-                      ["user_id", "event_id"])
-            emb_p = f"file:{tmp}/emb_{n}"
-            replicate(spark, f"{BASE}/embeddings.parquet", emb_p, n,
-                      ["vec_id"])
-            cust_p = f"file:{tmp}/cust_{n}"
-            # nation keys intentionally NOT re-keyed: per-nation window
-            # partitions must grow with the data for the gini probe
-            replicate(spark, f"{BASE}/customer.parquet", cust_p, n,
-                      ["c_custkey"])
-            results[n] = bench_shapes(
-                spark, li_p, o_p, doc_p, ev_p, emb_p, cust_p
-            )
-            rows = spark.read.parquet(li_p).count()
-            print(f"scale {n}x ({rows:,} lineitem rows): {results[n]}")
-        for shape in results[SCALES[0]]:
-            lo, hi = results[SCALES[0]][shape], results[SCALES[-1]][shape]
-            ratio = SCALES[-1] / SCALES[0]
-            exp = math.log(max(hi, 1e-9) / max(lo, 1e-9)) / math.log(ratio)
-            print(f"{shape}: {lo}s -> {hi}s over {ratio:.0f}x data "
-                  f"(scaling exponent {exp:.2f}; 1.0 = linear)")
+        for n in scales:
+            sf_n = f"{tmp}/{n}x"
+            replicate(spark, sf, sf_n, n)
+            for op in ops:
+                try:
+                    _timed(queries[op], spark, sf_n)
+                except ExactTierCorpusTooLarge:
+                    walls[op][n] = None
+                    continue
+                walls[op][n] = statistics.median(
+                    _timed(queries[op], spark, sf_n) for _ in range(runs))
+            shutil.rmtree(sf_n, ignore_errors=True)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-        spark.stop()
+    return walls
+
+
+def report(walls: dict[str, dict[int, float | None]],
+           scales: list[int]) -> list[str]:
+    lo, hi = min(scales), max(scales)
+    lines = []
+    for op, by_n in walls.items():
+        cells = [f"{n}x={'guarded' if by_n[n] is None else f'{by_n[n]:.2f}s'}"
+                 for n in scales]
+        if hi == lo:
+            exp = "-"
+        elif by_n[lo] is None or by_n[hi] is None:
+            exp = "guarded"
+        else:
+            exp = f"{math.log(by_n[hi] / by_n[lo]) / math.log(hi / lo):.2f}"
+        lines.append(f"{op}: {' '.join(cells)} exponent={exp}")
+    return lines
+
+
+def main(argv: list[str] | None = None) -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("--sf", default="/root/testdata/sf0.1")
+    ap.add_argument("--runs", type=int, default=3)
+    ap.add_argument("--scales", default="1,4,16")
+    ap.add_argument("ops", nargs="*")
+    args = ap.parse_args(argv)
+    scales = sorted({int(s) for s in args.scales.split(",")})
+    spark = get_spark(app_name="scale-probe")
+    walls = measure(spark, args.sf, args.ops or default_ops(), scales,
+                    args.runs)
+    print("\n".join(report(walls, scales)))
 
 
 if __name__ == "__main__":

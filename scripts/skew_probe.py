@@ -32,7 +32,7 @@ SALT = 16
 
 
 def main() -> None:
-    spark = get_spark(app_name="skew-probe", master="local[32]")
+    spark = get_spark(app_name="skew-probe")
     tmp = tempfile.mkdtemp(prefix="skew_probe_")
     try:
         # probe side: 50% of rows on HOT_KEY, rest uniform

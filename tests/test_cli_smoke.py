@@ -100,16 +100,17 @@ def test_cli_credentials_failure_exits_200(spark, monkeypatch, capsys):
 
 def test_cli_validate_exit_codes(spark, sf_dir, tmp_path, capsys):
     """``validate``: identical copies exit 0, one flipped ``region.r_name``
-    cell exits 205 naming the table, an unknown table exits 2."""
+    cell exits 205 naming the table (and, under ``--by-column``, the
+    column), an unknown table exits 2."""
     a, b = tmp_path / "a", tmp_path / "b"
     for d in (a, b):
         d.mkdir()
         for t in ("region", "nation"):
             shutil.copy(f"{sf_dir}/{t}.parquet", d / f"{t}.parquet")
 
-    def validate(tables):
+    def validate(tables, *flags):
         return main(["validate", "--source-dir", str(a),
-                     "--dest-dir", str(b), "--tables", tables])
+                     "--dest-dir", str(b), "--tables", tables, *flags])
 
     assert validate("region,nation") == 0
     assert "validate: 2 table(s) match" in capsys.readouterr().out
@@ -124,6 +125,11 @@ def test_cli_validate_exit_codes(spark, sf_dir, tmp_path, capsys):
     captured = capsys.readouterr()
     assert "FAIL region:" in captured.out
     assert "OK   nation:" in captured.out
+    assert "validate: content mismatch" in captured.err
+    assert validate("region,nation", "--by-column") == 205
+    captured = capsys.readouterr()
+    assert "FAIL region.r_name:" in captured.out
+    assert "OK   region.r_regionkey:" in captured.out
     assert "validate: content mismatch" in captured.err
 
     assert validate("nope") == 2

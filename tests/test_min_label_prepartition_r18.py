@@ -25,6 +25,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 
 from googlecloudstorage_blueprints_spark.operators.graph import (
+    _persisted_rdd_ids,
+    _release_rdds,
     min_label_components,
 )
 from googlecloudstorage_blueprints_spark.plans.inspect import (
@@ -126,7 +128,14 @@ def test_min_label_fixpoint_values_exact(spark):
     pairs = spark.createDataFrame(
         [(2, 3), (1, 2), (10, 11)], "doc_a long, doc_b long"
     )
+    sc = spark.sparkContext
+    before = _persisted_rdd_ids(sc)
     labels = min_label_components(nodes, pairs)
     got = {r["node"]: r["label"] for r in labels.collect()}
-    labels.unpersist()
+    # the result is the final round's checkpoint: its storage is the
+    # only one left, and the caller frees it by id
+    held = _persisted_rdd_ids(sc) - before
+    assert len(held) == 1
+    _release_rdds(sc, held)
+    assert not _persisted_rdd_ids(sc) - before
     assert got == {1: 1, 2: 1, 3: 1, 7: 7, 10: 10, 11: 10}
